@@ -23,7 +23,7 @@ object AnnScaleProbe {
     val dim = 32
     val spark = Sessions.local()
     import org.apache.spark.sql.functions._
-    import graft.vector.AnnIndex
+    import graft.vector.{AnnCorpus, AnnIndex, AnnRequest}
     val dir = java.nio.file.Files.createTempDirectory("annscale")
     val root = dir.toString + "/ix"
     val corpusT = dir.toString + "/emb"
@@ -33,6 +33,14 @@ object AnnScaleProbe {
       println(f"[scale] $label: ${(System.nanoTime() - t0) / 1e9}%.1f s")
       r
     }
+    // every leg serves through the one door: top-k per probe of a
+    // (probe id, vector) frame
+    def ann(r: String, kind: String, corpus: AnnCorpus,
+        probes: org.apache.spark.sql.DataFrame, width: Option[Int] = None,
+        k: Int = 10, pool: Option[Int] = None) =
+      AnnIndex.serve(spark, r, AnnRequest(kind, corpus, "vec_id",
+        "embedding", probes, k, width, pool))
+    def committed = AnnCorpus.committed(spark, corpusT)
     // deterministic pseudo-random unit-cube embeddings derived from the
     // row id — no RNG state, so any rerun reproduces exactly
     timed(s"commit synthetic corpus (n=$n, dim=$dim)") {
@@ -44,6 +52,9 @@ object AnnScaleProbe {
         Some("vec_id"), files = 32)
     }
     val emb = graft.sources.VersionedScan.read(spark, corpusT)
+    // the single-question probe the 1-probe legs serve
+    def ivfProbe = emb.filter(col("vec_id") === 0L)
+      .select(col("vec_id").as("probe_id"), col("embedding"))
     if (legs("nsw")) {
     val auto = AnnIndex.nswAutoShards(n)
     println(s"[scale] nswAutoShards($n) = $auto " +
@@ -57,9 +68,8 @@ object AnnScaleProbe {
     def probes(c: Int) = emb.filter(col("vec_id") < c)
       .select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
     def serve(c: Int, label: String): Unit = timed(
-      s"searchNswBatch $label ($c probes, k=10)") {
-      AnnIndex.searchNswBatch(spark, root, emb, "vec_id", "embedding",
-        probes(c), "probe_id", "pv", k = 10).count()
+      s"hnsw serve, frame corpus $label ($c probes, k=10)") {
+      ann(root, "hnsw", AnnCorpus.Frame(emb), probes(c)).count()
     }
     serve(1, "COLD")     // reconstructs every shard once
     serve(1, "warm")     // zero reconstruction, one 16 B/row light pass
@@ -70,9 +80,8 @@ object AnnScaleProbe {
     // rebuilds under the new key scheme, every warm call is ZERO
     // corpus I/O (no light pass, no vector shuffle)
     def serveC(c: Int, label: String): Unit = timed(
-      s"searchNswBatchCommitted $label ($c probes, k=10)") {
-      AnnIndex.searchNswBatchCommitted(spark, root, corpusT,
-        "vec_id", "embedding", probes(c), "probe_id", "pv", k = 10).count()
+      s"hnsw serve, committed corpus $label ($c probes, k=10)") {
+      ann(root, "hnsw", committed, probes(c)).count()
     }
     serveC(8, "COLD")
     serveC(1, "warm zero-I/O")
@@ -115,20 +124,14 @@ object AnnScaleProbe {
       AnnIndex.optimizeIvfServing(spark, ivfRoot, corpusT,
         "vec_id", "embedding")
     }
-    def ivfProbe = emb.filter(col("vec_id") === 0L).select(col("embedding"))
-    timed("searchIvf JOIN plan (1 probe, nProbe=8)") {
-      AnnIndex.searchIvf(spark, ivfRoot, emb, "vec_id", "embedding",
-        ivfProbe, "embedding", k = 10, nProbe = 8).count()
+    timed("ivf serve JOIN plan, frame corpus (1 probe, nProbe=8)") {
+      ann(ivfRoot, "ivf", AnnCorpus.Frame(emb), ivfProbe, Some(8)).count()
     }
-    timed("searchIvfCommitted LISTS cold (1 probe, nProbe=8)") {
-      AnnIndex.searchIvfCommitted(spark, ivfRoot, corpusT,
-        "vec_id", "embedding", ivfProbe, "embedding", k = 10,
-        nProbe = 8).count()
+    timed("ivf serve LISTS cold (1 probe, nProbe=8)") {
+      ann(ivfRoot, "ivf", committed, ivfProbe, Some(8)).count()
     }
-    timed("searchIvfCommitted LISTS warm (1 probe, nProbe=8)") {
-      AnnIndex.searchIvfCommitted(spark, ivfRoot, corpusT,
-        "vec_id", "embedding", ivfProbe, "embedding", k = 10,
-        nProbe = 8).count()
+    timed("ivf serve LISTS warm (1 probe, nProbe=8)") {
+      ann(ivfRoot, "ivf", committed, ivfProbe, Some(8)).count()
     }
     // PQ leg: codebook train + full encode at scale, then the ADC
     // scan's two shapes — the join form (reads every code row +
@@ -144,28 +147,24 @@ object AnnScaleProbe {
         AnnIndex.ensurePq(spark, ivfRoot, emb, "vec_id", "embedding",
           m = pqM, k = 16)
       }
-      timed("searchIvfPq JOIN form (1 probe, nProbe=8, pool=64)") {
-        AnnIndex.searchIvfPq(spark, ivfRoot, emb, "vec_id", "embedding",
-          ivfProbe, "embedding", m = 0, k = 10, nProbe = 8,
-          pool = 64).count()
+      timed("pq serve JOIN form, frame corpus (1 probe, nProbe=8, pool=64)") {
+        ann(ivfRoot, "pq", AnnCorpus.Frame(emb), ivfProbe, Some(8),
+          pool = Some(64)).count()
       }
-      timed("searchIvfPqCommitted pre-layout (literal fetch, join ADC)") {
-        AnnIndex.searchIvfPqCommitted(spark, ivfRoot, corpusT,
-          "vec_id", "embedding", ivfProbe, "embedding", k = 10,
-          nProbe = 8, pool = 64).count()
+      timed("pq serve pre-layout (literal fetch, join ADC)") {
+        ann(ivfRoot, "pq", committed, ivfProbe, Some(8),
+          pool = Some(64)).count()
       }
       timed("optimizePqServing (cid-clustered codes commit)") {
         AnnIndex.optimizePqServing(spark, ivfRoot, "vec_id")
       }
-      timed("searchIvfPqCommitted PQ-LISTS cold (pruned ADC)") {
-        AnnIndex.searchIvfPqCommitted(spark, ivfRoot, corpusT,
-          "vec_id", "embedding", ivfProbe, "embedding", k = 10,
-          nProbe = 8, pool = 64).count()
+      timed("pq serve PQ-LISTS cold (pruned ADC)") {
+        ann(ivfRoot, "pq", committed, ivfProbe, Some(8),
+          pool = Some(64)).count()
       }
-      timed("searchIvfPqCommitted PQ-LISTS warm (pruned ADC)") {
-        AnnIndex.searchIvfPqCommitted(spark, ivfRoot, corpusT,
-          "vec_id", "embedding", ivfProbe, "embedding", k = 10,
-          nProbe = 8, pool = 64).count()
+      timed("pq serve PQ-LISTS warm (pruned ADC)") {
+        ann(ivfRoot, "pq", committed, ivfProbe, Some(8),
+          pool = Some(64)).count()
       }
       // BATCH leg — the r13 headline: the join-form batch (every
       // corpus file read to fetch ≤ probes×pool rows) vs the
@@ -179,20 +178,17 @@ object AnnScaleProbe {
       def pqProbes(c: Int) = emb.filter(col("vec_id") < c)
         .select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
       for (c <- Seq(8, 64)) {
-        timed(s"searchIvfPqBatch JOIN form ($c probes, nProbe=8, pool=64)") {
-          AnnIndex.searchIvfPqBatch(spark, ivfRoot, emb, "vec_id",
-            "embedding", pqProbes(c), "probe_id", "pv", k = 10,
-            nProbe = 8, pool = 64).count()
+        timed(s"pq serve JOIN form, frame corpus ($c probes, nProbe=8, pool=64)") {
+          ann(ivfRoot, "pq", AnnCorpus.Frame(emb), pqProbes(c), Some(8),
+            pool = Some(64)).count()
         }
-        timed(s"searchIvfPqBatchCommitted (literal fetch + pruned ADC, $c probes)") {
-          AnnIndex.searchIvfPqBatchCommitted(spark, ivfRoot, corpusT,
-            "vec_id", "embedding", pqProbes(c), "probe_id", "pv", k = 10,
-            nProbe = 8, pool = 64).count()
+        timed(s"pq serve committed (literal fetch + pruned ADC, $c probes)") {
+          ann(ivfRoot, "pq", committed, pqProbes(c), Some(8),
+            pool = Some(64)).count()
         }
-        timed(s"searchIvfPqBatchCommitted repeat (warm artifacts, $c probes)") {
-          AnnIndex.searchIvfPqBatchCommitted(spark, ivfRoot, corpusT,
-            "vec_id", "embedding", pqProbes(c), "probe_id", "pv", k = 10,
-            nProbe = 8, pool = 64).count()
+        timed(s"pq serve committed repeat (warm artifacts, $c probes)") {
+          ann(ivfRoot, "pq", committed, pqProbes(c), Some(8),
+            pool = Some(64)).count()
         }
       }
     }
@@ -229,17 +225,11 @@ object AnnScaleProbe {
       }
       if (legs("ivf") || legs("pq"))
         for (np <- Seq(8, 32)) recall(s"ivf nProbe=$np")(
-          AnnIndex.searchIvfBatch(spark, ivfRoot, emb, "vec_id",
-            "embedding", probesR, "probe_id", "pv", k = kR, nProbe = np))
+          ann(ivfRoot, "ivf", AnnCorpus.Frame(emb), probesR, Some(np), kR))
       if (legs("pq")) {
-        recall("ivfpq nProbe=8 pool=64")(
-          AnnIndex.searchIvfPqBatch(spark, ivfRoot, emb, "vec_id",
-            "embedding", probesR, "probe_id", "pv", k = kR, nProbe = 8,
-            pool = 64))
-        recall("ivfpq nProbe=32 pool=256")(
-          AnnIndex.searchIvfPqBatch(spark, ivfRoot, emb, "vec_id",
-            "embedding", probesR, "probe_id", "pv", k = kR, nProbe = 32,
-            pool = 256))
+        for ((np, pool) <- Seq(8 -> 64, 32 -> 256))
+          recall(s"ivfpq nProbe=$np pool=$pool")(ann(ivfRoot, "pq",
+            AnnCorpus.Frame(emb), probesR, Some(np), kR, Some(pool)))
         // the committed door itself (what graft_ann_search serves and
         // what CALL ann_recall reports) — the r14 residual-encoding
         // lift is judged HERE at equal m/nProbe/pool vs the r13 raw
@@ -256,9 +246,7 @@ object AnnScaleProbe {
       // point costs beam-search compute only
       if (legs("nsw")) for (e <- Seq(32, 128, 512)) {
         recall(s"hnsw ef=$e (post-reshard graph)")(
-          AnnIndex.searchNswBatchCommitted(spark, root, corpusT,
-            "vec_id", "embedding", probesR, "probe_id", "pv", k = kR,
-            ef = e))
+          ann(root, "hnsw", committed, probesR, Some(e), kR))
       }
     }
     // O(delta) LAYOUT-REFRESH leg (r14) — LAST, because it mutates the
@@ -418,9 +406,8 @@ object AnnScaleProbe {
       // row
       for (np <- Seq(8, 32, 64)) {
         val t0 = System.nanoTime()
-        val r = recallOf(AnnIndex.searchIvfBatch(spark, ivfRoot, emb,
-          "vec_id", "embedding", probesR, "probe_id", "pv", k = kR,
-          nProbe = np))
+        val r = recallOf(
+          ann(ivfRoot, "ivf", AnnCorpus.Frame(emb), probesR, Some(np), kR))
         println(f"[scale] spill-leg recall@$kR PLAIN nProbe=$np: " +
           f"$r%.3f (${(System.nanoTime() - t0) / 1e9}%.1f s)")
       }
@@ -442,9 +429,8 @@ object AnnScaleProbe {
         println(f"[scale] spill fraction eps=$eps: $frac%.3f")
         for (np <- Seq(8, 32)) {
           val t0 = System.nanoTime()
-          val r = recallOf(AnnIndex.searchIvfBatch(spark, sRoot, emb,
-            "vec_id", "embedding", probesR, "probe_id", "pv", k = kR,
-            nProbe = np))
+          val r = recallOf(
+            ann(sRoot, "ivf", AnnCorpus.Frame(emb), probesR, Some(np), kR))
           println(f"[scale] spill-leg recall@$kR SPILLED eps=$eps " +
             f"nProbe=$np: $r%.3f (${(System.nanoTime() - t0) / 1e9}%.1f s)")
         }
@@ -462,23 +448,16 @@ object AnnScaleProbe {
             AnnIndex.optimizeIvfServing(spark, sRoot, corpusT,
               "vec_id", "embedding")
           }
-          def probeDf = emb.filter(col("vec_id") === 0L)
-            .select(col("embedding"))
           for ((label, r) <- Seq("PLAIN" -> ivfRoot, "SPILLED" -> sRoot);
                pass <- Seq("cold", "warm")) {
-            timed(s"searchIvfCommitted $label $pass (1 probe, nProbe=8)") {
-              AnnIndex.searchIvfCommitted(spark, r, corpusT, "vec_id",
-                "embedding", probeDf, "embedding", k = 10,
-                nProbe = 8).count()
+            timed(s"ivf serve committed $label $pass (1 probe, nProbe=8)") {
+              ann(r, "ivf", committed, ivfProbe, Some(8)).count()
             }
           }
-          val viaLayout = AnnIndex.searchIvfCommitted(spark, sRoot,
-              corpusT, "vec_id", "embedding", probeDf, "embedding",
-              k = 10, nProbe = 8)
-            .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-          val viaJoin = AnnIndex.searchIvf(spark, sRoot, emb, "vec_id",
-              "embedding", probeDf, "embedding", k = 10, nProbe = 8)
-            .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+          val viaLayout = ann(sRoot, "ivf", committed, ivfProbe, Some(8))
+            .collect().toSeq
+          val viaJoin = ann(sRoot, "ivf", AnnCorpus.Frame(emb), ivfProbe,
+              Some(8)).collect().toSeq
           println(s"[scale] spilled committed == join plan at 2.2M: " +
             s"${viaLayout == viaJoin}")
         }
@@ -557,9 +536,8 @@ object AnnScaleProbe {
         exactC.count(got).toDouble / exactC.size
       }
       for (np <- Seq(8, 16, 32, 64)) {
-        val r = recallC(AnnIndex.searchIvfBatch(spark, cRoot, embC,
-          "vec_id", "embedding", probesC, "probe_id", "pv", k = kR,
-          nProbe = np))
+        val r = recallC(
+          ann(cRoot, "ivf", AnnCorpus.Frame(embC), probesC, Some(np), kR))
         println(f"[scale] spillc recall@$kR PLAIN nProbe=$np: $r%.3f " +
           f"(cost $np%d)")
       }
@@ -578,9 +556,8 @@ object AnnScaleProbe {
           .filter(col("cid2").isNotNull).count().toDouble / n
         println(f"[scale] spillc fraction eps=$eps: $frac%.3f")
         for (np <- Seq(8, 16, 32)) {
-          val r = recallC(AnnIndex.searchIvfBatch(spark, sRoot, embC,
-            "vec_id", "embedding", probesC, "probe_id", "pv", k = kR,
-            nProbe = np))
+          val r = recallC(
+            ann(sRoot, "ivf", AnnCorpus.Frame(embC), probesC, Some(np), kR))
           println(f"[scale] spillc recall@$kR SPILLED eps=$eps " +
             f"nProbe=$np: $r%.3f (cost ${np * (1 + frac)}%.1f)")
         }

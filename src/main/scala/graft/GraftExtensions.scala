@@ -266,8 +266,7 @@ private[graft] object GraftTvfs {
     // AS OF — so `..., 10, 'hnsw')`, `..., 10, 4, 'pq')`,
     // `..., 10, 4, 'ivf', 'label IN (2, 3)')` and `..., 10, 4, 'ivf',
     // TIMESTAMP '...')` all parse, and a repeated role is refused
-    var nProbe = 4
-    var nProbeSet = false
+    var width: Option[Int] = None
     var kindOpt: Option[String] = None
     var filterOpt: Option[String] = None
     var asOf: Option[Long] = None
@@ -306,8 +305,8 @@ private[graft] object GraftTvfs {
             "graft_ann_search: AS OF timestamp given twice")
           asOf = Some(tsArgMillis(a, "asOf"))
         case ByteType | ShortType | IntegerType | LongType =>
-          require(!nProbeSet, "graft_ann_search: nProbe given twice")
-          nProbe = arg(a, "nProbe").asInstanceOf[Number].intValue
+          require(width.isEmpty, "graft_ann_search: nProbe given twice")
+          val nProbe = arg(a, "nProbe").asInstanceOf[Number].intValue
           // validated AT PARSE time, matching measureRecall: an explicit
           // non-positive width is a caller error — for hnsw an ef of 0
           // would otherwise read as 'unset' downstream and silently
@@ -316,27 +315,22 @@ private[graft] object GraftTvfs {
           require(nProbe >= 1,
             s"graft_ann_search: the search-width argument (nProbe for " +
               s"ivf/pq, ef for hnsw) must be >= 1, got $nProbe")
-          nProbeSet = true
+          width = Some(nProbe)
         case other => throw new IllegalArgumentException(
           "graft_ann_search: unexpected tail argument of type " +
             s"${other.simpleString} (nProbe integer, kind string, " +
             "AS OF timestamp)")
       }
     }
-    // the hnsw kind reads the same integral as its beam width (ef);
-    // one derivation here so the single and batch doors cannot
-    // diverge — unset (-1) serves at the index's stored build beam
-    val ef = if (nProbeSet) nProbe else -1
     // the corpus view pins to ONE resolved version for the whole call
     // (probe fetch, dim check, serve) — and to the SAME instant as the
     // index artifacts when AS OF is given: the historical serve
     // reranks against the corpus the index was built over, one
     // argument for the whole stack
-    val corpusVersion = asOf match {
-      case Some(ts) => Versioned.snapshotAsOf(spark, table, ts).version
-      case None => Versioned.latestVersion(spark, table)
-    }
-    val emb = VersionedScan.read(spark, table, corpusVersion)
+    import graft.vector.{AnnCorpus, AnnIndex, AnnPin, AnnRequest}
+    val pin = asOf.fold[AnnPin](AnnPin.Latest)(AnnPin.AsOf(_))
+    val corpus = AnnCorpus.committed(spark, table, pin)
+    val emb = VersionedScan.read(spark, table, corpus.version)
     // DEFERRED KIND-TYPO GUARD (r15, relaxed r16): a bare-identifier
     // filter string is validated against the now-resolved corpus
     // schema — a boolean corpus column and the true/false literals
@@ -374,7 +368,6 @@ private[graft] object GraftTvfs {
               "kind, or filter on a boolean corpus column / an " +
               s"explicit predicate (e.g. '$bare = true')"))
       }
-    import graft.vector.AnnIndex
     // artifact inventory under the root: drives kind auto-detection
     // and gives a missing kind a NAMED diagnostic instead of whatever
     // `latestVersion == 0` produces downstream
@@ -426,97 +419,9 @@ private[graft] object GraftTvfs {
          else " (this root has no routing tier yet: CALL " +
            s"graft.system.ann_ensure(index_root => '...', ..., kind " +
            "=> 'ivf') alongside the hnsw index, then pass 'ivf')"))
-    // the pq rerank pool SCALES with the width knob (ONE formula,
-    // shared with ann_recall so the audit measures what the door
-    // serves): the 2.2M rehearsal showed pool binds recall before ADC
-    // quality once nProbe widens (recall@10 0.600 at nProbe=32/
-    // pool=256 vs 0.388 at the same width under a fixed pool=80)
-    val pool = AnnIndex.pqRerankPool(k, nProbe)
     def isFractional(dt: DataType): Boolean = dt match {
       case FloatType | DoubleType | _: DecimalType => true
       case _ => false
-    }
-    // which dispatch served — the fill branch keys off the FORM, not
-    // the result's column names (a corpus id column literally named
-    // 'probe_id' must not misroute a single serve into the per-probe
-    // window, where fill would read 1 and the order flip id-major)
-    var servedBatch = false
-    // single-probe dispatch shared by the by-row and ad-hoc-vector
-    // forms; `probeDf` is one row holding the probe embedding
-    def single(probeDf: org.apache.spark.sql.DataFrame) = kind match {
-      // ivf serving rides the committed forms: when the derived lists
-      // layout is fresh (for AS OF: was fresh AT the instant) the
-      // candidate scan manifest-prunes to the probe's nProbe lists
-      // (CALL ann_optimize_serving builds it), else the join plan
-      // serves identically
-      case "ivf" => asOf
-        .map(AnnIndex.searchIvfCommittedAsOf(spark, root, table,
-          idCol, embCol, probeDf, embCol, k, nProbe, _, allowed))
-        .getOrElse(AnnIndex.searchIvfCommitted(spark, root, table,
-          idCol, embCol, probeDf, embCol, k, nProbe, corpusVersion,
-          allowed))
-      // the rerank pool scales with max(k, nProbe) via pqRerankPool
-      // (the subspace count m is derived from the committed
-      // codebooks — a caller value could only drift); both eras ride
-      // the committed form's literalized, file-pruned pool fetch
-      case "pq" => asOf
-        .map(AnnIndex.searchIvfPqCommittedAsOf(spark, root, table,
-          idCol, embCol, probeDf, embCol, k, nProbe, pool, _, allowed))
-        .getOrElse(AnnIndex.searchIvfPqCommitted(spark, root, table,
-          idCol, embCol, probeDf, embCol, k, nProbe, pool, corpusVersion,
-          allowed))
-      case _ =>
-        // the corpus here is a PINNED committed snapshot, so hnsw
-        // serving rides the committed form: identity-keyed residency,
-        // zero corpus I/O when the session is warm; the integral tail
-        // is the BEAM WIDTH here (ef), not a list count
-        val p = probeDf.select(lit(0L).as("__pid"), col(embCol))
-        asOf
-          .map(AnnIndex.searchNswBatchCommittedAsOf(spark, root, table,
-            idCol, embCol, p, "__pid", embCol, k, _, ef))
-          .getOrElse(AnnIndex.searchNswBatchCommitted(spark, root, table,
-            idCol, embCol, p, "__pid", embCol, k, corpusVersion, ef))
-          .drop("__pid").withColumnRenamed("cos", "score")
-    }
-    // batch dispatch shared by the id-array and vector-batch forms;
-    // `probes` is (probe_id, embCol) — one row per question. `pids` is
-    // the driver-known probe-id set (both batch doors validate their
-    // ids/vectors driver-side already), kept so the fill diagnostic
-    // below can surface probes whose filter left ZERO candidates.
-    var batchProbeIds: Seq[Long] = Nil
-    def batch(probes: org.apache.spark.sql.DataFrame,
-        pids: Seq[Long]) = {
-      servedBatch = true
-      batchProbeIds = pids
-      kind match {
-      case "ivf" => asOf
-        .map(AnnIndex.searchIvfBatchCommittedAsOf(spark, root, table,
-          idCol, embCol, probes, "probe_id", embCol, k, nProbe, _,
-          allowed))
-        .getOrElse(AnnIndex.searchIvfBatchCommitted(spark, root, table,
-          idCol, embCol, probes, "probe_id", embCol, k, nProbe,
-          corpusVersion, allowed))
-      // the committed forms literalize the collected pool ranking so
-      // the full-precision fetch file-prunes to ≤ probes × pool rows'
-      // files — current AND historical (the AS-OF twin prunes the
-      // pinned snapshot's manifest the same way)
-      case "pq" => asOf
-        .map(AnnIndex.searchIvfPqBatchCommittedAsOf(spark, root, table,
-          idCol, embCol, probes, "probe_id", embCol, k, nProbe, pool, _,
-          allowed))
-        .getOrElse(AnnIndex.searchIvfPqBatchCommitted(spark, root, table,
-          idCol, embCol, probes, "probe_id", embCol, k, nProbe, pool,
-          corpusVersion, allowed))
-      case _ =>
-        // hnsw: the integral tail is the beam width (ef)
-        asOf
-          .map(AnnIndex.searchNswBatchCommittedAsOf(spark, root, table,
-            idCol, embCol, probes, "probe_id", embCol, k, _, ef))
-          .getOrElse(AnnIndex.searchNswBatchCommitted(spark, root, table,
-            idCol, embCol, probes, "probe_id", embCol, k, corpusVersion,
-            ef))
-          .withColumnRenamed("cos", "score")
-      }
     }
     // the result of every batch form prepends a literal probe_id
     // column; a corpus whose id column is ALSO named probe_id deserves
@@ -525,6 +430,12 @@ private[graft] object GraftTvfs {
       s"graft_ann_search: the batch form adds a probe_id column to " +
         s"the result — a corpus id column named 'probe_id' would " +
         "collide; rename the corpus column or probe ids one at a time")
+    // the single forms serve a batch of one under an internal probe-id
+    // column (a corpus id column may itself be named probe_id) and
+    // drop it at the end; its value comes from DATA (the row's id, a
+    // range), never a literal — a foldable key would fold the fill
+    // window's partitioning away
+    val singlePid = "__pid"
     def decodeVector(raw: Any, elemType: DataType,
         where: String): Array[Double] = {
       val a = raw.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
@@ -553,7 +464,9 @@ private[graft] object GraftTvfs {
         s"graft_ann_search: query vector has $w components " +
           s"but $table.$embCol vectors have $d")))
     }
-    val result = args(4).dataType match {
+    // every form becomes (probe frame (pid, embCol), its pid column, the
+    // driver-known probe-id set the fill diagnostic joins from)
+    val (probes, pidCol, pids) = args(4).dataType match {
       case at: ArrayType if at.elementType.isInstanceOf[ArrayType] &&
           isFractional(at.elementType.asInstanceOf[ArrayType].elementType) =>
         // BATCH OF AD-HOC QUERY VECTORS — a question SET none of whose
@@ -576,24 +489,24 @@ private[graft] object GraftTvfs {
         }
         requireCorpusWidth(vecs.map(_.length))
         import spark.implicits._
-        batch(vecs.zipWithIndex
+        (vecs.zipWithIndex
           .map { case (v, i) => (i.toLong, v) }.toDF("probe_id", "__qv")
           .select(col("probe_id"),
             col("__qv").cast(emb.schema(embCol).dataType).as(embCol)),
-          vecs.indices.map(_.toLong))
+          "probe_id", vecs.indices.map(_.toLong))
       case at: ArrayType if isFractional(at.elementType) =>
         // AD-HOC QUERY VECTOR — the reference's /ask shape: embed an
         // arbitrary question OUTSIDE the corpus and search with the
         // fresh vector (a fractional array literal; row ids are
         // integral, so the element type disambiguates). The literal
         // becomes a one-row probe frame cast to the corpus embedding
-        // type, then rides the exact single-probe plan the by-row form
-        // uses — SQL and Scala API serve bit-identically.
+        // type — SQL and Scala API serve bit-identically.
         val vec = decodeVector(arg(args(4), "queryVector"),
           at.elementType, "")
         requireCorpusWidth(Seq(vec.length))
-        single(spark.range(1).select(
-          typedLit(vec).cast(emb.schema(embCol).dataType).as(embCol)))
+        (spark.range(1).select(col("id").as(singlePid),
+          typedLit(vec).cast(emb.schema(embCol).dataType).as(embCol)),
+          singlePid, Seq(0L))
       case at: ArrayType =>
         require(Set[DataType](ByteType, ShortType, IntegerType,
           LongType)(at.elementType),
@@ -631,7 +544,7 @@ private[graft] object GraftTvfs {
         require(missing.isEmpty,
           s"graft_ann_search: no row with $idCol in " +
             s"${missing.mkString("(", ", ", ")")} in $table")
-        batch(probes, ids)
+        (probes, "probe_id", ids)
       case _ =>
         val v = arg(args(4), "probeId")
         // the scalar form gets the same deliberate diagnostic as an
@@ -642,15 +555,17 @@ private[graft] object GraftTvfs {
         // named row's own embedding) — no vector literal crosses the
         // SQL boundary
         val probeDf = emb.filter(col(idCol) === probeId).limit(1)
-          .select(col(embCol))
+          .select(col(idCol).cast("long").as(singlePid), col(embCol))
         // a missing probe row must be an ERROR, not a silently empty
         // top-k (a typo'd id is indistinguishable from "no neighbors"
         // otherwise); the check is one stats-pruned 1-row lookup at
         // resolution time — serving-call cost, like the row fetch
         require(!probeDf.isEmpty,
           s"graft_ann_search: no row with $idCol = $probeId in $table")
-        single(probeDf)
+        (probeDf, singlePid, Seq(probeId))
     }
+    val result = AnnIndex.serve(spark, root, AnnRequest(kind, corpus, idCol,
+      embCol, probes, k, width, pin = pin, allowed = allowed))
     // FILL OBSERVABILITY (r15, hardened r16): a selective filter
     // under-fills k at a fixed width for two DIFFERENT reasons — the
     // corpus holds < k matching rows (no width helps), or routing
@@ -676,61 +591,27 @@ private[graft] object GraftTvfs {
           "graft_ann_search: filtered results add a fill column — a " +
             "corpus id column named 'fill' would be overwritten; " +
             "rename the corpus column")
-        if (servedBatch) {
-          // batch: per-probe count over the REAL probe_id column (a
-          // non-foldable partition key — never an unpartitioned
-          // WindowExec), then a LEFT join FROM the driver-known
-          // probe-id set (a local relation, batch-sized) so empty
-          // probes surface with fill = 0; the counted side is ≤
-          // probes × k rows — broadcast. The join destroys the
-          // serve's final sort, so the doors' documented
-          // (probe_id, score desc, id) output order re-asserts after
-          // (desc sorts nulls last, so a fill=0 row trails its probe).
-          val counted = result
-            .withColumn("fill",
-              count(lit(1)).over(Window.partitionBy(col("probe_id")))
-                .cast("int"))
-          import spark.implicits._
-          batchProbeIds.toDF("probe_id")
-            .join(broadcast(counted), Seq("probe_id"), "left")
-            .withColumn("fill", coalesce(col("fill"), lit(0)))
-            .orderBy(col("probe_id"), desc("score"), col(idCol))
-        } else {
-          // single probe: a constant partitionBy would FOLD away and
-          // leave the unpartitioned WindowExec the no-global-window
-          // contract forbids, and r16's bounded collect (the fix for
-          // r15's leaked localCheckpoint pin) still EXECUTED the serve
-          // at TVF-resolution time, so EXPLAIN on a filtered
-          // single-probe query ran data-dependent jobs (VERDICT r16).
-          // Instead: one LAZY linear plan — a global aggregate packs
-          // the serve's ≤ k output rows into a single (rows, fill)
-          // row (collect_list over a k-limited input, the bounded
-          // analogue of the repo's bounded-collect contract; the
-          // serve's own limit(k) already single-partitions it, so
-          // this is NOT a global shuffle), then explode_outer unpacks
-          // them with fill alongside. An empty serve explodes the
-          // empty list to one NULL struct row — exactly the all-null
-          // fill = 0 diagnostic row, for free. The serve subtree
-          // executes ONCE, at action time; EXPLAIN plans it and runs
-          // nothing (spec-pinned against the unfiltered form's job
-          // count in SqlTvfSpec).
-          import org.apache.spark.sql.functions.{count => cnt,
-            collect_list, explode_outer, struct}
-          val cols = result.columns.toSeq
-          require(!cols.contains("__fr"),
-            "graft_ann_search: filtered results stage an internal " +
-              "__fr column — rename the corpus column __fr")
-          result
-            .groupBy()
-            .agg(collect_list(struct(cols.map(col): _*)).as("__fr"),
-              cnt(lit(1)).cast("int").as("fill"))
-            .select(explode_outer(col("__fr")).as("__fr"), col("fill"))
-            .select(cols.map(c =>
-              col("__fr").getField(c).as(c)) :+ col("fill"): _*)
-            .orderBy(desc("score"), col(idCol))
-        }
+        // per-probe count over the REAL probe-id column (a non-foldable
+        // partition key — never an unpartitioned WindowExec), then a
+        // LEFT join FROM the driver-known probe-id set (a local
+        // relation, batch-sized) so empty probes surface with fill = 0;
+        // the counted side is ≤ probes × k rows — broadcast. The join
+        // destroys the serve's final sort, so the documented
+        // (probe id, score desc, id) order re-asserts after (desc sorts
+        // nulls last, so a fill = 0 row trails its probe). Lazy: the
+        // serve executes once, at action time — EXPLAIN runs only the
+        // resolution-time checks every serve pays (SqlTvfSpec pins it).
+        val counted = result
+          .withColumn("fill",
+            count(lit(1)).over(Window.partitionBy(col(pidCol))).cast("int"))
+        import spark.implicits._
+        pids.toDF(pidCol)
+          .join(broadcast(counted), Seq(pidCol), "left")
+          .withColumn("fill", coalesce(col("fill"), lit(0)))
+          .orderBy(col(pidCol), desc("score"), col(idCol))
       }
-    GraftShims.logicalPlan(withFill)
+    GraftShims.logicalPlan(
+      if (pidCol == singlePid) withFill.drop(singlePid) else withFill)
   }
 
   def repoTable(args: Seq[Expression]): LogicalPlan = {

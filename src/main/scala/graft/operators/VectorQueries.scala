@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.{vec_cosine_sim, vec_norm}
 import graft.sources.Tables
-import graft.vector.{CosineNearDup, HashEmbed, Ivf, KMeans, Knn, NswAnn, Pq, RandomProjection}
+import graft.vector.{AnnCorpus, AnnIndex, AnnRequest, CosineNearDup, HashEmbed, Ivf, KMeans,
+  Knn, NswAnn, Pq, RandomProjection}
 
 /** Vector / similarity-search queries (SURVEY.md §2-B "Vector ops"):
   * array ops (q19), exact kNN (q20), exact near-dup pairs (q21), the
@@ -45,6 +46,20 @@ object VectorQueries {
     .agg(transform(
       array_sort(collect_list(struct(col("pos"), col("m")))),
       x => x.getField("m")).as("probe"))
+
+  /** The persisted-ANN gates' question set: the `n` lowest-id corpus
+    * rows as a (probe_id, embedding) probe frame. */
+  private def firstProbes(emb: DataFrame, n: Int): DataFrame =
+    emb.orderBy("vec_id").limit(n)
+      .select(col("vec_id").as("probe_id"), col("embedding"))
+
+  /** The s15–s25 serve: top-k per probe through [[AnnIndex.serve]] at
+    * the kind's default width. */
+  private def annServe(s: SparkSession, root: String, kind: String,
+      corpus: AnnCorpus, probes: DataFrame, k: Int,
+      pool: Option[Int] = None): DataFrame =
+    AnnIndex.serve(s, root, AnnRequest(kind, corpus, "vec_id",
+      "embedding", probes, k, pool = pool))
 
   val queries: Map[String, Q] = Map(
     // q19: array ops + L2 norm battery.
@@ -426,9 +441,7 @@ object VectorQueries {
         "vec_id", "embedding", k = 16)
       val v2 = graft.vector.AnnIndex.ensureIvf(s, root, e,
         "vec_id", "embedding", k = 16)
-      val probeDf = e.orderBy("vec_id").limit(1).select(col("embedding"))
-      graft.vector.AnnIndex.searchIvf(s, root, e, "vec_id", "embedding",
-          probeDf, "embedding", k = 10, nProbe = 4)
+      annServe(s, root, "ivf", AnnCorpus.Frame(e), firstProbes(e, 1), 10)
         .select(col("vec_id"), round(col("score"), 4).as("cos_sim"),
           lit(v1._1).as("cent_v"), lit(v1._2).as("asg_v"),
           lit(v2._1).as("cent_v2"), lit(v2._2).as("asg_v2"))
@@ -450,9 +463,8 @@ object VectorQueries {
         "vec_id", "embedding", k = 16)
       val vP = graft.vector.AnnIndex.ensurePq(s, root, e,
         "vec_id", "embedding", m = 8, k = 16)
-      val probeDf = e.orderBy("vec_id").limit(1).select(col("embedding"))
-      graft.vector.AnnIndex.searchIvfPq(s, root, e, "vec_id", "embedding",
-          probeDf, "embedding", m = 8, k = 10, nProbe = 4, pool = 50)
+      annServe(s, root, "pq", AnnCorpus.Frame(e), firstProbes(e, 1), 10,
+          pool = Some(50))
         .select(col("vec_id"), round(col("score"), 4).as("cos_sim"),
           lit(vI._1).as("cent_v"), lit(vI._2).as("asg_v"),
           lit(vP._1).as("book_v"), lit(vP._2).as("code_v"))
@@ -466,16 +478,12 @@ object VectorQueries {
     // from the stored adjacency — bit-identical to a from-scratch
     // build of the grown corpus (AnnIndexSpec). Rows-only.
     "s17_persisted_nsw_ann" -> ((s, d) => {
-      import s.implicits._
       val e = Tables.embeddings(s, d)
       val root = AnnRoots.of("nsw", d)
       graft.vector.AnnIndex.ensureNsw(s, root, e, "vec_id", "embedding")
       val v2 = graft.vector.AnnIndex.ensureNsw(s, root, e, "vec_id", "embedding")
-      val probe = e.orderBy("vec_id").limit(1)
-        .select(col("embedding").cast("array<float>")).as[Array[Float]].head()
-      graft.vector.AnnIndex.searchNsw(s, root, e, "vec_id", "embedding",
-          probe, k = 10)
-        .select(col("vec_id"), round(col("cos"), 4).as("cos_sim"),
+      annServe(s, root, "hnsw", AnnCorpus.Frame(e), firstProbes(e, 1), 10)
+        .select(col("vec_id"), round(col("score"), 4).as("cos_sim"),
           lit(v2).as("edge_v"))
     }),
 
@@ -492,12 +500,9 @@ object VectorQueries {
       val e = Tables.embeddings(s, d)
       val root = AnnRoots.of("nsw", d) // s17's index: a shared artifact
       val v = graft.vector.AnnIndex.ensureNsw(s, root, e, "vec_id", "embedding")
-      val probes = e.orderBy("vec_id").limit(3)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
-      graft.vector.AnnIndex.searchNswBatch(s, root, e, "vec_id", "embedding",
-          probes, "probe_id", "pv", k = 5)
+      annServe(s, root, "hnsw", AnnCorpus.Frame(e), firstProbes(e, 3), 5)
         .select(col("probe_id"), col("vec_id"),
-          round(col("cos"), 4).as("cos_sim"), lit(v).as("edge_v"))
+          round(col("score"), 4).as("cos_sim"), lit(v).as("edge_v"))
     }),
 
     // s19: BATCH-PROBE PERSISTED IVF SERVE — s18's plan-shape twin on
@@ -511,10 +516,7 @@ object VectorQueries {
       val e = Tables.embeddings(s, d)
       val root = AnnRoots.of("ivf", d) // s15's index: a shared artifact
       graft.vector.AnnIndex.ensureIvf(s, root, e, "vec_id", "embedding", k = 16)
-      val probes = e.orderBy("vec_id").limit(3)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
-      graft.vector.AnnIndex.searchIvfBatch(s, root, e, "vec_id", "embedding",
-          probes, "probe_id", "pv", k = 5, nProbe = 4)
+      annServe(s, root, "ivf", AnnCorpus.Frame(e), firstProbes(e, 3), 5)
         .select(col("probe_id"), col("vec_id"),
           round(col("score"), 4).as("cos_sim"))
     }),
@@ -532,10 +534,8 @@ object VectorQueries {
       graft.vector.AnnIndex.ensureIvf(s, root, e, "vec_id", "embedding", k = 16)
       graft.vector.AnnIndex.ensurePq(s, root, e, "vec_id", "embedding",
         m = 8, k = 16)
-      val probes = e.orderBy("vec_id").limit(3)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
-      graft.vector.AnnIndex.searchIvfPqBatch(s, root, e, "vec_id", "embedding",
-          probes, "probe_id", "pv", k = 5, nProbe = 4, pool = 50)
+      annServe(s, root, "pq", AnnCorpus.Frame(e), firstProbes(e, 3), 5,
+          pool = Some(50))
         .select(col("probe_id"), col("vec_id"),
           round(col("score"), 4).as("cos_sim"))
     }),
@@ -546,7 +546,7 @@ object VectorQueries {
     // probe rerank cost grows ∝ corpus/k forever). Run 1 builds at
     // k = 16 then retrains at k = 31 — new centroids + a FULL
     // reassign land as expected-slot CAS commits on the SAME tables,
-    // so history is preserved (searchIvfAsOf still serves generation
+    // so history is preserved (an AS OF serve still reads generation
     // 1) and a racing writer fails loudly instead of clobbering.
     // Later runs re-ensure (mints nothing at the retrained
     // generation — cent_v/asg_v hold at 2) and serve; k_stored
@@ -568,9 +568,7 @@ object VectorQueries {
       }
       val v = AnnIndex.ensureIvf(s, root, e, "vec_id", "embedding")
       val kStored = AnnIndex.loadIvf(s, root)._1.count()
-      val probeDf = e.orderBy("vec_id").limit(1).select(col("embedding"))
-      AnnIndex.searchIvf(s, root, e, "vec_id", "embedding",
-          probeDf, "embedding", k = 10, nProbe = 4)
+      annServe(s, root, "ivf", AnnCorpus.Frame(e), firstProbes(e, 1), 10)
         .select(col("vec_id"), round(col("score"), 4).as("cos_sim"),
           lit(v._1).as("cent_v"), lit(v._2).as("asg_v"),
           lit(kStored).as("k_stored"))
@@ -605,13 +603,12 @@ object VectorQueries {
         16)
       val lv = AnnIndex.optimizeIvfServing(s, root, corpusT,
         "vec_id", "embedding")
-      val probeDf = corpus.orderBy("vec_id").limit(1).select(col("embedding"))
       // the observability flag ann_stats surfaces: 1 here (the layout
       // was just ensured fresh), 0 would mean this very serve silently
       // fell back to the join plan
       val fresh = AnnIndex.listsFreshness(s, root, corpusT)("ivf_lists_fresh")
-      AnnIndex.searchIvfCommitted(s, root, corpusT, "vec_id", "embedding",
-          probeDf, "embedding", k = 10, nProbe = 4)
+      annServe(s, root, "ivf", AnnCorpus.committed(s, corpusT),
+          firstProbes(corpus, 1), 10)
         .select(col("vec_id"), round(col("score"), 4).as("cos_sim"),
           lit(lv).as("lists_v"), lit(fresh).as("lists_fresh"))
     }),
@@ -639,20 +636,18 @@ object VectorQueries {
       AnnIndex.ensureNswCurrent(s, root, corpusT, "vec_id", "embedding")
       val lv = AnnIndex.optimizeNswServing(s, root, corpusT,
         "vec_id", "embedding")
-      val probes = corpus.orderBy("vec_id").limit(3)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
+      def serve() = annServe(s, root, "hnsw",
+        AnnCorpus.committed(s, corpusT), firstProbes(corpus, 3), 5)
       // warm the cache, then lose one shard: the next serve rides the
       // partial-miss path (resident shards from cache, the missing
       // shard from a file-pruned layout read)
-      AnnIndex.searchNswBatchCommitted(s, root, corpusT,
-        "vec_id", "embedding", probes, "probe_id", "pv", k = 5).collect()
+      serve().collect()
       AnnIndex.evictShard(AnnIndex.nswEdgesTable(root), 1L)
       val fresh = AnnIndex.nswLayoutFreshness(s, root, corpusT)
         .apply("nsw_layout_fresh")
-      AnnIndex.searchNswBatchCommitted(s, root, corpusT,
-          "vec_id", "embedding", probes, "probe_id", "pv", k = 5)
+      serve()
         .select(col("probe_id"), col("vec_id"),
-          round(col("cos"), 4).as("cos_sim"),
+          round(col("score"), 4).as("cos_sim"),
           lit(lv).as("layout_v"), lit(fresh).as("layout_fresh"))
     }),
 
@@ -683,9 +678,8 @@ object VectorQueries {
         m = 8, k = 16)
       val lv = AnnIndex.optimizePqServing(s, root, "vec_id")
       val fresh = AnnIndex.pqListsFreshness(s, root)("pq_lists_fresh")
-      val probeDf = corpus.orderBy("vec_id").limit(1).select(col("embedding"))
-      AnnIndex.searchIvfPqCommitted(s, root, corpusT, "vec_id", "embedding",
-          probeDf, "embedding", k = 10, nProbe = 4, pool = 64)
+      annServe(s, root, "pq", AnnCorpus.committed(s, corpusT),
+          firstProbes(corpus, 1), 10, pool = Some(64))
         .select(col("vec_id"), round(col("score"), 4).as("cos_sim"),
           lit(lv).as("lists_v"), lit(fresh).as("lists_fresh"))
     }),
@@ -719,9 +713,8 @@ object VectorQueries {
       val lv = AnnIndex.optimizeIvfServing(s, root, corpusT,
         "vec_id", "embedding")
       val epsE6 = AnnIndex.spillEpsE6(s, root)
-      val probeDf = corpus.orderBy("vec_id").limit(1).select(col("embedding"))
-      AnnIndex.searchIvfCommitted(s, root, corpusT, "vec_id", "embedding",
-          probeDf, "embedding", k = 10, nProbe = 4)
+      annServe(s, root, "ivf", AnnCorpus.committed(s, corpusT),
+          firstProbes(corpus, 1), 10)
         .select(col("vec_id"), round(col("score"), 4).as("cos_sim"),
           lit(lv).as("lists_v"), lit(epsE6).as("spill_eps_e6"))
     }),

@@ -2,7 +2,7 @@ package graft.plans
 
 import org.apache.spark.sql.{GraftShims, Row, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, Expression}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, CommonExpressionRef, Expression, InheritAnalysisRules, RuntimeReplaceable, With}
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, InsertAction, LogicalPlan, MergeAction, MergeIntoTable, UpdateAction, UpdateTable}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
@@ -40,11 +40,28 @@ class GraftDmlRewrite extends Rule[LogicalPlan] {
         r.table.asInstanceOf[GraftTable]
     }
 
+  /** Spark 4 resolves `BETWEEN` (like other argument-inheriting
+    * replaceable functions) to a node whose arguments are plain fields
+    * and whose only child is its replacement, which shares the input
+    * through a `With` common-expression binding. An attribute remap
+    * reaches neither the fields nor the binding's references, so the
+    * captured condition would re-resolve against stale exprIds. Inline
+    * them first: the replacement stands in for the node, and each
+    * reference for the expression it names — only for deterministic
+    * bindings, which evaluate the same however often they are
+    * repeated. */
+  private def inlineReplacements(e: Expression): Expression = e.transformUp {
+    case w: With if w.defs.forall(_.child.deterministic) =>
+      val defs = w.defs.map(d => d.id -> d.child).toMap
+      w.child.transformUp { case r: CommonExpressionRef => defs(r.id) }
+    case r: RuntimeReplaceable with InheritAnalysisRules => r.replacement
+  }
+
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
     case u @ UpdateTable(target, assignments, condition)
         if u.resolved && graftTableOf(target).isDefined =>
       val gt = graftTableOf(target).get
-      def remap(e: Expression): Expression = e.transformUp {
+      def remap(e: Expression): Expression = inlineReplacements(e).transformUp {
         case a: AttributeReference => UnresolvedAttribute(a.name)
       }
       val sets = assignments.map { a =>
@@ -73,7 +90,7 @@ class GraftDmlRewrite extends Rule[LogicalPlan] {
       val gt = graftTableOf(target).get
       val tIds: AttributeSet = target.outputSet
       val sIds: AttributeSet = source.outputSet
-      def remap(e: Expression): Expression = e.transformUp {
+      def remap(e: Expression): Expression = inlineReplacements(e).transformUp {
         case a: AttributeReference if tIds.contains(a) =>
           UnresolvedAttribute("__t_" + a.name)
         case a: AttributeReference if sIds.contains(a) =>

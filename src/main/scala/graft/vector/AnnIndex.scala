@@ -5,6 +5,47 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.{Versioned, VersionedScan}
 
+/** Which generation of the index artifacts a serve reads. */
+sealed trait AnnPin
+object AnnPin {
+  case object Latest extends AnnPin
+  /** The generation current AT `tsMillis` (epoch millis). */
+  final case class AsOf(tsMillis: Long) extends AnnPin
+}
+
+/** The corpus a serve reranks against. */
+sealed trait AnnCorpus
+object AnnCorpus {
+  /** Any frame holding the id and embedding columns. */
+  final case class Frame(df: DataFrame) extends AnnCorpus
+  /** A committed graft table at a resolved version — the form that
+    * unlocks the derived serving layouts and snapshot-keyed caches. */
+  final case class Committed(table: String, version: Long) extends AnnCorpus
+
+  /** `table` at the version `pin` names ([[AnnIndex.versionAt]]). */
+  def committed(spark: SparkSession, table: String,
+      pin: AnnPin = AnnPin.Latest): Committed =
+    Committed(table, AnnIndex.versionAt(spark, table, pin))
+}
+
+/** One ANN question set for [[AnnIndex.serve]]: `probes` is a
+  * (probe id, vector) frame; `width` is nProbe (ivf/pq) or the search
+  * beam ef (hnsw), None = the kind's default; `pool` is pq's rerank
+  * pool, None = [[AnnIndex.pqRerankPool]] of (k, width); `allowed` is
+  * an optional id-set frame restricting the candidates (ivf/pq
+  * only). */
+final case class AnnRequest(
+    kind: String,
+    corpus: AnnCorpus,
+    idCol: String,
+    embCol: String,
+    probes: DataFrame,
+    k: Int,
+    width: Option[Int] = None,
+    pool: Option[Int] = None,
+    pin: AnnPin = AnnPin.Latest,
+    allowed: Option[DataFrame] = None)
+
 /** PERSISTED ANN indexes — the vector-side twin of the d11 MinHash
   * signature index: the expensive build artifacts (IVF centroids +
   * inverted-list assignments, PQ codebooks + codes, HNSW adjacency) are
@@ -196,49 +237,171 @@ object AnnIndex {
     }.toOption.flatten
   }
 
-  /** The fresh cid-clustered codes layout, or None when absent/stale —
+  /** The cid-clustered codes layout that was fresh at `pin` — its stamp
+    * names exactly the pin-resolved assignments and codes generations —
+    * or None when absent, stale, or not yet committed at the instant:
     * the same metadata-reads routing decision as [[freshLists]]. */
-  private def freshPqLists(spark: SparkSession,
-      root: String): Option[DataFrame] = {
+  private def freshPqLists(spark: SparkSession, root: String,
+      pin: AnnPin): Option[DataFrame] = scala.util.Try {
     val (aT, qT, lT) =
       (ivfAssignmentsTable(root), pqCodesTable(root), pqListsTable(root))
-    val lv = Versioned.latestVersion(spark, lT)
-    if (lv == 0L) return None
-    val av = Versioned.latestVersion(spark, aT)
-    val qv = Versioned.latestVersion(spark, qT)
-    if (av == 0L || qv == 0L) return None
-    if (effectiveLayoutStamp(spark, lT, lv).contains(
+    val lv = versionAt(spark, lT, pin)
+    val av = if (lv == 0L) 0L else versionAt(spark, aT, pin)
+    val qv = if (av == 0L) 0L else versionAt(spark, qT, pin)
+    if (qv > 0L && effectiveLayoutStamp(spark, lT, lv).contains(
         pqListsTxn(av, Versioned.manifestFingerprint(spark, aT, av),
           qv, Versioned.manifestFingerprint(spark, qT, qv))))
       Some(VersionedScan.read(spark, lT, lv))
     else None
-  }
-
-  /** [[freshPqLists]] AT an instant: Some only when a layout commit
-    * existed then AND its stamp names the same-instant assignments and
-    * codes generations. */
-  private def freshPqListsAsOf(spark: SparkSession, root: String,
-      tsMillis: Long): Option[DataFrame] = {
-    val (aT, qT, lT) =
-      (ivfAssignmentsTable(root), pqCodesTable(root), pqListsTable(root))
-    if (Versioned.latestVersion(spark, lT) == 0L) return None
-    scala.util.Try {
-      val ls = Versioned.snapshotAsOf(spark, lT, tsMillis)
-      val av = Versioned.snapshotAsOf(spark, aT, tsMillis).version
-      val qv = Versioned.snapshotAsOf(spark, qT, tsMillis).version
-      if (effectiveLayoutStamp(spark, lT, ls.version).contains(
-          pqListsTxn(av, Versioned.manifestFingerprint(spark, aT, av),
-            qv, Versioned.manifestFingerprint(spark, qT, qv))))
-        Some(VersionedScan.read(spark, lT, ls.version))
-      else None
-    }.toOption.flatten
-  }
+  }.toOption.flatten
 
   /** `pq_lists` freshness for `ann_stats` — artifact-internal (no
     * corpus identity involved), so it always reports. */
   def pqListsFreshness(spark: SparkSession, root: String): Map[String, Long] =
     Map("pq_lists_fresh" ->
-      (if (freshPqLists(spark, root).isDefined) 1L else 0L))
+      (if (freshPqLists(spark, root, AnnPin.Latest).isDefined) 1L else 0L))
+
+  /** The version of `table` a pin names: the latest commit, or the one
+    * current AT the instant (the commit-ts walk every graft table
+    * supports; it throws for an instant before the first commit). The
+    * one pin → version rule every artifact table and a committed
+    * corpus resolve through, so a historical serve reads the index,
+    * its serving layouts and the corpus of the same instant. */
+  def versionAt(spark: SparkSession, table: String, pin: AnnPin): Long =
+    pin match {
+      case AnnPin.Latest => Versioned.latestVersion(spark, table)
+      case AnnPin.AsOf(ts) => Versioned.snapshotAsOf(spark, table, ts).version
+    }
+
+  private def readAt(spark: SparkSession, table: String,
+      pin: AnnPin): DataFrame =
+    VersionedScan.read(spark, table, versionAt(spark, table, pin))
+
+  /** THE serving door: top-k per probe from the committed index of
+    * `kind` under `root`, for every kind, pin and corpus form. Every
+    * serve takes a (probe id, vector) frame and returns
+    * (probe id, id, score) — top-k per probe by (score desc, id), rows
+    * ordered by (probe id, score desc, id); a single question is a
+    * batch of one (whose per-probe cuts plan as sorted limits — no
+    * exchange, [[Pq.topPerProbe]]). The probe id must be integral; its
+    * column keeps its name and type.
+    *
+    * The kernel follows from the request, never from a caller flag:
+    *   - a [[AnnCorpus.Frame]] corpus rides the in-plan kernels
+    *     ([[Ivf.searchBatch]], [[Pq.searchIvfPqBatch]], the shard-graph
+    *     cogroup keyed by the frame's content);
+    *   - a [[AnnCorpus.Committed]] corpus rides the layout-aware ones:
+    *     ivf serves from the derived `ivf_lists` layout while its stamp
+    *     names the pin-resolved (assignments, corpus) identity — the
+    *     candidate scan manifest-prunes to the probed lists' files —
+    *     else from the join plan; pq collects its bounded pool ranking
+    *     so the full-precision fetch is a file-pruned literal id scan,
+    *     and its ADC scan prunes to the probed lists of a fresh
+    *     `pq_lists` layout; hnsw keys its graph cache on the snapshot's
+    *     identity (zero corpus I/O when warm) and repairs a partial miss
+    *     from a fresh `nsw_layout`. Results are the in-plan kernels'
+    *     either way, ties included (pinned in ServeEquivalenceSpec).
+    *
+    * `width` is nProbe for ivf/pq (default 4; pq's rerank pool follows
+    * [[pqRerankPool]] unless `pool` is given) and the search beam ef for
+    * hnsw (default: the stored construction beam; the beam is floored
+    * at k). `pin` resolves every artifact table through [[versionAt]] —
+    * pair an [[AnnPin.AsOf]] with the same-instant corpus to reproduce a
+    * past retrieval exactly. `allowed` (an id-set frame, normally
+    * `corpus.filter(pred)`) is the s13 prefiltered composition:
+    * membership is exact, ranking stays routing-approximate, a
+    * selective filter can under-fill k at a fixed width. The hnsw graph
+    * walk cannot push a predicate, so a filtered hnsw serve refuses. */
+  def serve(spark: SparkSession, root: String, req: AnnRequest): DataFrame = {
+    import req._
+    import org.apache.spark.sql.types.{ByteType, DataType, IntegerType,
+      LongType, ShortType}
+    require(Set("ivf", "pq", "hnsw")(kind),
+      s"AnnIndex.serve: unknown kind '$kind' (ivf | pq | hnsw)")
+    require(k > 0 && width.forall(_ > 0) && pool.forall(_ > 0),
+      s"AnnIndex.serve: k, width and pool must be positive " +
+        s"($k, $width, $pool)")
+    require(probes.columns.length == 2,
+      "AnnIndex.serve: the probe frame is (probe id, vector), got " +
+        probes.columns.mkString("(", ", ", ")"))
+    val Array(pidCol, vecCol) = probes.columns
+    require(pidCol != idCol,
+      s"probe id column '$pidCol' must differ from the corpus id " +
+        "column — both appear in the result")
+    // integral only: the internal long widen must be lossless, and the
+    // result schema identical whichever kernel serves (a non-integral
+    // id would cast to NULL and collapse every probe into one rerank
+    // partition)
+    val pidType = probes.schema(pidCol).dataType
+    require(Set[DataType](ByteType, ShortType, IntegerType,
+      LongType)(pidType),
+      s"AnnIndex.serve: probe id column '$pidCol' must be integral, " +
+        s"got ${pidType.simpleString}")
+    require(allowed.isEmpty || kind != "hnsw",
+      "AnnIndex.serve: filtered search rides the routing tiers (ivf | " +
+        "pq) — the hnsw graph walk cannot push a predicate")
+    val p = probes.select(col(pidCol).cast("long").as("__pid"),
+      col(vecCol).as("__probe"))
+    // a probe frame whose plan bounds it to one row (a limit(1), a
+    // one-row range or local relation) is a single question: its
+    // per-probe cuts plan as sorted limits, without the windows'
+    // exchanges — read from the analyzed plan, never by running it
+    val single = probes.queryExecution.analyzed.maxRows.exists(_ <= 1)
+    val committed = corpus match {
+      case AnnCorpus.Committed(table, cv) =>
+        require(cv > 0, s"AnnIndex.serve: $table has no commits")
+        Some((table, cv))
+      case _: AnnCorpus.Frame => None
+    }
+    lazy val emb = corpus match {
+      case AnnCorpus.Committed(table, cv) =>
+        VersionedScan.read(spark, table, cv)
+      case AnnCorpus.Frame(df) => df
+    }
+    val nProbe = width.getOrElse(4)
+    val served = kind match {
+      case "ivf" =>
+        committed.flatMap { case (t, cv) =>
+          freshLists(spark, root, t, cv, pin) } match {
+          case Some((cents, lists)) =>
+            ivfListsServe(cents, lists, idCol, embCol, p, single, k, nProbe,
+              allowed)
+          case None =>
+            Ivf.searchBatch(restrict(emb, idCol, allowed),
+              readAt(spark, ivfAssignmentsTable(root), pin),
+              readAt(spark, ivfCentroidsTable(root), pin),
+              idCol, embCol, p, "__pid", "__probe", k, nProbe)
+        }
+      case "pq" =>
+        val (books, codes, m) = pqArtifacts(spark, root, pin)
+        val (cents, asg) = (readAt(spark, ivfCentroidsTable(root), pin),
+          readAt(spark, ivfAssignmentsTable(root), pin))
+        val poolN = pool.getOrElse(pqRerankPool(k, nProbe))
+        if (committed.isDefined)
+          ivfPqCommittedServe(emb, idCol, embCol, p, single, cents, asg,
+            books, codes, m, k, nProbe, poolN, freshPqLists(spark, root, pin),
+            allowed)
+        else
+          // the filter restricts the codes BEFORE the pool cut, as the
+          // committed form does — post-pool filtering would under-fill k
+          Pq.searchIvfPqBatch(restrict(emb, idCol, allowed), asg, cents,
+            restrict(codes, idCol, allowed), books, idCol, embCol, p,
+            "__pid", "__probe", m, k, nProbe, poolN)
+      case _ =>
+        val ev = versionAt(spark, nswEdgesTable(root), pin)
+        committed match {
+          case Some((table, cv)) => nswCommittedServe(spark, root, table,
+            cv, emb, idCol, embCol, p, k, width, ev)
+          case None => nswServe(spark, root, emb, idCol, embCol, p, k,
+            width, ev)
+        }
+    }
+    val out = served.select(col("__pid").cast(pidType).as(pidCol),
+      col(idCol), col("score"))
+    // a single probe's cut is already a sorted limit: sorting it again
+    // would plan that top-k below a sort, where it runs as a shuffle
+    if (single) out else out.orderBy(col(pidCol), desc("score"), col(idCol))
+  }
 
   /** MEASURED recall@k of a committed index against the exact cosine
     * oracle — recall is data- and scale-dependent (the 2.2 M rehearsal:
@@ -312,18 +475,11 @@ object AnnIndex {
       recallOracles.put(oKey, v)
       v
     }
-    val served = kindL match {
-      case "ivf" => searchIvfBatchCommitted(spark, root, corpusTable,
-        idCol, embCol, p, "probe_id", "__pv", k, nProbe = width, cv)
-      // the pool follows the TVF's width-scaled formula
-      // ([[pqRerankPool]] — one definition), so the measured recall
-      // describes exactly what graft_ann_search would serve
-      case "pq" => searchIvfPqBatchCommitted(spark, root, corpusTable,
-        idCol, embCol, p, "probe_id", "__pv", k, nProbe = width,
-        pool = pqRerankPool(k, width), corpusVersion = cv)
-      case _ => searchNswBatchCommitted(spark, root, corpusTable,
-        idCol, embCol, p, "probe_id", "__pv", k, cv, ef = width)
-    }
+    // the same door graft_ann_search serves through, at the same width
+    // (and, for pq, the same width-scaled pool)
+    val served = serve(spark, root, AnnRequest(kindL,
+      AnnCorpus.Committed(corpusTable, cv), idCol, embCol, p, k,
+      Some(width)))
     val got = served.select(col("probe_id").cast("long"),
         col(idCol).cast("long"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -899,44 +1055,6 @@ object AnnIndex {
     (VersionedScan.read(spark, ivfCentroidsTable(root)),
       VersionedScan.read(spark, ivfAssignmentsTable(root)))
 
-  /** TIME-TRAVEL load of the committed IVF index: both artifact tables
-    * resolve to the versions current AT `tsMillis` (the commit-ts walk
-    * every graft table supports), so "re-run last week's retrieval
-    * EXACTLY" is one timestamp away — pair it with the corpus read at
-    * the same instant (`graft_table(path, TIMESTAMP ...)` /
-    * snapshotAsOf) and the whole serving stack reproduces. Searching a
-    * historical index costs the same as searching the current one:
-    * version resolution is metadata-only, immutable files do the
-    * rest. */
-  def loadIvfAsOf(spark: SparkSession, root: String,
-      tsMillis: Long): (DataFrame, DataFrame) = {
-    val (cT, aT) = (ivfCentroidsTable(root), ivfAssignmentsTable(root))
-    (VersionedScan.read(spark, cT,
-        Versioned.snapshotAsOf(spark, cT, tsMillis).version),
-      VersionedScan.read(spark, aT,
-        Versioned.snapshotAsOf(spark, aT, tsMillis).version))
-  }
-
-  /** [[Ivf.search]] over the index AS OF `tsMillis` — historical
-    * serving with the same plan as [[searchIvf]]; the caller supplies
-    * the corpus view to rerank against (normally the same-instant
-    * snapshot of the embedding table). */
-  def searchIvfAsOf(spark: SparkSession, root: String, emb: DataFrame,
-      idCol: String, embCol: String, probeDf: DataFrame, probeCol: String,
-      k: Int, nProbe: Int, tsMillis: Long): DataFrame = {
-    val (cents, asg) = loadIvfAsOf(spark, root, tsMillis)
-    Ivf.search(emb, asg, cents, idCol, embCol, probeDf, probeCol, k, nProbe)
-  }
-
-  /** [[Ivf.search]] over the COMMITTED index — the serving path that
-    * pays load, not build. */
-  def searchIvf(spark: SparkSession, root: String, emb: DataFrame,
-      idCol: String, embCol: String, probeDf: DataFrame, probeCol: String,
-      k: Int, nProbe: Int): DataFrame = {
-    val (cents, asg) = loadIvf(spark, root)
-    Ivf.search(emb, asg, cents, idCol, embCol, probeDf, probeCol, k, nProbe)
-  }
-
   /** Retrain the committed IVF quantizer at a NEW centroid count —
     * [[reshardNsw]]'s IVF twin, the operational alternative to
     * drop-root retrain for a corpus that outgrew its build-time k (see
@@ -945,12 +1063,13 @@ object AnnIndex {
     * [[ivfAutoK]] of the corpus size) and lands new centroids + a FULL
     * reassign as expected-slot CAS commits on the existing tables:
     * history is preserved (time travel to the pre-retrain index still
-    * works, [[searchIvfAsOf]]), version numbers never reuse, and a
-    * writer racing either commit makes the CAS fail loudly instead of
-    * clobbering — conversely an `ensure` that classified against the
-    * pre-retrain index loses ITS publish to the same CAS (morCommit
-    * pins the observed snapshot), so stale-generation assignments can
-    * never land over the retrained index.
+    * works: [[serve]] with an [[AnnPin.AsOf]] pin), version numbers
+    * never reuse, and a writer racing either commit makes the CAS fail
+    * loudly instead of clobbering — conversely an `ensure` that
+    * classified against the pre-retrain index loses ITS publish to the
+    * same CAS (morCommit pins the observed snapshot), so
+    * stale-generation assignments can never land over the retrained
+    * index.
     *
     * The pair is two commits, not one (the artifacts are two tables):
     * a crash between them leaves new centroids routing over the prior
@@ -1102,7 +1221,7 @@ object AnnIndex {
       // m rides trainedM, not the bare max(sub)+1: a RAGGED stranded
       // generation (pre-r15, m not dividing the width) must refuse
       // here with the retrain remedy exactly like the serve does —
-      // codebookM would re-encode its codes at m+1 on boundaries the
+      // max(sub)+1 would re-encode its codes at m+1 on boundaries the
       // training never used and the catch-up commit would land
       // garbage codes (ADVICE r15)
       val mBooks = trainedM(spark, root, books, booksV)
@@ -1147,30 +1266,6 @@ object AnnIndex {
     (newBv, reencode(newBv, cvCur))
   }
 
-  /** [[Ivf.searchBatch]] over the COMMITTED index — the probe-SET
-    * serving path: one plan serves the whole question batch, with the
-    * rerank a per-probe partitioned window ([[searchNswBatch]]'s IVF
-    * twin). */
-  def searchIvfBatch(spark: SparkSession, root: String, emb: DataFrame,
-      idCol: String, embCol: String, probes: DataFrame,
-      probeIdCol: String, probeCol: String, k: Int, nProbe: Int): DataFrame = {
-    val (cents, asg) = loadIvf(spark, root)
-    Ivf.searchBatch(emb, asg, cents, idCol, embCol,
-      probes, probeIdCol, probeCol, k, nProbe)
-  }
-
-  /** [[searchIvfBatch]] over the index AS OF `tsMillis` — the batch
-    * door's historical twin (same artifact resolution as
-    * [[loadIvfAsOf]]). */
-  def searchIvfBatchAsOf(spark: SparkSession, root: String, emb: DataFrame,
-      idCol: String, embCol: String, probes: DataFrame,
-      probeIdCol: String, probeCol: String, k: Int, nProbe: Int,
-      tsMillis: Long): DataFrame = {
-    val (cents, asg) = loadIvfAsOf(spark, root, tsMillis)
-    Ivf.searchBatch(emb, asg, cents, idCol, embCol,
-      probes, probeIdCol, probeCol, k, nProbe)
-  }
-
   def ivfListsTable(root: String): String = s"$root/ivf_lists"
 
   /** Freshness stamp for the derived inverted-list layout: binds the
@@ -1197,7 +1292,7 @@ object AnnIndex {
     * table is derived, not truth: `ivf_assignments` (id-keyed, O(delta)
     * MoR maintenance) stays authoritative, and the lists commit stamps
     * the (assignments version, corpus version, corpus manifest
-    * fingerprint) it derives from — [[searchIvfCommitted]] serves from
+    * fingerprint) it derives from — [[serve]] reads
     * it ONLY while that stamp matches, else falls back to the join
     * plan, so staleness can never serve wrong rows. Refreshing is
     * O(delta) since r14 ([[tryIncrementalIvfLists]]): only the files
@@ -1434,8 +1529,8 @@ object AnnIndex {
 
   /** Freshness report for the derived lists layout vs a corpus table —
     * the `ann_stats` surface behind "is my serving still file-pruned?".
-    * [[searchIvfCommitted]] silently (and correctly) falls back to the
-    * join plan the moment the stamp goes stale; without this an
+    * [[serve]] silently (and correctly) falls back to the join plan
+    * the moment the stamp goes stale; without this an
     * operator could lose the nProbe/k I/O promise for days and only
     * discover it by reading executed plans. SEMANTICS (r14): fresh
     * means the layout's ROWS still match the stamped derivation — a
@@ -1460,86 +1555,32 @@ object AnnIndex {
         .map(_.group(1).toLong).getOrElse(-1L)
     val cv = Versioned.latestVersion(spark, corpusTable)
     val fresh = lv > 0L && cv > 0L &&
-      freshLists(spark, root, corpusTable, cv).isDefined
+      freshLists(spark, root, corpusTable, cv, AnnPin.Latest).isDefined
     Map(
       "ivf_lists_fresh" -> (if (fresh) 1L else 0L),
       "ivf_lists_stamped_assignments_version" -> stamped)
   }
 
-  /** The fresh lists layout for (root, corpus identity), or None when
-    * absent/stale — the routing decision is three metadata reads. */
+  /** The lists layout that was fresh at `pin` for the corpus identity
+    * (table, `cv`), paired with the pin-resolved centroids — Some only
+    * when a layout commit existed at the pin AND its stamp names exactly
+    * the pin-resolved assignments generation and that corpus identity;
+    * anything else (no layout yet, or one already stale then) sends the
+    * serve to the join plan, never to stale or wrong-era files. Three
+    * metadata reads. */
   private def freshLists(spark: SparkSession, root: String,
-      corpusTable: String, cv: Long): Option[DataFrame] = {
-    val (aT, lT) = (ivfAssignmentsTable(root), ivfListsTable(root))
-    val lv = Versioned.latestVersion(spark, lT)
-    if (lv == 0L) return None
-    val av = Versioned.latestVersion(spark, aT)
-    if (av == 0L) return None
-    val cfp = Versioned.manifestFingerprint(spark, corpusTable, cv)
-    if (effectiveLayoutStamp(spark, lT, lv)
-        .contains(listsTxn(av, Versioned.manifestFingerprint(spark, aT, av),
-          corpusTable, cv, cfp)))
-      Some(VersionedScan.read(spark, lT, lv))
-    else None
-  }
-
-  /** The lists layout that was FRESH AT `tsMillis` for the
-    * same-instant corpus identity, paired with the same-instant
-    * centroids — Some only when a layout commit existed at the instant
-    * AND its stamp names exactly the as-of-resolved (assignments,
-    * corpus) versions; anything else (no layout yet, or one that was
-    * already stale then) sends the historical serve to the join plan,
-    * never to wrong-era files. */
-  private def freshListsAsOf(spark: SparkSession, root: String,
       corpusTable: String, cv: Long,
-      tsMillis: Long): Option[(DataFrame, DataFrame)] = {
+      pin: AnnPin): Option[(DataFrame, DataFrame)] = scala.util.Try {
     val (cT, aT, lT) =
       (ivfCentroidsTable(root), ivfAssignmentsTable(root), ivfListsTable(root))
-    if (Versioned.latestVersion(spark, lT) == 0L) return None
-    // snapshotAsOf throws for an instant before the table's first
-    // commit — "no layout existed then" is a fallback, not an error
-    scala.util.Try {
-      val ls = Versioned.snapshotAsOf(spark, lT, tsMillis)
-      val av = Versioned.snapshotAsOf(spark, aT, tsMillis).version
-      val cfp = Versioned.manifestFingerprint(spark, corpusTable, cv)
-      if (effectiveLayoutStamp(spark, lT, ls.version).contains(listsTxn(av,
-          Versioned.manifestFingerprint(spark, aT, av),
-          corpusTable, cv, cfp)))
-        Some((VersionedScan.read(spark, cT,
-            Versioned.snapshotAsOf(spark, cT, tsMillis).version),
-          VersionedScan.read(spark, lT, ls.version)))
-      else None
-    }.toOption.flatten
-  }
-
-  /** [[searchIvf]] for a COMMITTED corpus named by table + version:
-    * when the derived lists layout is fresh the candidate scan
-    * manifest-prunes to the probe's nProbe lists (~nProbe/k of the
-    * files — the IVF promise at the I/O level), else the join plan
-    * serves identically. Results are exactly [[Ivf.search]]'s either
-    * way (same routing order, same exact rerank, same ties — pinned in
-    * AnnIndexSpec). */
-  def searchIvfCommitted(spark: SparkSession, root: String,
-      corpusTable: String, idCol: String, embCol: String,
-      probeDf: DataFrame, probeCol: String, k: Int, nProbe: Int,
-      corpusVersion: Long = -1L,
-      allowed: Option[DataFrame] = None): DataFrame = {
-    import graft.functions.{vec_cosine_sim, vec_l2}
-    val cv = if (corpusVersion > 0) corpusVersion
-      else Versioned.latestVersion(spark, corpusTable)
-    require(cv > 0, s"searchIvfCommitted: $corpusTable has no commits")
-    freshLists(spark, root, corpusTable, cv) match {
-      case Some(lists) =>
-        ivfListsServeSingle(
-          VersionedScan.read(spark, ivfCentroidsTable(root)), lists,
-          idCol, embCol, probeDf, probeCol, k, nProbe, allowed)
-      case None =>
-        searchIvf(spark, root,
-          restrict(VersionedScan.read(spark, corpusTable, cv), idCol,
-            allowed),
-          idCol, embCol, probeDf, probeCol, k, nProbe)
-    }
-  }
+    val lv = versionAt(spark, lT, pin)
+    val av = if (lv == 0L) 0L else versionAt(spark, aT, pin)
+    if (av > 0L && effectiveLayoutStamp(spark, lT, lv).contains(listsTxn(av,
+        Versioned.manifestFingerprint(spark, aT, av), corpusTable, cv,
+        Versioned.manifestFingerprint(spark, corpusTable, cv))))
+      Some((readAt(spark, cT, pin), VersionedScan.read(spark, lT, lv)))
+    else None
+  }.toOption.flatten
 
   /** The corpus view a FILTERED search ranks within: the s13
     * prefiltered composition — membership is exact (only matching rows
@@ -1552,188 +1593,44 @@ object AnnIndex {
     allowed.map(a =>
       df.join(a.select(col(idCol)), Seq(idCol), "left_semi")).getOrElse(df)
 
-  /** [[searchIvfCommitted]] with corpus, index artifacts AND the lists
-    * layout all resolved AS OF `tsMillis`: when a layout commit that
-    * was FRESH AT the instant exists (its stamp names exactly the
-    * same-instant (assignments, corpus) identity), the historical
-    * candidate scan file-prunes to the probed lists too — "re-run last
-    * week's retrieval" keeps last week's I/O profile; else the join
-    * plan serves identically. */
-  def searchIvfCommittedAsOf(spark: SparkSession, root: String,
-      corpusTable: String, idCol: String, embCol: String,
-      probeDf: DataFrame, probeCol: String, k: Int, nProbe: Int,
-      tsMillis: Long, allowed: Option[DataFrame] = None): DataFrame = {
-    val cv = Versioned.snapshotAsOf(spark, corpusTable, tsMillis).version
-    freshListsAsOf(spark, root, corpusTable, cv, tsMillis) match {
-      case Some((cents, lists)) =>
-        ivfListsServeSingle(cents, lists, idCol, embCol,
-          probeDf, probeCol, k, nProbe, allowed)
-      case None =>
-        searchIvfAsOf(spark, root,
-          restrict(VersionedScan.read(spark, corpusTable, cv), idCol,
-            allowed),
-          idCol, embCol, probeDf, probeCol, k, nProbe, tsMillis)
-    }
-  }
-
-  /** The pruned single-probe serve over a fresh lists layout — shared
-    * by the current and AS-OF committed forms. Routing collects nProbe
-    * list ids (k-row ranking — driver cost is the probe batch, never
-    * the corpus) so the scan carries LITERAL cid predicates: that is
-    * what lets the manifest prune files — a join could not. */
-  private def ivfListsServeSingle(cents: DataFrame, lists: DataFrame,
-      idCol: String, embCol: String, probeDf: DataFrame, probeCol: String,
-      k: Int, nProbe: Int, allowed: Option[DataFrame] = None): DataFrame = {
-    import graft.functions.{vec_cosine_sim, vec_l2}
-    val probe = probeDf.select(col(probeCol).as("__probe"))
-    val chosen = broadcast(cents).crossJoin(broadcast(probe))
-      .select(col("cid"),
-        vec_l2(col("centroid"), col("__probe")).as("cdist"))
-      .orderBy(col("cdist"), col("cid")).limit(nProbe)
-      .select("cid").collect().map(_.getLong(0)).toSeq
-    // the filter semi-joins the PRUNED candidate scan (nProbe/k of the
-    // files), never the whole layout — prefilter semantics on the
-    // pruned plan
-    val scanned =
-      restrict(lists.filter(col("cid").isin(chosen: _*)), idCol, allowed)
-    val scored = scanned
-      .crossJoin(broadcast(probe))
-      .select(col(idCol),
-        vec_cosine_sim(col(embCol), col("__probe")).as("score"))
-    // a SPILLED layout (spl marker) holds boundary vectors in both
-    // their lists' files — when both are probed the same id scans
-    // twice, so dedup before the top-k. Dedup AFTER scoring: the
-    // copies are byte-identical rows, so their scores are equal
-    // doubles and (id, score) distinct collapses them in a
-    // HashAggregate — deduping the (id, embedding) pairs instead
-    // would sort-aggregate (arrays are not hash-aggregable). Plain
-    // layouts keep the exact r15 plan, no extra exchange.
-    (if (lists.columns.contains("spl")) scored.distinct() else scored)
-      .orderBy(desc("score"), col(idCol))
-      .limit(k)
-  }
-
-  /** The batch serving routes' probe-id contract: integral only (the
-    * internal long widen must be lossless, and the result schema
-    * byte-identical whichever route freshness picks — a non-integral
-    * id would silently cast to NULL and collapse every probe into one
-    * rerank partition on the pruned route only). Returns the column's
-    * type so the route can cast back at the end. */
-  private def requireIntegralPid(probes: DataFrame, probeIdCol: String,
-      what: String): org.apache.spark.sql.types.DataType = {
-    import org.apache.spark.sql.types.{ByteType, DataType, IntegerType,
-      LongType, ShortType}
-    val pidType = probes.schema(probeIdCol).dataType
-    require(Set[DataType](ByteType, ShortType, IntegerType,
-      LongType)(pidType),
-      s"$what: probe id column '$probeIdCol' must be integral, " +
-        s"got ${pidType.simpleString}")
-    pidType
-  }
-
-  /** [[searchIvfBatch]]'s committed-corpus twin — per-probe routing
-    * collected driver-side (probes × nProbe pairs), ONE stats-pruned
-    * scan over the union of chosen lists, candidates fanned to their
-    * probes by a broadcast join, per-probe PARTITIONED-window rerank. */
-  def searchIvfBatchCommitted(spark: SparkSession, root: String,
-      corpusTable: String, idCol: String, embCol: String,
-      probes: DataFrame, probeIdCol: String, probeCol: String,
-      k: Int, nProbe: Int, corpusVersion: Long = -1L,
-      allowed: Option[DataFrame] = None): DataFrame = {
-    // integral probe ids only — validated BEFORE the route split, so a
-    // bad id column fails loudly on both routes
-    require(probeIdCol != idCol,
-      s"probe id column '$probeIdCol' must differ from the corpus id " +
-        "column — both appear in the result")
-    val pidType = requireIntegralPid(probes, probeIdCol,
-      "searchIvfBatchCommitted")
-    val cv = if (corpusVersion > 0) corpusVersion
-      else Versioned.latestVersion(spark, corpusTable)
-    require(cv > 0, s"searchIvfBatchCommitted: $corpusTable has no commits")
-    freshLists(spark, root, corpusTable, cv) match {
-      case Some(lists) =>
-        ivfListsServeBatch(
-          VersionedScan.read(spark, ivfCentroidsTable(root)), lists,
-          idCol, embCol, probes, probeIdCol, probeCol, pidType, k, nProbe,
-          allowed)
-      case None =>
-        searchIvfBatch(spark, root,
-          restrict(VersionedScan.read(spark, corpusTable, cv), idCol,
-            allowed),
-          idCol, embCol, probes, probeIdCol, probeCol, k, nProbe)
-    }
-  }
-
-  /** [[searchIvfBatchCommitted]]'s historical twin — same AS-OF layout
-    * resolution as [[searchIvfCommittedAsOf]], so a batched historical
-    * serve keeps the file-pruned candidate scan when a fresh-at-that-
-    * instant layout exists. */
-  def searchIvfBatchCommittedAsOf(spark: SparkSession, root: String,
-      corpusTable: String, idCol: String, embCol: String,
-      probes: DataFrame, probeIdCol: String, probeCol: String,
-      k: Int, nProbe: Int, tsMillis: Long,
-      allowed: Option[DataFrame] = None): DataFrame = {
-    require(probeIdCol != idCol,
-      s"probe id column '$probeIdCol' must differ from the corpus id " +
-        "column — both appear in the result")
-    val pidType = requireIntegralPid(probes, probeIdCol,
-      "searchIvfBatchCommittedAsOf")
-    val cv = Versioned.snapshotAsOf(spark, corpusTable, tsMillis).version
-    freshListsAsOf(spark, root, corpusTable, cv, tsMillis) match {
-      case Some((cents, lists)) =>
-        ivfListsServeBatch(cents, lists, idCol, embCol,
-          probes, probeIdCol, probeCol, pidType, k, nProbe, allowed)
-      case None =>
-        searchIvfBatchAsOf(spark, root,
-          restrict(VersionedScan.read(spark, corpusTable, cv), idCol,
-            allowed),
-          idCol, embCol, probes, probeIdCol, probeCol, k, nProbe, tsMillis)
-    }
-  }
-
-  /** The pruned batch serve over a fresh lists layout — per-probe
-    * routing collected driver-side (probes × nProbe pairs), ONE
-    * stats-pruned scan over the union of chosen lists, candidates
+  /** The pruned serve over a fresh lists layout — per-probe routing
+    * collected driver-side (probes × nProbe pairs) so the scan carries
+    * LITERAL cid predicates the manifest prunes on (a join could not):
+    * ONE stats-pruned scan over the union of chosen lists, candidates
     * fanned to their probes by a broadcast join, per-probe
-    * PARTITIONED-window rerank. The long widen of the (validated
-    * integral) probe id is cast BACK at the end, so lists and
-    * join-plan serving return byte-identical schemas whichever route
-    * freshness picks. */
-  private def ivfListsServeBatch(cents: DataFrame, lists: DataFrame,
-      idCol: String, embCol: String, probes: DataFrame,
-      probeIdCol: String, probeCol: String,
-      pidType: org.apache.spark.sql.types.DataType,
-      k: Int, nProbe: Int, allowed: Option[DataFrame] = None): DataFrame = {
+    * rerank ([[Pq.topPerProbe]]: a sorted limit for a `single` probe).
+    * `p` is (__pid, __probe); returns (__pid, idCol, score). */
+  private def ivfListsServe(cents: DataFrame, lists: DataFrame,
+      idCol: String, embCol: String, p: DataFrame, single: Boolean, k: Int,
+      nProbe: Int, allowed: Option[DataFrame]): DataFrame = {
     import graft.functions.vec_cosine_sim
-    import org.apache.spark.sql.expressions.Window
-    val spark = probes.sparkSession
+    val spark = p.sparkSession
     import spark.implicits._
-    val p = probes.select(col(probeIdCol).cast("long").as("__pid"),
-      col(probeCol).as("__probe"))
     // ONE routing implementation across the ivf and pq tiers
     // (Pq.probeLists) — the collect is probes × nProbe, driver-bounded
-    val pairs = Pq.probeLists(cents, p, nProbe)
+    val pairs = Pq.probeLists(cents, p, nProbe, single)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val chosen = pairs.map(_._2).distinct
-    val w = Window.partitionBy("__pid").orderBy(desc("score"), col(idCol))
-    val scored =
+    // the filter semi-joins the PRUNED candidate scan, never the whole
+    // layout — prefilter semantics on the pruned plan
+    val cand =
       restrict(lists.filter(col("cid").isin(chosen: _*)), idCol, allowed)
-        .join(broadcast(pairs.toDF("__pid", "cid")), "cid")
+    // one probe owns every chosen list: no fan-out join to plan
+    val fanned =
+      if (single) cand.crossJoin(broadcast(p))
+      else cand.join(broadcast(pairs.toDF("__pid", "cid")), "cid")
         .join(broadcast(p), "__pid")
-        .select(col("__pid"), col(idCol),
-          vec_cosine_sim(col(embCol), col("__probe")).as("score"))
+    val scored = fanned.select(col("__pid"), col(idCol),
+      vec_cosine_sim(col(embCol), col("__probe")).as("score"))
     // spilled layouts dedup per (probe, id) before the rerank — a
     // boundary vector in two of one probe's lists must score once.
     // Dedup AFTER scoring (the copies are byte-identical, scores are
     // equal doubles): (pid, id, score) distinct hash-aggregates where
     // an (pid, id, embedding) dedup would sort-aggregate. Plain
     // layouts keep the exact r15 plan.
-    (if (lists.columns.contains("spl")) scored.distinct() else scored)
-      .withColumn("__rk", row_number().over(w))
-      .filter(col("__rk") <= k).drop("__rk")
-      .select(col("__pid").cast(pidType).as(probeIdCol), col(idCol),
-        col("score"))
-      .orderBy(col(probeIdCol), desc("score"), col(idCol))
+    Pq.topPerProbe(
+      if (lists.columns.contains("spl")) scored.distinct() else scored,
+      single, k, desc("score"), col(idCol))
   }
 
   /** The pq rerank-pool a width knob implies — ONE formula shared by
@@ -1744,13 +1641,6 @@ object AnnIndex {
     * binds before ADC quality once routing widens). */
   def pqRerankPool(k: Int, width: Int): Int =
     math.max(math.max(64, 8 * k), 8 * width)
-
-  /** Subspace count the committed codebooks were trained with — the
-    * authoritative `m` for every later encode/search (a caller-supplied
-    * m that drifted from the training-time value would silently split
-    * delta vectors into incomparable subspaces). */
-  private def codebookM(books: DataFrame): Int =
-    books.agg(max(col("sub"))).head().getAs[Number](0).intValue + 1
 
   /** (trained m, centroid lengths uniform?) memoized per (books
     * table, version, manifest fingerprint) — [[residualStampMemo]]'s
@@ -2037,7 +1927,7 @@ object AnnIndex {
       val books = VersionedScan.read(spark, bT)
       requireResidualCoherent(spark, root, books,
         Versioned.latestVersion(spark, ivfT), "ensurePq")
-      // trainedM, not bare codebookM: books trained THIS call are
+      // trainedM, not bare max(sub)+1: books trained THIS call are
       // uniform by construction, but a stranded RAW legacy book (torn
       // pre-r15 bootstrap, no residual stamp to trigger the repair
       // above) could be ragged — refuse with the retrain remedy
@@ -2073,62 +1963,23 @@ object AnnIndex {
     (VersionedScan.read(spark, pqCodebooksTable(root)),
       VersionedScan.read(spark, pqCodesTable(root)))
 
-  /** [[loadPq]] + the residual coherence gate every pq SERVING path
-    * rides: residual codes against a retrained-but-unhealed centroids
-    * generation refuse loudly instead of ranking through the wrong
-    * coarse space. Raw indexes pass untouched. */
-  private def loadPqChecked(spark: SparkSession,
-      root: String): (DataFrame, DataFrame, Long) = {
+  /** The pin-resolved PQ serving artifacts (codebooks, codes, trained
+    * m) behind the residual coherence gate every pq serve rides: residual
+    * codes stamped to a centroids generation other than the one the pin
+    * resolves (a retrained-but-unhealed chain, or a historical instant
+    * inside one) refuse loudly instead of ranking through the wrong
+    * coarse space. Raw indexes pass untouched. The subspace count is the
+    * TRAINED one — codes are only comparable under it. */
+  private def pqArtifacts(spark: SparkSession, root: String,
+      pin: AnnPin): (DataFrame, DataFrame, Int) = {
     val bT = pqCodebooksTable(root)
-    val bv = Versioned.latestVersion(spark, bT)
-    val (books, codes) = loadPq(spark, root)
+    val bv = versionAt(spark, bT, pin)
+    val books = VersionedScan.read(spark, bT, bv)
+    val codes = readAt(spark, pqCodesTable(root), pin)
     requireCoherentStamp(spark, root,
       residualStampCached(spark, bT, bv, books),
-      Versioned.latestVersion(spark, ivfCentroidsTable(root)), "pq serving")
-    (books, codes, bv)
-  }
-
-  /** [[loadPqAsOf]] + the same coherence gate against the SAME-INSTANT
-    * centroids generation: a historical serve is coherent iff the
-    * books' stamp names the centroids current at that instant. */
-  private def loadPqAsOfChecked(spark: SparkSession, root: String,
-      tsMillis: Long): (DataFrame, DataFrame, Long) = {
-    val bT = pqCodebooksTable(root)
-    val bv = Versioned.snapshotAsOf(spark, bT, tsMillis).version
-    val (books, codes) = loadPqAsOf(spark, root, tsMillis)
-    requireCoherentStamp(spark, root,
-      residualStampCached(spark, bT, bv, books),
-      Versioned.snapshotAsOf(spark, ivfCentroidsTable(root),
-        tsMillis).version, "pq serving (AS OF)")
-    (books, codes, bv)
-  }
-
-  /** TIME-TRAVEL load of the committed PQ index — [[loadIvfAsOf]]'s
-    * quantized twin: codebooks + codes resolve to the versions current
-    * AT `tsMillis`. */
-  def loadPqAsOf(spark: SparkSession, root: String,
-      tsMillis: Long): (DataFrame, DataFrame) = {
-    val (bT, cT) = (pqCodebooksTable(root), pqCodesTable(root))
-    (VersionedScan.read(spark, bT,
-        Versioned.snapshotAsOf(spark, bT, tsMillis).version),
-      VersionedScan.read(spark, cT,
-        Versioned.snapshotAsOf(spark, cT, tsMillis).version))
-  }
-
-  /** [[Pq.searchIvfPq]] over ALL FOUR artifacts AS OF `tsMillis` —
-    * historical serving on the quantized tier: IVF routing and PQ
-    * codes both pin to the instant, so "re-run last week's retrieval
-    * EXACTLY" holds for the billion-scale layout too (the caller
-    * supplies the same-instant corpus view to rerank against,
-    * normally `graft_table(path, TIMESTAMP ...)`). Costs the same as
-    * serving current: version resolution is metadata-only. */
-  def searchIvfPqAsOf(spark: SparkSession, root: String, emb: DataFrame,
-      idCol: String, embCol: String, probeDf: DataFrame, probeCol: String,
-      k: Int, nProbe: Int, pool: Int, tsMillis: Long): DataFrame = {
-    val (cents, asg) = loadIvfAsOf(spark, root, tsMillis)
-    val (books, codes, bv) = loadPqAsOfChecked(spark, root, tsMillis)
-    Pq.searchIvfPq(emb, asg, cents, codes, books, idCol, embCol,
-      probeDf, probeCol, trainedM(spark, root, books, bv), k, nProbe, pool)
+      versionAt(spark, ivfCentroidsTable(root), pin), "pq serving")
+    (books, codes, trainedM(spark, root, books, bv))
   }
 
   def nswEdgesTable(root: String): String = s"$root/nsw_edges"
@@ -2702,52 +2553,6 @@ object AnnIndex {
       nodes: Array[(Long, Array[Float], Long)]): Long =
     pairsFingerprint(nodes.iterator.map(n => (n._1, n._3)))
 
-  /** Scatter-gather top-k for a PROBE SET over the COMMITTED per-shard
-    * graphs — the serving path a retrieval session should call. The
-    * corpus+edges cogroup runs ONCE for the whole set (not once per
-    * probe), each shard's graph is reconstructed at most once per job
-    * — and not at all when [[shardGraphs]] already holds it from a
-    * previous search at the same (index, corpus) state — and every
-    * probe beam-searches the in-memory graph. Probes are a
-    * serving-API argument (a session's question batch): they collect
-    * to the driver and broadcast, bounded by the batch size, never by
-    * the corpus. An EXPLICIT `ef` (> 0) sets the SEARCH beam to
-    * max(ef, k) — a serve-time recall/latency choice on the frozen
-    * graph, independent of the committed construction beam; left
-    * unset (<= 0, the default) the serve uses the stored build beam,
-    * so an index built wide keeps its recall through default doors.
-    * Graph structure always follows the committed parameters
-    * (m/ef/shards arguments are the legacy-table fallback only).
-    * Returns one row per (probe, neighbor): (probeIdCol, idCol, cos),
-    * top-k per probe by (cos desc, id). */
-  def searchNswBatch(spark: SparkSession, root: String, emb: DataFrame,
-      idCol: String, embCol: String, probeDf: DataFrame,
-      probeIdCol: String, probeCol: String, k: Int,
-      m: Int = 8, ef: Int = -1, shards: Int = 4): DataFrame =
-    searchNswBatchAt(spark, root, emb, idCol, embCol, probeDf,
-      probeIdCol, probeCol, k, m, ef, shards,
-      Versioned.latestVersion(spark, nswEdgesTable(root)))
-
-  /** [[searchNswBatch]] over the edge table AS OF `tsMillis` —
-    * historical graph serving ([[loadIvfAsOf]]'s HNSW twin): the
-    * committed adjacency resolves to the version current at the
-    * instant and reconstructs exactly the graph that generation built
-    * (the serve cache keys on (version, manifest fingerprint, shard
-    * content), so historical and current serves cache independently).
-    * Pair with the same-instant corpus snapshot: the graph's markers
-    * prove which (id, vh) set it was built over, and a caller corpus
-    * that drifted from it simply rebuilds per job (the legacy-table
-    * rule) instead of serving a hybrid. */
-  def searchNswBatchAsOf(spark: SparkSession, root: String, emb: DataFrame,
-      idCol: String, embCol: String, probeDf: DataFrame,
-      probeIdCol: String, probeCol: String, k: Int,
-      tsMillis: Long, ef: Int = -1): DataFrame = {
-    val eT = nswEdgesTable(root)
-    searchNswBatchAt(spark, root, emb, idCol, embCol, probeDf,
-      probeIdCol, probeCol, k, 8, ef, 4,
-      Versioned.snapshotAsOf(spark, eT, tsMillis).version)
-  }
-
   /** Non-empty shard ids of a committed corpus version under a shard
     * count — memoized per (table, version, manifest fingerprint,
     * shards): the ONE id-column-only scan a corpus version ever pays
@@ -2766,47 +2571,19 @@ object AnnIndex {
       (0x636f6d6d69747464L ^ table.hashCode.toLong, cv),
       (cfp, gshards.toLong)))
 
-  /** [[searchNswBatch]] for a COMMITTED corpus, named by table +
-    * version instead of an arbitrary DataFrame — the form a serving
-    * session (and the SQL door) should use. Because the corpus is a
-    * pinned immutable snapshot, consistency needs NO row hashing: the
-    * (table, version, manifest fingerprint) identity keys the graph
-    * cache, so a WARM serve costs zero corpus I/O — probes beam-search
-    * the resident graphs directly (the 2.2M rehearsal's 16 B/row light
-    * pass drops to nothing; at 100 TB the warm serve cost is
-    * independent of corpus size). A cold serve pays one id-column scan
-    * (the memoized shard list) + the reconstruction cogroup, exactly
-    * like the frame form. `corpusVersion <= 0` = latest, resolved ONCE
-    * so the probe fetch and the serve read the same snapshot. */
-  def searchNswBatchCommitted(spark: SparkSession, root: String,
-      corpusTable: String, idCol: String, embCol: String,
-      probeDf: DataFrame, probeIdCol: String, probeCol: String, k: Int,
-      corpusVersion: Long = -1L, ef: Int = -1): DataFrame =
-    searchNswBatchCommittedAt(spark, root, corpusTable, idCol, embCol,
-      probeDf, probeIdCol, probeCol, k, corpusVersion,
-      Versioned.latestVersion(spark, nswEdgesTable(root)), ef)
-
-  /** [[searchNswBatchCommitted]] with BOTH the edge table and the
-    * corpus resolved AS OF `tsMillis` — the zero-I/O-when-warm form of
-    * [[searchNswBatchAsOf]]. */
-  def searchNswBatchCommittedAsOf(spark: SparkSession, root: String,
-      corpusTable: String, idCol: String, embCol: String,
-      probeDf: DataFrame, probeIdCol: String, probeCol: String, k: Int,
-      tsMillis: Long, ef: Int = -1): DataFrame =
-    searchNswBatchCommittedAt(spark, root, corpusTable, idCol, embCol,
-      probeDf, probeIdCol, probeCol, k,
-      Versioned.snapshotAsOf(spark, corpusTable, tsMillis).version,
-      Versioned.snapshotAsOf(spark, nswEdgesTable(root), tsMillis).version,
-      ef)
-
-  private def searchNswBatchCommittedAt(spark: SparkSession, root: String,
-      corpusTable: String, idCol: String, embCol: String,
-      probeDf: DataFrame, probeIdCol: String, probeCol: String, k: Int,
-      corpusVersion: Long, ev: Long, ef: Int = -1): DataFrame = {
-    val cv = if (corpusVersion > 0) corpusVersion
-      else Versioned.latestVersion(spark, corpusTable)
-    require(cv > 0, s"searchNswBatchCommitted: $corpusTable has no commits")
-    val emb = VersionedScan.read(spark, corpusTable, cv)
+  /** [[nswServe]] for a COMMITTED corpus (`emb` is `corpusTable` at
+    * `cv`). Because the corpus is a pinned immutable snapshot,
+    * consistency needs NO row hashing: the (table, version, manifest
+    * fingerprint) identity keys the graph cache, so a WARM serve costs
+    * zero corpus I/O — probes beam-search the resident graphs directly
+    * (the 2.2M rehearsal's 16 B/row light pass drops to nothing; at
+    * 100 TB the warm serve cost is independent of corpus size). A cold
+    * serve pays one id-column scan (the memoized shard list) + the
+    * reconstruction cogroup, exactly like the frame form. */
+  private def nswCommittedServe(spark: SparkSession, root: String,
+      corpusTable: String, cv: Long, emb: DataFrame, idCol: String,
+      embCol: String, p: DataFrame, k: Int, ef: Option[Int],
+      ev: Long): DataFrame = {
     val eT = nswEdgesTable(root)
     val params =
       if (ev > 0) storedNswParams(spark, eT, ev,
@@ -2824,8 +2601,7 @@ object AnnIndex {
           committedShardSets.put(ssKey, v)
           v
         }
-        searchNswBatchAt(spark, root, emb, idCol, embCol, probeDf,
-          probeIdCol, probeCol, k, 8, ef, gshards, ev,
+        nswServe(spark, root, emb, idCol, embCol, p, k, ef, ev,
           identity = Some(corpusIdentityKey(corpusTable, cv, cfp, gshards)),
           knownShards = Some(shardsOf),
           layout = freshNswLayout(spark, root, corpusTable, cv, gshards,
@@ -2833,43 +2609,56 @@ object AnnIndex {
       case None =>
         // legacy table (or no index yet — let the frame path produce
         // its usual diagnostics): never cached, identity buys nothing
-        searchNswBatchAt(spark, root, emb, idCol, embCol, probeDf,
-          probeIdCol, probeCol, k, 8, ef, 4, ev)
+        nswServe(spark, root, emb, idCol, embCol, p, k, ef, ev)
     }
   }
 
-  private def searchNswBatchAt(spark: SparkSession, root: String,
-      emb: DataFrame, idCol: String, embCol: String, probeDf: DataFrame,
-      probeIdCol: String, probeCol: String, k: Int,
-      m: Int, ef: Int, shards: Int, ev: Long,
+  /** Scatter-gather top-k for a probe set `p` (__pid, __probe) over the
+    * committed per-shard graphs at edge-table version `ev` (a historical
+    * `ev` reconstructs exactly the graph that generation built; the
+    * cache keys on (version, manifest fingerprint, shard content), so
+    * historical and current serves cache independently). The
+    * corpus+edges cogroup runs ONCE for the whole set, each shard's
+    * graph is reconstructed at most once per job — and not at all when
+    * [[shardGraphs]] already holds it from a previous serve at the same
+    * (index, corpus) state — and every probe beam-searches the
+    * in-memory graph. Probes collect to the driver and broadcast,
+    * bounded by the batch size, never by the corpus. Graph structure
+    * always follows the committed parameters (a pre-params legacy table
+    * falls back to the historical defaults m = 8, ef = 32, 4 shards).
+    * Returns (__pid, idCol, score), top-k per probe by (score desc,
+    * id). */
+  private def nswServe(spark: SparkSession, root: String,
+      emb: DataFrame, idCol: String, embCol: String, p: DataFrame, k: Int,
+      ef: Option[Int], ev: Long,
       identity: Option[Long] = None,
       knownShards: Option[Array[Long]] = None,
       layout: Option[DataFrame] = None): DataFrame = {
     import spark.implicits._
-    require(probeIdCol != idCol,
-      s"probe id column '$probeIdCol' must differ from the corpus id " +
-        "column — both appear in the result")
     val eT = nswEdgesTable(root)
     val edges = VersionedScan.read(spark, eT, ev)
     val (params, fp) = storedNswParamsFp(spark, eT, ev, edges)
-    val (gm, gef, gshards) =
-      params.getOrElse((m, if (ef > 0) ef else 32, shards))
-    val probes = probeDf
-      .select(col(probeIdCol).cast("long"), col(probeCol).cast("array<float>"))
+    val (gm, gef, gshards) = params.getOrElse((8, ef.getOrElse(32), 4))
+    val probes = p
+      .select(col("__pid"), col("__probe").cast("array<float>"))
       .as[(Long, Array[Float])].collect()
-    require(probes.nonEmpty, "searchNswBatch: empty probe set")
+    require(probes.nonEmpty, "AnnIndex.serve: empty probe set")
+    // per-probe global top-k over the per-shard candidates — the shared
+    // tail of every serve path below
+    def topK(local: DataFrame): DataFrame = Pq.topPerProbe(local,
+      probes.length == 1, k, desc("score"), col(idCol))
     val bc = spark.sparkContext.broadcast(probes)
     // driver-registered, task-incremented: the adds ride back with
     // task completion, so ann_stats aggregates across executors
     val (buildsAcc, hitsAcc) = accumsFor(spark.sparkContext)
-    // the SEARCH beam: an EXPLICIT ef (> 0) is the caller's serve-time
+    // the SEARCH beam: an EXPLICIT ef is the caller's serve-time
     // choice, floored at k only (a beam narrower than the result
     // cannot fill it) — callers trade recall for latency downward as
-    // well as upward; UNSET (<= 0, the doors' default) serves at the
-    // stored construction beam, so an index deliberately built with a
-    // large ef keeps its recall through default-serving doors instead
-    // of silently dropping to a fixed 32
-    val beam = if (ef > 0) math.max(ef, k) else math.max(gef, k)
+    // well as upward; UNSET serves at the stored construction beam, so
+    // an index deliberately built with a large ef keeps its recall
+    // through default-serving doors instead of silently dropping to a
+    // fixed 32
+    val beam = math.max(ef.getOrElse(gef), k)
     val verified = params.isDefined
     // one tiny task per entry, executor-local cache lookup; None
     // reported on ANY miss so the caller can fall back — never a
@@ -2934,7 +2723,7 @@ object AnnIndex {
             NswAnn.searchLocal(g, vecs, pv, beam, cnt)
               .take(k).map { case (i, cos) => (pid, cn(i)._1, cos) }
           }
-      }.toDF(probeIdCol, idCol, "cos")
+      }.toDF("__pid", idCol, "score")
     // the driver fast path can be disabled by conf — the multi-JVM
     // SIMULATION hook: a 100-executor cluster is exactly a session
     // where this JVM's map is empty while executor caches are warm,
@@ -3007,9 +2796,8 @@ object AnnIndex {
       }
       if (light.nonEmpty && missing.isEmpty) {
         serveFromCache(light) match {
-          case Some(rows) => return perProbeTopK(
-            spark.createDataset(rows).toDF(probeIdCol, idCol, "cos"),
-            probeIdCol, idCol, k)
+          case Some(rows) => return topK(
+            spark.createDataset(rows).toDF("__pid", idCol, "score"))
           case None => () // raced a SoftReference shed — full path below
         }
       } else if (resident.nonEmpty && missing.nonEmpty && layout.isDefined) {
@@ -3025,41 +2813,15 @@ object AnnIndex {
             val fetched = serveCogroup(
               layout.get.filter(col("shard").isin(missSet: _*)),
               edges.filter(col("shard").isin(missSet: _*)))
-            return perProbeTopK(
+            return topK(
               spark.createDataset(cachedRows)
-                .toDF(probeIdCol, idCol, "cos")
-                .unionByName(fetched),
-              probeIdCol, idCol, k)
+                .toDF("__pid", idCol, "score")
+                .unionByName(fetched))
           case None => () // pre-check raced — full path below
         }
       }
     }
-    perProbeTopK(serveCogroup(emb, edges), probeIdCol, idCol, k)
-  }
-
-  /** Per-probe global top-k over per-shard candidates: a PARTITIONED
-    * window (one partition per probe), never a global funnel — the
-    * shared tail of both serve paths. */
-  private def perProbeTopK(local: DataFrame, probeIdCol: String,
-      idCol: String, k: Int): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(probeIdCol).orderBy(desc("cos"), col(idCol))
-    local.withColumn("__rk", row_number().over(w))
-      .filter(col("__rk") <= k).drop("__rk")
-      .orderBy(col(probeIdCol), desc("cos"), col(idCol))
-  }
-
-  /** Single-probe convenience over [[searchNswBatch]] — one probe
-    * rides the batch path (same reconstruction cache), returning
-    * (idCol, cos) exactly as [[NswAnn.search]] does. */
-  def searchNsw(spark: SparkSession, root: String, emb: DataFrame,
-      idCol: String, embCol: String, probe: Array[Float], k: Int,
-      m: Int = 8, ef: Int = -1, shards: Int = 4): DataFrame = {
-    import spark.implicits._
-    val probeDf = Seq((0L, probe)).toDF("__probe_id", "__probe")
-    searchNswBatch(spark, root, emb, idCol, embCol, probeDf,
-      "__probe_id", "__probe", k, m, ef, shards)
-      .drop("__probe_id")
+    topK(serveCogroup(emb, edges))
   }
 
   /** Full edge set for the current corpus: per shard, resume (or
@@ -3162,209 +2924,24 @@ object AnnIndex {
     NswAnn.build(ids, nodes.map(_._2), m, ef, cnt, prefix)
   }
 
-  /** [[Pq.searchIvfPqBatch]] over the COMMITTED artifacts — the
-    * probe-SET serving path on the quantized tier (the caller's `m`
-    * is likewise ignored: codes are only comparable under their
-    * training-time subspace count). */
-  def searchIvfPqBatch(spark: SparkSession, root: String, emb: DataFrame,
-      idCol: String, embCol: String, probes: DataFrame,
-      probeIdCol: String, probeCol: String,
-      k: Int, nProbe: Int, pool: Int): DataFrame = {
-    val (cents, asg) = loadIvf(spark, root)
-    val (books, codes, bv) = loadPqChecked(spark, root)
-    Pq.searchIvfPqBatch(emb, asg, cents, codes, books, idCol, embCol,
-      probes, probeIdCol, probeCol, trainedM(spark, root, books, bv),
-      k, nProbe, pool)
-  }
-
-  /** [[searchIvfPqBatch]] over all four artifacts AS OF `tsMillis` —
-    * the quantized batch door's historical twin. */
-  def searchIvfPqBatchAsOf(spark: SparkSession, root: String,
-      emb: DataFrame, idCol: String, embCol: String, probes: DataFrame,
-      probeIdCol: String, probeCol: String,
-      k: Int, nProbe: Int, pool: Int, tsMillis: Long): DataFrame = {
-    val (cents, asg) = loadIvfAsOf(spark, root, tsMillis)
-    val (books, codes, bv) = loadPqAsOfChecked(spark, root, tsMillis)
-    Pq.searchIvfPqBatch(emb, asg, cents, codes, books, idCol, embCol,
-      probes, probeIdCol, probeCol, trainedM(spark, root, books, bv),
-      k, nProbe, pool)
-  }
-
-  /** [[Pq.searchIvfPq]] for a COMMITTED corpus — the quantized tier's
-    * committed-serving form: the ADC scan over the slim codes table is
-    * the tier's designed cost, but the FULL-PRECISION pool fetch
-    * (`corpus ⋈ pool ids`) need not scan the corpus at all — the pool
-    * ranking is collected (≤ `pool` ids, a serving-bounded action) and
-    * the fetch becomes a LITERAL id-IN scan that manifest-prunes to
-    * the files actually holding pool rows (the corpus is id-clustered
-    * by its commit key): at 100 TB the fetch touches ≤ pool files
-    * instead of every file. Results are exactly [[searchIvfPq]]'s —
-    * the collected ranking is the same `ORDER BY adist, id LIMIT pool`
-    * the in-plan form computes (pinned in AnnIndexSpec). */
-  def searchIvfPqCommitted(spark: SparkSession, root: String,
-      corpusTable: String, idCol: String, embCol: String,
-      probeDf: DataFrame, probeCol: String, k: Int, nProbe: Int,
-      pool: Int, corpusVersion: Long = -1L,
-      allowed: Option[DataFrame] = None): DataFrame = {
-    val cv = if (corpusVersion > 0) corpusVersion
-      else Versioned.latestVersion(spark, corpusTable)
-    require(cv > 0, s"searchIvfPqCommitted: $corpusTable has no commits")
-    val (cents, asg) = loadIvf(spark, root)
-    val (books, codes, bv) = loadPqChecked(spark, root)
-    ivfPqSingleLiteralized(spark, corpusTable, cv, idCol, embCol,
-      probeDf, probeCol, cents, asg, books, codes, k, nProbe, pool,
-      freshPqLists(spark, root), allowed,
-      mTrained = trainedM(spark, root, books, bv))
-  }
-
-  /** [[searchIvfPqCommitted]] with all four artifacts AND the corpus
-    * resolved AS OF `tsMillis` — historical single-probe serving on
-    * the quantized tier keeps the file-pruned pool fetch. */
-  def searchIvfPqCommittedAsOf(spark: SparkSession, root: String,
-      corpusTable: String, idCol: String, embCol: String,
-      probeDf: DataFrame, probeCol: String, k: Int, nProbe: Int,
-      pool: Int, tsMillis: Long,
-      allowed: Option[DataFrame] = None): DataFrame = {
-    val (cents, asg) = loadIvfAsOf(spark, root, tsMillis)
-    val (books, codes, bv) = loadPqAsOfChecked(spark, root, tsMillis)
-    ivfPqSingleLiteralized(spark, corpusTable,
-      Versioned.snapshotAsOf(spark, corpusTable, tsMillis).version,
-      idCol, embCol, probeDf, probeCol, cents, asg, books, codes,
-      k, nProbe, pool, freshPqListsAsOf(spark, root, tsMillis), allowed,
-      mTrained = trainedM(spark, root, books, bv))
-  }
-
-  private def ivfPqSingleLiteralized(spark: SparkSession,
-      corpusTable: String, cv: Long, idCol: String, embCol: String,
-      probeDf: DataFrame, probeCol: String,
-      cents: DataFrame, asg: DataFrame, books: DataFrame,
-      codes: DataFrame, k: Int, nProbe: Int, pool: Int,
-      pqLists: Option[DataFrame] = None,
-      allowed: Option[DataFrame] = None, mTrained: Int = -1): DataFrame = {
-    import graft.functions.{vec_cosine_sim, vec_l2}
-    val emb = VersionedScan.read(spark, corpusTable, cv)
-    val m = if (mTrained > 0) mTrained else codebookM(books)
-    val probe = probeDf.select(col(probeCol).as("__probe"))
-    // routing collects the nProbe chosen lists (k-row ranking, a
-    // serving-bounded action) so a fresh pq_lists layout can carry
-    // LITERAL cid predicates into the ADC scan
-    val chosen = broadcast(cents).crossJoin(broadcast(probe))
-      .select(col("cid"), vec_l2(col("centroid"), col("__probe")).as("cdist"))
-      .orderBy(col("cdist"), col("cid")).limit(nProbe)
-      .select("cid").collect().map(_.getLong(0)).toSeq
-    // raw codes look up one probe table keyed (sub, code); residual
-    // codes look up per-probed-list residual tables keyed by the
-    // candidate's own list id — same literal-cid pruning either way
-    val (dt, dtKeys) =
-      if (!Pq.isResidual(books))
-        (Pq.distanceTable(probe, "__probe", books, m), Seq("sub", "code"))
-      else
-        (Pq.residualTableSingle(probe, "__probe",
-          cents.filter(col("cid").isin(chosen: _*)), books, m),
-          Seq("cid", "sub", "code"))
-    // the ADC scan: the fresh cid-clustered layout manifest-prunes to
-    // the chosen lists' files (~nProbe/k of the codes); else the join
-    // form filters the same cids in-plan — identical candidates. A
-    // filter applies HERE, before the pool cut: post-pool filtering
-    // would under-fill k whenever the filter is selective (the
-    // anti-pattern FilteredAnnSpec pins)
-    val codesSrc = restrict(pqLists match {
-      case Some(pl) => pl.filter(col("cid").isin(chosen: _*))
-      case None => codes.join(asg, idCol)
-        .filter(col("cid").isin(chosen: _*))
-    }, idCol, allowed)
-    // the pool ranking collects — bounded by `pool`, never the corpus —
-    // so the fetch below carries literal id predicates the manifest
-    // can prune on. Ids are read GENERICALLY (the corpus id column may
-    // be any integral type — Pq.searchIvfPq is type-agnostic and this
-    // path must match); keeping the native values also keeps the isin
-    // literals in the column's own type, exactly what the stats prune on
-    val poolIds = codesSrc
-      .join(broadcast(dt), dtKeys)
-      .groupBy(idCol)
-      .agg(sum(col("pdist")).as("adist"))
-      .orderBy(col("adist"), col(idCol)).limit(pool)
-      .select(idCol).collect().map(_.get(0)).toSeq
-    emb.filter(col(idCol).isin(poolIds: _*))
-      .crossJoin(broadcast(probe))
-      .select(col(idCol),
-        vec_cosine_sim(col(embCol), col("__probe")).as("score"))
-      .orderBy(desc("score"), col(idCol))
-      .limit(k)
-  }
-
-  /** [[Pq.searchIvfPqBatch]] for a COMMITTED corpus — the batch twin
-    * of [[searchIvfPqCommitted]], and the close of the last
-    * corpus-scanning serving path: the per-probe pool ranking is
-    * COLLECTED (≤ probes × pool rows — the ADC scan over the slim
-    * codes table is the tier's designed cost, and the collect is
-    * bounded by the serving batch, never the corpus), so the
-    * full-precision fetch becomes ONE literal id-IN scan that
-    * manifest-prunes to the files actually holding pool rows. The
-    * in-plan form's `emb ⋈ broadcast(pooled)` read EVERY corpus file
-    * for the same ≤ probes × pool rows — at 100 TB that was a full
-    * corpus scan per question batch. Results are exactly
-    * [[Pq.searchIvfPqBatch]]'s (same ranking, same ties — pinned in
-    * AnnIndexSpec). */
-  def searchIvfPqBatchCommitted(spark: SparkSession, root: String,
-      corpusTable: String, idCol: String, embCol: String,
-      probes: DataFrame, probeIdCol: String, probeCol: String,
-      k: Int, nProbe: Int, pool: Int,
-      corpusVersion: Long = -1L,
-      allowed: Option[DataFrame] = None): DataFrame = {
-    val cv = if (corpusVersion > 0) corpusVersion
-      else Versioned.latestVersion(spark, corpusTable)
-    require(cv > 0, s"searchIvfPqBatchCommitted: $corpusTable has no commits")
-    val (cents, asg) = loadIvf(spark, root)
-    val (books, codes, bv) = loadPqChecked(spark, root)
-    ivfPqBatchLiteralized(spark, corpusTable, cv, idCol, embCol,
-      probes, probeIdCol, probeCol, cents, asg, books, codes,
-      k, nProbe, pool, freshPqLists(spark, root), allowed = allowed,
-      mTrained = trainedM(spark, root, books, bv))
-  }
-
-  /** [[searchIvfPqBatchCommitted]] with all four artifacts AND the
-    * corpus resolved AS OF `tsMillis` — historical serving keeps the
-    * file-pruned fetch: the literalized pool ids prune any pinned
-    * snapshot's manifest, current or not, so "re-run last week's
-    * question batch" costs ≤ probes × pool files too. */
-  def searchIvfPqBatchCommittedAsOf(spark: SparkSession, root: String,
-      corpusTable: String, idCol: String, embCol: String,
-      probes: DataFrame, probeIdCol: String, probeCol: String,
-      k: Int, nProbe: Int, pool: Int, tsMillis: Long,
-      allowed: Option[DataFrame] = None): DataFrame = {
-    val (cents, asg) = loadIvfAsOf(spark, root, tsMillis)
-    val (books, codes, bv) = loadPqAsOfChecked(spark, root, tsMillis)
-    ivfPqBatchLiteralized(spark, corpusTable,
-      Versioned.snapshotAsOf(spark, corpusTable, tsMillis).version,
-      idCol, embCol, probes, probeIdCol, probeCol,
-      cents, asg, books, codes, k, nProbe, pool,
-      freshPqListsAsOf(spark, root, tsMillis),
-      door = "searchIvfPqBatchCommittedAsOf", allowed = allowed,
-      mTrained = trainedM(spark, root, books, bv))
-  }
-
-  /** Shared core of the committed batch PQ forms: rank through the
-    * given artifacts, collect the bounded pool, fetch full-precision
-    * rows via a literal id-IN scan of the pinned corpus snapshot. */
-  private def ivfPqBatchLiteralized(spark: SparkSession,
-      corpusTable: String, cv: Long, idCol: String, embCol: String,
-      probes: DataFrame, probeIdCol: String, probeCol: String,
-      cents: DataFrame, asg: DataFrame, books: DataFrame,
-      codes: DataFrame, k: Int, nProbe: Int, pool: Int,
-      pqLists: Option[DataFrame] = None,
-      door: String = "searchIvfPqBatchCommitted",
-      allowed: Option[DataFrame] = None, mTrained: Int = -1): DataFrame = {
+  /** The committed pq serve (`emb` is the pinned corpus snapshot):
+    * rank through the given artifacts, COLLECT the per-probe pool
+    * ranking (≤ probes × pool rows — the ADC scan over the slim codes
+    * table is the tier's designed cost, the collect is bounded by the
+    * serving batch, never the corpus), then fetch the full-precision
+    * rows with ONE literal id-IN scan that manifest-prunes to the files
+    * actually holding pool rows (the corpus is id-clustered by its
+    * commit key) — the in-plan form's `emb ⋈ broadcast(pooled)` reads
+    * every corpus file for the same rows. Results are exactly
+    * [[Pq.searchIvfPqBatch]]'s (same ranking, same ties). `p` is
+    * (__pid, __probe); returns (__pid, idCol, score). */
+  private def ivfPqCommittedServe(emb: DataFrame, idCol: String,
+      embCol: String, p: DataFrame, single: Boolean, cents: DataFrame,
+      asg: DataFrame, books: DataFrame, codes: DataFrame, m: Int, k: Int,
+      nProbe: Int, pool: Int, pqLists: Option[DataFrame],
+      allowed: Option[DataFrame]): DataFrame = {
     import graft.functions.vec_cosine_sim
-    import org.apache.spark.sql.expressions.Window
-    require(probeIdCol != idCol,
-      s"probe id column '$probeIdCol' must differ from the corpus id " +
-        "column — both appear in the result")
-    val pidType = requireIntegralPid(probes, probeIdCol, door)
-    val emb = VersionedScan.read(spark, corpusTable, cv)
-    val m = if (mTrained > 0) mTrained else codebookM(books)
-    val p = probes.select(col(probeIdCol).cast("long").as("__pid"),
-      col(probeCol).as("__probe"))
+    val spark = p.sparkSession
     // with a fresh cid-clustered layout the routing pairs collect too
     // (probes × nProbe — serving-bounded) so the ADC scan carries
     // literal cid predicates and manifest-prunes to the probed lists'
@@ -3374,7 +2951,7 @@ object AnnIndex {
     // candidate set rides the same pruned/join ADC either way
     val pooled = pqLists match {
       case Some(pl) =>
-        val listsDf = Pq.probeLists(cents, p, nProbe)
+        val listsDf = Pq.probeLists(cents, p, nProbe, single)
         val pairRows = listsDf.collect()
         val chosenCids = pairRows.map(_.getLong(1)).distinct.toSeq
         val pairsLists = spark.createDataFrame(
@@ -3382,11 +2959,11 @@ object AnnIndex {
         Pq.adcPool(
           restrict(pl.filter(col("cid").isin(chosenCids: _*)), idCol,
             allowed),
-          broadcast(pairsLists), cents, books, idCol, p, m, pool)
+          broadcast(pairsLists), cents, books, idCol, p, m, pool, single)
       case None =>
         Pq.pooledRanking(asg, cents,
           restrict(codes, idCol, allowed), books, idCol,
-          p, m, nProbe, pool)
+          p, m, nProbe, pool, single)
     }
     // the per-probe pool ranking COLLECTS — bounded by probes × pool,
     // the same serving-bounded action the single-probe form uses — so
@@ -3398,30 +2975,12 @@ object AnnIndex {
     val ids = pairs.map(_.get(1)).distinct.toSeq
     val pairsDf = spark.createDataFrame(
       java.util.Arrays.asList(pairs: _*), sel.schema)
-    val wk = Window.partitionBy("__pid").orderBy(desc("score"), col(idCol))
-    emb.filter(if (ids.isEmpty) lit(false) else col(idCol).isin(ids: _*))
-      .join(broadcast(pairsDf), idCol)
-      .join(broadcast(p), "__pid")
-      .select(col("__pid"), col(idCol),
-        vec_cosine_sim(col(embCol), col("__probe")).as("score"))
-      .withColumn("__rk", row_number().over(wk))
-      .filter(col("__rk") <= k).drop("__rk")
-      .select(col("__pid").cast(pidType).as(probeIdCol), col(idCol),
-        col("score"))
-      .orderBy(col(probeIdCol), desc("score"), col(idCol))
-  }
-
-  /** [[Pq.searchIvfPq]] over the COMMITTED IVF routing + PQ codes —
-    * the full billion-scale serving layout with every build artifact
-    * loaded, none rebuilt. The subspace count is DERIVED from the
-    * committed codebooks (the caller's `m` is ignored when codebooks
-    * exist — codes are only comparable under their training-time m). */
-  def searchIvfPq(spark: SparkSession, root: String, emb: DataFrame,
-      idCol: String, embCol: String, probeDf: DataFrame, probeCol: String,
-      m: Int, k: Int, nProbe: Int, pool: Int): DataFrame = {
-    val (cents, asg) = loadIvf(spark, root)
-    val (books, codes, bv) = loadPqChecked(spark, root)
-    Pq.searchIvfPq(emb, asg, cents, codes, books, idCol, embCol,
-      probeDf, probeCol, trainedM(spark, root, books, bv), k, nProbe, pool)
+    Pq.topPerProbe(
+      emb.filter(if (ids.isEmpty) lit(false) else col(idCol).isin(ids: _*))
+        .join(broadcast(pairsDf), idCol)
+        .join(broadcast(p), "__pid")
+        .select(col("__pid"), col(idCol),
+          vec_cosine_sim(col(embCol), col("__probe")).as("score")),
+      single, k, desc("score"), col(idCol))
   }
 }

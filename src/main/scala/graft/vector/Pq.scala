@@ -224,28 +224,39 @@ object Pq {
     * PARTITIONED window keeps the `pool` best approximate distances.
     * Input `p` is (__pid, __probe); output (__pid, idCol) — at most
     * probes × pool rows. [[searchIvfPqBatch]] joins it in-plan;
-    * AnnIndex.searchIvfPqBatchCommitted COLLECTS it so the
-    * full-precision fetch can file-prune on literal id predicates. */
+    * a committed [[AnnIndex.serve]] COLLECTS it so the full-precision
+    * fetch can file-prune on literal id predicates. */
   private[vector] def pooledRanking(
       assigned: DataFrame, cents: DataFrame,
       codes: DataFrame, books: DataFrame, idCol: String,
-      p: DataFrame, m: Int, nProbe: Int, pool: Int): DataFrame =
-    adcPool(codes.join(assigned, idCol), probeLists(cents, p, nProbe),
-      cents, books, idCol, p, m, pool)
+      p: DataFrame, m: Int, nProbe: Int, pool: Int,
+      single: Boolean = false): DataFrame =
+    adcPool(codes.join(assigned, idCol), probeLists(cents, p, nProbe, single),
+      cents, books, idCol, p, m, pool, single)
 
   /** Per-probe IVF routing: (__pid, cid), nProbe rows per probe — one
-    * broadcast cross over the k centroids, per-probe window cut. */
+    * broadcast cross over the k centroids, per-probe cut. */
   private[vector] def probeLists(cents: DataFrame, p: DataFrame,
-      nProbe: Int): DataFrame = {
+      nProbe: Int, single: Boolean = false): DataFrame = {
     import graft.functions.vec_l2
-    import org.apache.spark.sql.expressions.Window
-    val wl = Window.partitionBy("__pid").orderBy(col("cdist"), col("cid"))
-    broadcast(cents).crossJoin(broadcast(p))
-      .select(col("__pid"), col("cid"),
-        vec_l2(col("centroid"), col("__probe")).as("cdist"))
-      .withColumn("__r", row_number().over(wl))
-      .filter(col("__r") <= nProbe).select("__pid", "cid")
+    topPerProbe(broadcast(cents).crossJoin(broadcast(p))
+        .select(col("__pid"), col("cid"),
+          vec_l2(col("centroid"), col("__probe")).as("cdist")),
+      single, nProbe, col("cdist"), col("cid"))
+      .select("__pid", "cid")
   }
+
+  /** The `n` first rows per probe (`__pid`) by `order`. A probe SET
+    * cuts with a per-probe PARTITIONED window, never a global funnel;
+    * a `single` probe — the common one-question ask — cuts with a
+    * sorted limit, which plans without the window's exchange. */
+  private[vector] def topPerProbe(df: DataFrame, single: Boolean, n: Int,
+      order: org.apache.spark.sql.Column*): DataFrame =
+    if (single) df.orderBy(order: _*).limit(n)
+    else df.withColumn("__r", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy("__pid")
+          .orderBy(order: _*)))
+      .filter(col("__r") <= n).drop("__r")
 
   /** The ADC scan + per-probe pool cut over a cid-carrying codes
     * source: `codesWithCid` is (cid, idCol, sub, code) rows — either
@@ -257,8 +268,7 @@ object Pq {
     * ≤ pool rows per probe. */
   private[vector] def adcPool(codesWithCid: DataFrame, lists: DataFrame,
       cents: DataFrame, books: DataFrame, idCol: String, p: DataFrame,
-      m: Int, pool: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+      m: Int, pool: Int, single: Boolean = false): DataFrame = {
     val pArr = p.select(col("__pid"),
       col("__probe").cast("array<double>").as("__pv"))
     // per-probe ADC tables in one broadcast cross each ([[subDist]] —
@@ -286,14 +296,12 @@ object Pq {
             subDist(col("__rv"), m).as("pdist")),
           Seq("__pid", "cid", "sub", "code"))
       }
-    val wp = Window.partitionBy("__pid").orderBy(col("adist"), col(idCol))
-    codesWithCid
-      .join(broadcast(lists), "cid")
-      .join(broadcast(dt), dtKeys)
-      .groupBy("__pid", idCol)
-      .agg(sum(col("pdist")).as("adist"))
-      .withColumn("__r", row_number().over(wp))
-      .filter(col("__r") <= pool)
+    topPerProbe(codesWithCid
+        .join(broadcast(lists), "cid")
+        .join(broadcast(dt), dtKeys)
+        .groupBy("__pid", idCol)
+        .agg(sum(col("pdist")).as("adist")),
+      single, pool, col("adist"), col(idCol))
       .select("__pid", idCol)
   }
 

@@ -151,62 +151,70 @@ class GraftCatalogSpec extends AnyFunSuite {
   }
 
   test("SQL UPDATE: simultaneous assignments, three-valued cond, pruning") {
-    val t = uniq("tu")
-    spark.sql(s"CREATE TABLE cgraft.$t (k BIGINT, a BIGINT, b BIGINT) " +
-      "TBLPROPERTIES ('key'='k')")
-    val path = s"target/cgraft_wh/$t"
-    Versioned.appendCommit(spark, path,
-      spark.range(1, 101).select(col("id").as("k"), col("id").as("a"),
-        (col("id") * 10).as("b")), Some("k"), files = 4)
-    val before = Versioned.snapshot(spark, path)
-    // swap semantics: both RHS read the OLD row
-    val res = spark.sql(
-      s"UPDATE cgraft.$t SET a = b, b = a WHERE k <= 25")
-    assert(res.collect().head.getLong(0) == 25L, "num_affected_rows")
-    val row10 = spark.sql(s"SELECT a, b FROM cgraft.$t WHERE k = 10")
-      .collect().head
-    assert((row10.getLong(0), row10.getLong(1)) == (100L, 10L),
-      "assignments evaluated simultaneously against the old row")
-    val row50 = spark.sql(s"SELECT a, b FROM cgraft.$t WHERE k = 50")
-      .collect().head
-    assert((row50.getLong(0), row50.getLong(1)) == (50L, 500L),
-      "rows outside the predicate untouched")
-    val after = Versioned.snapshot(spark, path)
-    assert(before.files.map(_.path).toSet
-      .intersect(after.files.map(_.path).toSet).nonEmpty,
-      "files the predicate provably misses carried by reference")
-    assert(after.op.contains("UPDATE"))
+    // the same range spelled as two comparisons and as BETWEEN (Spark 4
+    // resolves BETWEEN to a replaceable node the DML capture must see
+    // through)
+    for (cond <- Seq("k <= 25", "k BETWEEN 1 AND 25")) {
+      val t = uniq("tu")
+      spark.sql(s"CREATE TABLE cgraft.$t (k BIGINT, a BIGINT, b BIGINT) " +
+        "TBLPROPERTIES ('key'='k')")
+      val path = s"target/cgraft_wh/$t"
+      Versioned.appendCommit(spark, path,
+        spark.range(1, 101).select(col("id").as("k"), col("id").as("a"),
+          (col("id") * 10).as("b")), Some("k"), files = 4)
+      val before = Versioned.snapshot(spark, path)
+      // swap semantics: both RHS read the OLD row
+      val res = spark.sql(
+        s"UPDATE cgraft.$t SET a = b, b = a WHERE $cond")
+      assert(res.collect().head.getLong(0) == 25L, "num_affected_rows")
+      val row10 = spark.sql(s"SELECT a, b FROM cgraft.$t WHERE k = 10")
+        .collect().head
+      assert((row10.getLong(0), row10.getLong(1)) == (100L, 10L),
+        "assignments evaluated simultaneously against the old row")
+      val row50 = spark.sql(s"SELECT a, b FROM cgraft.$t WHERE k = 50")
+        .collect().head
+      assert((row50.getLong(0), row50.getLong(1)) == (50L, 500L),
+        "rows outside the predicate untouched")
+      val after = Versioned.snapshot(spark, path)
+      assert(before.files.map(_.path).toSet
+        .intersect(after.files.map(_.path).toSet).nonEmpty,
+        "files the predicate provably misses carried by reference")
+      assert(after.op.contains("UPDATE"))
+    }
   }
 
   test("SQL MERGE INTO: conditional update/delete/insert in one commit") {
-    val t = uniq("tg")
-    spark.sql(s"CREATE TABLE cgraft.$t (k BIGINT, v BIGINT, tag STRING) " +
-      "TBLPROPERTIES ('key'='k')")
-    spark.sql(s"INSERT INTO cgraft.$t " +
-      "SELECT id, id * 10, 'old' FROM range(1, 11)")
-    spark.range(5, 16)
-      .select(col("id").as("k"), (col("id") * 100).as("nv"))
-      .createOrReplaceTempView("merge_src")
-    val stats = spark.sql(
-      s"""MERGE INTO cgraft.$t AS t USING merge_src AS s ON t.k = s.k
-         |WHEN MATCHED AND s.k % 2 = 0 THEN UPDATE SET v = s.nv, tag = 'upd'
-         |WHEN MATCHED THEN DELETE
-         |WHEN NOT MATCHED AND s.k <= 14 THEN
-         |  INSERT (k, v, tag) VALUES (s.k, s.nv, 'new')""".stripMargin)
-      .collect().head
-    assert((stats.getLong(0), stats.getLong(1), stats.getLong(2)) ==
-      (3L, 3L, 4L), s"matched-even updated (6,8,10), matched-odd deleted " +
-      s"(5,7,9), inserted 11..14: $stats")
-    val rows = spark.sql(
-      s"SELECT k, v, tag FROM cgraft.$t ORDER BY k")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
-    val expect =
-      (1L to 4L).map(k => (k, k * 10, "old")) ++
-        Seq(6L, 8L, 10L).map(k => (k, k * 100, "upd")) ++
-        (11L to 14L).map(k => (k, k * 100, "new"))
-    assert(rows == expect.sortBy(_._1), s"final state: $rows")
-    assert(Versioned.snapshot(spark, s"target/cgraft_wh/$t")
-      .op.contains("MERGE"))
+    // the insert clause's bound spelled as a comparison and as BETWEEN
+    for (insertCond <- Seq("s.k <= 14", "s.k BETWEEN 1 AND 14")) {
+      val t = uniq("tg")
+      spark.sql(s"CREATE TABLE cgraft.$t (k BIGINT, v BIGINT, tag STRING) " +
+        "TBLPROPERTIES ('key'='k')")
+      spark.sql(s"INSERT INTO cgraft.$t " +
+        "SELECT id, id * 10, 'old' FROM range(1, 11)")
+      spark.range(5, 16)
+        .select(col("id").as("k"), (col("id") * 100).as("nv"))
+        .createOrReplaceTempView("merge_src")
+      val stats = spark.sql(
+        s"""MERGE INTO cgraft.$t AS t USING merge_src AS s ON t.k = s.k
+           |WHEN MATCHED AND s.k % 2 = 0 THEN UPDATE SET v = s.nv, tag = 'upd'
+           |WHEN MATCHED THEN DELETE
+           |WHEN NOT MATCHED AND $insertCond THEN
+           |  INSERT (k, v, tag) VALUES (s.k, s.nv, 'new')""".stripMargin)
+        .collect().head
+      assert((stats.getLong(0), stats.getLong(1), stats.getLong(2)) ==
+        (3L, 3L, 4L), s"matched-even updated (6,8,10), matched-odd deleted " +
+        s"(5,7,9), inserted 11..14: $stats")
+      val rows = spark.sql(
+        s"SELECT k, v, tag FROM cgraft.$t ORDER BY k")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
+      val expect =
+        (1L to 4L).map(k => (k, k * 10, "old")) ++
+          Seq(6L, 8L, 10L).map(k => (k, k * 100, "upd")) ++
+          (11L to 14L).map(k => (k, k * 100, "new"))
+      assert(rows == expect.sortBy(_._1), s"final state: $rows")
+      assert(Versioned.snapshot(spark, s"target/cgraft_wh/$t")
+        .op.contains("MERGE"))
+    }
   }
 
   test("SQL MERGE: NOT MATCHED BY SOURCE and cardinality violation") {

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.vector.{AnnCorpus, AnnIndex, AnnPin, AnnRequest, AnnServe}
 
 /** Pins for the graft_* SQL table-valued functions (GraftExtensions):
   * `graft_table` must read through the SAME VersionedFileIndex the
@@ -263,9 +264,10 @@ class SqlTvfSpec extends AnyFunSuite {
       s"SELECT vec_id, score FROM graft_ann_search('$wh/ix', '$wh/e', " +
         "'vec_id', 'embedding', 0, 5, 4, 'pq')")
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val apiPq = graft.vector.AnnIndex.searchIvfPq(spark, s"$wh/ix", corpus,
-        "vec_id", "embedding", probeDf, "embedding", m = 0, k = 5,
-        nProbe = 4, pool = 64)
+    val apiPq = AnnServe.single(AnnIndex.serve(spark, s"$wh/ix",
+        AnnRequest("pq", AnnCorpus.Frame(corpus), "vec_id", "embedding",
+        AnnServe.oneProbe(probeDf, "embedding"), 5, width = Some(4),
+        pool = Some(64))))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(sqlPq == apiPq, "SQL pq door must serve the library's answer")
     // the cid-clustered CODES layout: the door's answers are identical
@@ -293,8 +295,9 @@ class SqlTvfSpec extends AnyFunSuite {
     val probe = corpus.filter(col("vec_id") === 0L)
       .select(col("embedding").cast("array<float>"))
       .as[Array[Float]].head()
-    val apiNsw = graft.vector.AnnIndex.searchNsw(spark, s"$wh/ix", corpus,
-        "vec_id", "embedding", probe, k = 5)
+    val apiNsw = AnnServe.single(AnnIndex.serve(spark, s"$wh/ix",
+        AnnRequest("hnsw", AnnCorpus.Frame(corpus), "vec_id", "embedding",
+        AnnServe.vectorProbe(spark, probe), 5)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(sqlNsw == apiNsw, "SQL hnsw door must serve the library's answer")
     // for the hnsw kind the integral tail is the BEAM WIDTH (ef), not
@@ -304,11 +307,11 @@ class SqlTvfSpec extends AnyFunSuite {
       s"SELECT vec_id, score FROM graft_ann_search('$wh/ix', '$wh/e', " +
         "'vec_id', 'embedding', 0, 5, 1024, 'hnsw')")
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val apiNswWide = graft.vector.AnnIndex.searchNswBatchCommitted(spark,
-        s"$wh/ix", s"$wh/e", "vec_id", "embedding",
-        corpus.filter(col("vec_id") === 0)
+    val apiNswWide = AnnIndex.serve(spark, s"$wh/ix",
+        AnnRequest("hnsw", AnnCorpus.committed(spark, s"$wh/e"), "vec_id",
+        "embedding", corpus.filter(col("vec_id") === 0)
           .select(col("vec_id").as("probe_id"), col("embedding").as("pv")),
-        "probe_id", "pv", k = 5, ef = 1024)
+        5, width = Some(1024)))
       .collect().map(r => (r.getLong(1), r.getDouble(2))).toSeq
     assert(sqlNswWide == apiNswWide,
       "the hnsw door's integral tail must reach the beam width")
@@ -419,15 +422,18 @@ class SqlTvfSpec extends AnyFunSuite {
     val sqlIvf = rows(spark.sql(
       s"SELECT vec_id, score FROM graft_ann_search('$wh/ix', '$wh/e', " +
         s"'vec_id', 'embedding', $sqlVec, 5, 4, 'ivf')"))
-    assert(sqlIvf == rows(graft.vector.AnnIndex.searchIvf(spark, s"$wh/ix",
-      corpus, "vec_id", "embedding", probeDf, "embedding", 5, 4)),
+    assert(sqlIvf == rows(AnnServe.single(AnnIndex.serve(spark,
+        s"$wh/ix", AnnRequest("ivf", AnnCorpus.Frame(corpus), "vec_id",
+        "embedding", AnnServe.oneProbe(probeDf, "embedding"), 5,
+        width = Some(4))))),
       "ad-hoc ivf probe must serve the library's answer bit-for-bit")
     val sqlPq = rows(spark.sql(
       s"SELECT vec_id, score FROM graft_ann_search('$wh/ix', '$wh/e', " +
         s"'vec_id', 'embedding', $sqlVec, 5, 4, 'pq')"))
-    assert(sqlPq == rows(graft.vector.AnnIndex.searchIvfPq(spark, s"$wh/ix",
-      corpus, "vec_id", "embedding", probeDf, "embedding", m = 0, k = 5,
-      nProbe = 4, pool = 64)),
+    assert(sqlPq == rows(AnnServe.single(AnnIndex.serve(spark,
+        s"$wh/ix", AnnRequest("pq", AnnCorpus.Frame(corpus), "vec_id",
+        "embedding", AnnServe.oneProbe(probeDf, "embedding"), 5,
+        width = Some(4), pool = Some(64))))),
       "ad-hoc pq probe must serve the library's answer bit-for-bit")
     val sqlNsw = rows(spark.sql(
       s"SELECT vec_id, score FROM graft_ann_search('$wh/ix', '$wh/e', " +
@@ -435,8 +441,9 @@ class SqlTvfSpec extends AnyFunSuite {
     import spark.implicits._
     val fvec = probeDf.select(col("embedding").cast("array<float>"))
       .as[Array[Float]].head()
-    assert(sqlNsw == rows(graft.vector.AnnIndex.searchNsw(spark, s"$wh/ix",
-      corpus, "vec_id", "embedding", fvec, k = 5)),
+    assert(sqlNsw == rows(AnnServe.single(AnnIndex.serve(spark,
+        s"$wh/ix", AnnRequest("hnsw", AnnCorpus.Frame(corpus), "vec_id",
+        "embedding", AnnServe.vectorProbe(spark, fvec), 5)))),
       "ad-hoc hnsw probe must serve the library's answer bit-for-bit")
     // a NULL component is a typed error naming the position
     val eNull = intercept[Exception](spark.sql(
@@ -573,19 +580,21 @@ class SqlTvfSpec extends AnyFunSuite {
         s"SELECT vec_id, score FROM graft_ann_search('$wh/ix', '$wh/e', " +
           s"'vec_id', 'embedding', 0, 5, 4, '$kind', TIMESTAMP '$lit')"))
       val api = kind match {
-        case "ivf" => rows(graft.vector.AnnIndex.searchIvfAsOf(spark,
-          s"$wh/ix", baseCorpus, "vec_id", "embedding", probeDf,
-          "embedding", 5, 4, tMid))
-        case "pq" => rows(graft.vector.AnnIndex.searchIvfPqAsOf(spark,
-          s"$wh/ix", baseCorpus, "vec_id", "embedding", probeDf,
-          "embedding", 5, 4, 64, tMid))
+        case "ivf" => rows(AnnServe.single(AnnIndex.serve(spark,
+            s"$wh/ix", AnnRequest("ivf", AnnCorpus.Frame(baseCorpus),
+            "vec_id", "embedding", AnnServe.oneProbe(probeDf, "embedding"), 5,
+            width = Some(4), pin = AnnPin.AsOf(tMid)))))
+        case "pq" => rows(AnnServe.single(AnnIndex.serve(spark,
+            s"$wh/ix", AnnRequest("pq", AnnCorpus.Frame(baseCorpus), "vec_id",
+            "embedding", AnnServe.oneProbe(probeDf, "embedding"), 5,
+            width = Some(4), pool = Some(64), pin = AnnPin.AsOf(tMid)))))
         case _ =>
           val p = probeDf.select(
             org.apache.spark.sql.functions.lit(0L).as("pid"),
             col("embedding"))
-          rows(graft.vector.AnnIndex.searchNswBatchAsOf(spark, s"$wh/ix",
-            baseCorpus, "vec_id", "embedding", p, "pid", "embedding", 5,
-            tMid).drop("pid"))
+          rows(AnnIndex.serve(spark, s"$wh/ix",
+              AnnRequest("hnsw", AnnCorpus.Frame(baseCorpus), "vec_id",
+              "embedding", p, 5, pin = AnnPin.AsOf(tMid))).drop("pid"))
       }
       assert(sqlAsOf == api,
         s"$kind AS OF through the door must equal the library's " +
@@ -718,7 +727,6 @@ class SqlTvfSpec extends AnyFunSuite {
   }
 
   test("graft_ann_search filter tail: prefiltered committed serving, exact at full width") {
-    import graft.vector.AnnIndex
     val wh = tmp("annfilter")
     spark.conf.set("spark.sql.catalog.annf", "graft.sources.GraftCatalog")
     spark.conf.set("spark.sql.catalog.annf.warehouse", wh)
@@ -769,11 +777,13 @@ class SqlTvfSpec extends AnyFunSuite {
         s"'vec_id', 'embedding', 0, 5, 16, 'pq', '$pred')")
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val corpus = graft.sources.VersionedScan.read(spark, s"$wh/e")
-    val apiPq = AnnIndex.searchIvfPqCommitted(spark, s"$wh/fx", s"$wh/e",
-        "vec_id", "embedding",
-        corpus.filter(col("vec_id") === 0).select(col("embedding")),
-        "embedding", k = 5, nProbe = 16, pool = 40,
-        allowed = Some(corpus.filter(expr(pred)).select("vec_id")))
+    val apiPq = AnnServe.single(AnnIndex.serve(spark, s"$wh/fx",
+        AnnRequest("pq", AnnCorpus.committed(spark, s"$wh/e"), "vec_id",
+        "embedding", AnnServe.oneProbe(
+          corpus.filter(col("vec_id") === 0).select(col("embedding")),
+          "embedding"),
+        5, width = Some(16), pool = Some(40),
+        allowed = Some(corpus.filter(expr(pred)).select("vec_id")))))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(servedPq.map(_._1).forall(matching),
       "pq filtered results must satisfy the predicate")
@@ -1147,7 +1157,6 @@ class SqlTvfSpec extends AnyFunSuite {
       s"monotone: ${curve.toSeq}")
     // the preview counts EXACTLY what the build would land: a real
     // spilled build at a rung's eps multi-assigns that many rows
-    import graft.vector.AnnIndex
     import graft.sources.VersionedScan
     val built = AnnIndex.ensureIvf(spark,
       s"$wh/px2", VersionedScan.read(spark, s"$wh/e"),
@@ -1311,7 +1320,6 @@ class SqlTvfSpec extends AnyFunSuite {
       e.getMessage.contains("eps="), e.getMessage)
     // the shadow builds never touch the root: still exactly one
     // committed assignments generation, and it stays PLAIN
-    import graft.vector.AnnIndex
     assert(graft.sources.Versioned.latestVersion(spark,
       AnnIndex.ivfAssignmentsTable(s"$wh/vx")) == 1L,
       "tuning must not commit to the tuned root")
@@ -1378,7 +1386,6 @@ class SqlTvfSpec extends AnyFunSuite {
   }
 
   test("ann_vacuum reclaims dead index generations; serving survives") {
-    import graft.vector.AnnIndex
     val wh = tmp("annvac")
     spark.conf.set("spark.sql.catalog.annv", "graft.sources.GraftCatalog")
     spark.conf.set("spark.sql.catalog.annv.warehouse", wh)

@@ -53,8 +53,9 @@ class AnnIndexSpec extends AnyFunSuite {
     val root = freshRoot("serve")
     AnnIndex.ensureIvf(spark, root, emb, "vec_id", "embedding", 16)
     val probeDf = emb.orderBy("vec_id").limit(1).select(col("embedding"))
-    val persisted = AnnIndex.searchIvf(spark, root, emb, "vec_id", "embedding",
-        probeDf, "embedding", k = 10, nProbe = 4)
+    val persisted = AnnServe.single(AnnIndex.serve(spark, root,
+        AnnRequest("ivf", AnnCorpus.Frame(emb), "vec_id", "embedding",
+        AnnServe.oneProbe(probeDf, "embedding"), 10, width = Some(4))))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val cents = Ivf.centroids(emb, "vec_id", "embedding", 16)
     val rebuilt = Ivf.search(emb,
@@ -117,8 +118,9 @@ class AnnIndexSpec extends AnyFunSuite {
     AnnIndex.ensureNsw(spark, root, emb, "vec_id", "embedding")
     val probe = emb.orderBy("vec_id").limit(1)
       .select(col("embedding").cast("array<float>")).as[Array[Float]].head()
-    val persisted = AnnIndex.searchNsw(spark, root, emb, "vec_id", "embedding",
-        probe, k = 10)
+    val persisted = AnnServe.single(AnnIndex.serve(spark, root,
+        AnnRequest("hnsw", AnnCorpus.Frame(emb), "vec_id", "embedding",
+        AnnServe.vectorProbe(spark, probe), 10)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val rebuilt = NswAnn.search(emb, "vec_id", "embedding", probe, k = 10)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
@@ -181,16 +183,16 @@ class AnnIndexSpec extends AnyFunSuite {
     val probes = emb.orderBy("vec_id").limit(3)
       .select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
     val b0 = AnnIndex.serveBuilds.get()
-    val batch = AnnIndex.searchNswBatch(spark, root, emb,
-      "vec_id", "embedding", probes, "probe_id", "pv", k = 5).collect()
+    val batch = AnnIndex.serve(spark, root, AnnRequest("hnsw",
+        AnnCorpus.Frame(emb), "vec_id", "embedding", probes, 5)).collect()
     val b1 = AnnIndex.serveBuilds.get()
     assert(b1 - b0 == 4L,
       s"3 probes over 4 shards must reconstruct each shard ONCE " +
         s"(not per probe); got ${b1 - b0} builds")
     // repeat at the same (index, corpus) state: the executor-side
     // cache serves every shard's graph — zero reconstructions
-    val batch2 = AnnIndex.searchNswBatch(spark, root, emb,
-      "vec_id", "embedding", probes, "probe_id", "pv", k = 5).collect()
+    val batch2 = AnnIndex.serve(spark, root, AnnRequest("hnsw",
+        AnnCorpus.Frame(emb), "vec_id", "embedding", probes, 5)).collect()
     assert(AnnIndex.serveBuilds.get() == b1,
       "a repeat search must reuse the cached shard graphs")
     def rows(a: Array[org.apache.spark.sql.Row]) =
@@ -217,8 +219,8 @@ class AnnIndexSpec extends AnyFunSuite {
     val probes = corpusA.orderBy("vec_id").limit(2)
       .select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
     // fill the executor cache for generation 1
-    AnnIndex.searchNswBatch(spark, root, corpusA, "vec_id", "embedding",
-      probes, "probe_id", "pv", k = 5).collect()
+    AnnIndex.serve(spark, root, AnnRequest("hnsw", AnnCorpus.Frame(corpusA),
+        "vec_id", "embedding", probes, 5)).collect()
     // the documented retrain: drop the root, rebuild over a DIFFERENT
     // corpus — version numbers restart at 1, same (table, version)
     FileUtils.deleteDirectory(new java.io.File(root))
@@ -226,8 +228,8 @@ class AnnIndexSpec extends AnyFunSuite {
     AnnIndex.ensureNsw(spark, root, corpusB, "vec_id", "embedding")
     val probesB = corpusB.orderBy("vec_id").limit(2)
       .select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
-    val served = AnnIndex.searchNswBatch(spark, root, corpusB,
-        "vec_id", "embedding", probesB, "probe_id", "pv", k = 5)
+    val served = AnnIndex.serve(spark, root, AnnRequest("hnsw",
+        AnnCorpus.Frame(corpusB), "vec_id", "embedding", probesB, 5))
       .select("vec_id").collect().map(_.getLong(0)).toSet
     // ids < 100 exist ONLY in the dead generation's graph: serving one
     // would prove a stale cache hit across generations
@@ -237,11 +239,11 @@ class AnnIndexSpec extends AnyFunSuite {
     // artifact of any kind)
     val fresh = freshRoot("nswgenfresh")
     AnnIndex.ensureNsw(spark, fresh, corpusB, "vec_id", "embedding")
-    val freshServed = AnnIndex.searchNswBatch(spark, fresh, corpusB,
-        "vec_id", "embedding", probesB, "probe_id", "pv", k = 5)
+    val freshServed = AnnIndex.serve(spark, fresh, AnnRequest("hnsw",
+        AnnCorpus.Frame(corpusB), "vec_id", "embedding", probesB, 5))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val gotServed = AnnIndex.searchNswBatch(spark, root, corpusB,
-        "vec_id", "embedding", probesB, "probe_id", "pv", k = 5)
+    val gotServed = AnnIndex.serve(spark, root, AnnRequest("hnsw",
+        AnnCorpus.Frame(corpusB), "vec_id", "embedding", probesB, 5))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(gotServed == freshServed)
   }
@@ -265,8 +267,8 @@ class AnnIndexSpec extends AnyFunSuite {
     // new layout repopulates with exactly the new shard count
     val probes = emb.orderBy("vec_id").limit(2)
       .select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
-    AnnIndex.searchNswBatch(spark, root, emb, "vec_id", "embedding",
-      probes, "probe_id", "pv", k = 5).collect()
+    AnnIndex.serve(spark, root, AnnRequest("hnsw", AnnCorpus.Frame(emb),
+        "vec_id", "embedding", probes, 5)).collect()
     assert(AnnIndex.serveStats(spark, root)("cached_shard_graphs") == 4L,
       "post-reshard cache must hold only the new generation's graphs")
   }
@@ -381,9 +383,10 @@ class AnnIndexSpec extends AnyFunSuite {
       df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     // AS OF t1 (between the generations): the historical serve must
     // equal what the v1 index served — same plan, older snapshot pins
-    val asOf = rows(AnnIndex.searchIvfAsOf(spark, root, base,
-      "vec_id", "embedding", probeDf, "embedding", k = 10, nProbe = 4,
-      tsMillis = t1))
+    val asOf = rows(AnnServe.single(AnnIndex.serve(spark, root,
+        AnnRequest("ivf", AnnCorpus.Frame(base), "vec_id", "embedding",
+        AnnServe.oneProbe(probeDf, "embedding"), 10, width = Some(4),
+        pin = AnnPin.AsOf(t1)))))
     val (c1, a1) = (graft.sources.VersionedScan.read(spark,
         AnnIndex.ivfCentroidsTable(root), 1),
       graft.sources.VersionedScan.read(spark,
@@ -394,8 +397,9 @@ class AnnIndexSpec extends AnyFunSuite {
       "AS OF between generations must serve the older index exactly")
     // and the current serve differs in coverage: the refreshed index
     // answers over the grown corpus
-    val now = rows(AnnIndex.searchIvf(spark, root, emb,
-      "vec_id", "embedding", probeDf, "embedding", k = 10, nProbe = 4))
+    val now = rows(AnnServe.single(AnnIndex.serve(spark, root,
+        AnnRequest("ivf", AnnCorpus.Frame(emb), "vec_id", "embedding",
+        AnnServe.oneProbe(probeDf, "embedding"), 10, width = Some(4)))))
     assert(now.map(_._1).toSet != asOf.map(_._1).toSet ||
       AnnIndex.loadIvf(spark, root)._2.count() > a1.count(),
       "the refreshed index must cover the grown corpus")
@@ -425,18 +429,20 @@ class AnnIndexSpec extends AnyFunSuite {
       == (1L, 1L))
     // the operational move for a corpus that outgrew its build-time k:
     // one retrain call lands centroids v2 + full reassign v2 — history
-    // preserved (v1 still serves via searchIvfAsOf), versions never reuse
+    // preserved (v1 still serves AS OF its instant), versions never reuse
     assert(AnnIndex.retrainIvf(spark, root, emb, "vec_id", "embedding", 32)
       == (2L, 2L), "retrain lands one CAS commit per artifact table")
     val probeDf = emb.orderBy("vec_id").limit(1).select(col("embedding"))
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val retrained = rows(AnnIndex.searchIvf(spark, root, emb,
-      "vec_id", "embedding", probeDf, "embedding", k = 10, nProbe = 4))
+    val retrained = rows(AnnServe.single(AnnIndex.serve(spark, root,
+        AnnRequest("ivf", AnnCorpus.Frame(emb), "vec_id", "embedding",
+        AnnServe.oneProbe(probeDf, "embedding"), 10, width = Some(4)))))
     val fresh = freshRoot("ivfretrainfresh")
     AnnIndex.ensureIvf(spark, fresh, emb, "vec_id", "embedding", 32)
-    assert(retrained == rows(AnnIndex.searchIvf(spark, fresh, emb,
-      "vec_id", "embedding", probeDf, "embedding", k = 10, nProbe = 4)),
+    assert(retrained == rows(AnnServe.single(AnnIndex.serve(spark, fresh,
+        AnnRequest("ivf", AnnCorpus.Frame(emb), "vec_id", "embedding",
+        AnnServe.oneProbe(probeDf, "embedding"), 10, width = Some(4))))),
       "the retrained index must serve exactly what a fresh build at " +
         "the new k serves")
     // the retrained index reads as CURRENT: a follow-up ensure (any k —
@@ -497,10 +503,12 @@ class AnnIndexSpec extends AnyFunSuite {
     val probeDf = corpus.orderBy("vec_id").limit(1).select(col("embedding"))
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val served = AnnIndex.searchIvfCommitted(spark, root, corpusT,
-      "vec_id", "embedding", probeDf, "embedding", k = 10, nProbe = 2)
-    assert(rows(served) == rows(AnnIndex.searchIvf(spark, root, corpus,
-      "vec_id", "embedding", probeDf, "embedding", k = 10, nProbe = 2)),
+    val served = AnnServe.single(AnnIndex.serve(spark, root, AnnRequest("ivf",
+        AnnCorpus.committed(spark, corpusT), "vec_id", "embedding",
+        AnnServe.oneProbe(probeDf, "embedding"), 10, width = Some(2))))
+    assert(rows(served) == rows(AnnServe.single(AnnIndex.serve(spark, root,
+        AnnRequest("ivf", AnnCorpus.Frame(corpus), "vec_id", "embedding",
+        AnnServe.oneProbe(probeDf, "embedding"), 10, width = Some(2))))),
       "lists serving must answer exactly like the join plan")
     // the IVF promise at the I/O level: the candidate scan
     // manifest-prunes to the chosen lists' files (2 of 16 cids across
@@ -516,8 +524,9 @@ class AnnIndexSpec extends AnyFunSuite {
       case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
         walk(q.plan)
     }.flatten
-    val again = AnnIndex.searchIvfCommitted(spark, root, corpusT,
-      "vec_id", "embedding", probeDf, "embedding", k = 10, nProbe = 2)
+    val again = AnnServe.single(AnnIndex.serve(spark, root, AnnRequest("ivf",
+        AnnCorpus.committed(spark, corpusT), "vec_id", "embedding",
+        AnnServe.oneProbe(probeDf, "embedding"), 10, width = Some(2))))
     again.collect()
     val listScans = walk(again.queryExecution.executedPlan).filter(
       _.relation.location.isInstanceOf[graft.sources.VersionedFileIndex])
@@ -528,11 +537,13 @@ class AnnIndexSpec extends AnyFunSuite {
     // the batch twin serves from the same layout, per-probe == single
     val probes = corpus.orderBy("vec_id").limit(3)
       .select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
-    val batch = AnnIndex.searchIvfBatchCommitted(spark, root, corpusT,
-        "vec_id", "embedding", probes, "probe_id", "pv", k = 5, nProbe = 2)
+    val batch = AnnIndex.serve(spark, root, AnnRequest("ivf",
+        AnnCorpus.committed(spark, corpusT), "vec_id", "embedding", probes, 5,
+        width = Some(2)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    val viaJoin = AnnIndex.searchIvfBatch(spark, root, corpus,
-        "vec_id", "embedding", probes, "probe_id", "pv", k = 5, nProbe = 2)
+    val viaJoin = AnnIndex.serve(spark, root, AnnRequest("ivf",
+        AnnCorpus.Frame(corpus), "vec_id", "embedding", probes, 5,
+        width = Some(2)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(batch.toSeq == viaJoin.toSeq,
       "batch lists serving must equal the batch join plan")
@@ -545,24 +556,28 @@ class AnnIndexSpec extends AnyFunSuite {
       emb.filter(col("vec_id") % 4 === 0).select("vec_id", "embedding"),
       Some("vec_id"), 1)
     AnnIndex.ensureIvf(spark, root, corpus, "vec_id", "embedding", 16)
-    val grown = AnnIndex.searchIvfCommitted(spark, root, corpusT,
-      "vec_id", "embedding", probeDf, "embedding", k = 10, nProbe = 2)
-    assert(rows(grown) == rows(AnnIndex.searchIvf(spark, root, corpus,
-      "vec_id", "embedding", probeDf, "embedding", k = 10, nProbe = 2)),
+    val grown = AnnServe.single(AnnIndex.serve(spark, root, AnnRequest("ivf",
+        AnnCorpus.committed(spark, corpusT), "vec_id", "embedding",
+        AnnServe.oneProbe(probeDf, "embedding"), 10, width = Some(2))))
+    assert(rows(grown) == rows(AnnServe.single(AnnIndex.serve(spark, root,
+        AnnRequest("ivf", AnnCorpus.Frame(corpus), "vec_id", "embedding",
+        AnnServe.oneProbe(probeDf, "embedding"), 10, width = Some(2))))),
       "a stale stamp must fall back to the join plan over the grown corpus")
     // one refresh restores the pruned path, stamped at the new identity
     assert(AnnIndex.optimizeIvfServing(spark, root, corpusT,
       "vec_id", "embedding") == 2L)
-    assert(rows(AnnIndex.searchIvfCommitted(spark, root, corpusT,
-      "vec_id", "embedding", probeDf, "embedding", k = 10, nProbe = 2))
+    assert(rows(AnnServe.single(AnnIndex.serve(spark, root, AnnRequest("ivf",
+        AnnCorpus.committed(spark, corpusT), "vec_id", "embedding",
+        AnnServe.oneProbe(probeDf, "embedding"), 10, width = Some(2)))))
       == rows(grown), "the refreshed layout must serve the same answers")
     // AS-OF serving rides the layout that was FRESH AT the instant:
     // t1 names era 1, whose lists-v1 stamp matches the same-instant
     // (assignments v1, corpus v1) identity — the historical candidate
     // scan file-prunes exactly like the era's live serve did
-    val asOf1 = AnnIndex.searchIvfCommittedAsOf(spark, root, corpusT,
-      "vec_id", "embedding", probeDf, "embedding", k = 10, nProbe = 2,
-      tsMillis = t1)
+    val asOf1 = AnnServe.single(AnnIndex.serve(spark, root, AnnRequest("ivf",
+        AnnCorpus.committed(spark, corpusT, AnnPin.AsOf(t1)), "vec_id",
+        "embedding", AnnServe.oneProbe(probeDf, "embedding"), 10,
+        width = Some(2), pin = AnnPin.AsOf(t1))))
     assert(rows(asOf1) == rows(served),
       "the historical pruned serve must reproduce era-1 answers")
     asOf1.collect()
@@ -574,16 +589,17 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(asOfScans.map(_.metrics("numFiles").value).max < totalFiles,
       "the AS-OF candidate scan must file-prune")
     // batch twin: same era resolution, same answers as the era-1 batch
-    assert(AnnIndex.searchIvfBatchCommittedAsOf(spark, root, corpusT,
-        "vec_id", "embedding", probes, "probe_id", "pv", k = 5, nProbe = 2,
-        tsMillis = t1)
+    assert(AnnIndex.serve(spark, root, AnnRequest("ivf",
+        AnnCorpus.committed(spark, corpusT, AnnPin.AsOf(t1)), "vec_id",
+        "embedding", probes, 5, width = Some(2), pin = AnnPin.AsOf(t1)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .toSeq == batch.toSeq,
       "the AS-OF batch serve must reproduce the era-1 batch answers")
     // an instant BEFORE any layout commit falls back to the join plan
-    assert(rows(AnnIndex.searchIvfCommittedAsOf(spark, root, corpusT,
-      "vec_id", "embedding", probeDf, "embedding", k = 10, nProbe = 2,
-      tsMillis = t0)) == rows(served),
+    assert(rows(AnnServe.single(AnnIndex.serve(spark, root, AnnRequest("ivf",
+        AnnCorpus.committed(spark, corpusT, AnnPin.AsOf(t0)), "vec_id",
+        "embedding", AnnServe.oneProbe(probeDf, "embedding"), 10,
+        width = Some(2), pin = AnnPin.AsOf(t0))))) == rows(served),
       "a pre-layout instant must serve via the join-plan fallback")
   }
 
@@ -605,12 +621,14 @@ class AnnIndexSpec extends AnyFunSuite {
     // so the full-precision fetch carries literal id predicates the
     // manifest can prune on — the ANSWERS must be exactly the in-plan
     // form's (same ranking, same ties)
-    val expected = rows(AnnIndex.searchIvfPq(spark, root, corpus,
-      "vec_id", "embedding", probeDf, "embedding", m = 0, k = 10,
-      nProbe = 4, pool = 50))
-    def committedRows() = rows(AnnIndex.searchIvfPqCommitted(spark, root,
-      corpusT, "vec_id", "embedding", probeDf, "embedding", k = 10,
-      nProbe = 4, pool = 50))
+    val expected = rows(AnnServe.single(AnnIndex.serve(spark, root,
+        AnnRequest("pq", AnnCorpus.Frame(corpus), "vec_id", "embedding",
+        AnnServe.oneProbe(probeDf, "embedding"), 10, width = Some(4),
+        pool = Some(50)))))
+    def committedRows() = rows(AnnServe.single(AnnIndex.serve(spark, root,
+        AnnRequest("pq", AnnCorpus.committed(spark, corpusT), "vec_id",
+        "embedding", AnnServe.oneProbe(probeDf, "embedding"), 10,
+        width = Some(4), pool = Some(50)))))
     assert(committedRows() == expected,
       "the literalized pool fetch must serve the in-plan form's answers")
     // the cid-clustered CODES layout: identical answers, and the ADC
@@ -649,9 +667,10 @@ class AnnIndexSpec extends AnyFunSuite {
       m = 8, k = 16)
     assert(AnnIndex.pqListsFreshness(spark, root)("pq_lists_fresh") == 0L,
       "a retrain must surface as pq_lists staleness")
-    assert(committedRows() == rows(AnnIndex.searchIvfPq(spark, root, corpus,
-      "vec_id", "embedding", probeDf, "embedding", m = 0, k = 10,
-      nProbe = 4, pool = 50)),
+    assert(committedRows() == rows(AnnServe.single(AnnIndex.serve(spark, root,
+        AnnRequest("pq", AnnCorpus.Frame(corpus), "vec_id", "embedding",
+        AnnServe.oneProbe(probeDf, "embedding"), 10, width = Some(4),
+        pool = Some(50))))),
       "a stale codes layout must fall back to the retrained join form")
     assert(AnnIndex.optimizePqServing(spark, root, "vec_id") == 2L,
       "one optimize restores the pruned layout at the new generation")
@@ -678,12 +697,12 @@ class AnnIndexSpec extends AnyFunSuite {
     def probes = probeRows.toDF("probe_id", "pv")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val committed = AnnIndex.searchIvfPqBatchCommitted(spark, root, corpusT,
-      "vec_id", "embedding", probes, "probe_id", "pv",
-      k = 3, nProbe = 4, pool = 5)
-    assert(rows(committed) == rows(AnnIndex.searchIvfPqBatch(spark, root,
-      corpus, "vec_id", "embedding", probes, "probe_id", "pv",
-      k = 3, nProbe = 4, pool = 5)),
+    val committed = AnnIndex.serve(spark, root, AnnRequest("pq",
+        AnnCorpus.committed(spark, corpusT), "vec_id", "embedding", probes, 3,
+        width = Some(4), pool = Some(5)))
+    assert(rows(committed) == rows(AnnIndex.serve(spark, root,
+        AnnRequest("pq", AnnCorpus.Frame(corpus), "vec_id", "embedding",
+        probes, 3, width = Some(4), pool = Some(5)))),
       "the literalized batch pool fetch must serve the batch plan's answers")
     // the point of the form: the full-precision fetch manifest-prunes
     // to the files holding pool rows instead of scanning the corpus —
@@ -700,9 +719,9 @@ class AnnIndexSpec extends AnyFunSuite {
       case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
         walk(q.plan)
     }.flatten
-    val again = AnnIndex.searchIvfPqBatchCommitted(spark, root, corpusT,
-      "vec_id", "embedding", probes, "probe_id", "pv",
-      k = 3, nProbe = 4, pool = 5)
+    val again = AnnIndex.serve(spark, root, AnnRequest("pq",
+        AnnCorpus.committed(spark, corpusT), "vec_id", "embedding", probes, 3,
+        width = Some(4), pool = Some(5)))
     again.collect()
     val scans = walk(again.queryExecution.executedPlan).filter(
       _.relation.location.isInstanceOf[graft.sources.VersionedFileIndex])
@@ -712,9 +731,9 @@ class AnnIndexSpec extends AnyFunSuite {
       s"the pool fetch must file-prune: read $scanned of $totalFiles")
     // the cid-clustered codes layout serves the batch identically
     AnnIndex.optimizePqServing(spark, root, "vec_id")
-    assert(rows(AnnIndex.searchIvfPqBatchCommitted(spark, root, corpusT,
-      "vec_id", "embedding", probes, "probe_id", "pv",
-      k = 3, nProbe = 4, pool = 5)) == rows(committed),
+    assert(rows(AnnIndex.serve(spark, root, AnnRequest("pq",
+        AnnCorpus.committed(spark, corpusT), "vec_id", "embedding", probes, 3,
+        width = Some(4), pool = Some(5)))) == rows(committed),
       "the pruned-codes batch serve must answer exactly like the join form")
     // AS-OF twin: a second generation lands; serving the first instant
     // through the committed form == the join-plan historical twin
@@ -727,12 +746,13 @@ class AnnIndexSpec extends AnyFunSuite {
     AnnIndex.ensurePq(spark, root, corpus, "vec_id", "embedding",
       m = 8, k = 16)
     val baseView = graft.sources.VersionedScan.read(spark, corpusT, 1)
-    assert(rows(AnnIndex.searchIvfPqBatchCommittedAsOf(spark, root, corpusT,
-      "vec_id", "embedding", probes, "probe_id", "pv",
-      k = 3, nProbe = 4, pool = 5, tsMillis = t1)) ==
-      rows(AnnIndex.searchIvfPqBatchAsOf(spark, root, baseView,
-        "vec_id", "embedding", probes, "probe_id", "pv",
-        k = 3, nProbe = 4, pool = 5, tsMillis = t1)),
+    assert(rows(AnnIndex.serve(spark, root, AnnRequest("pq",
+        AnnCorpus.committed(spark, corpusT, AnnPin.AsOf(t1)), "vec_id",
+        "embedding", probes, 3, width = Some(4), pool = Some(5),
+        pin = AnnPin.AsOf(t1)))) ==
+      rows(AnnIndex.serve(spark, root, AnnRequest("pq",
+          AnnCorpus.Frame(baseView), "vec_id", "embedding", probes, 3,
+          width = Some(4), pool = Some(5), pin = AnnPin.AsOf(t1)))),
       "the committed AS-OF batch form must serve the historical twin's answers")
   }
 
@@ -754,14 +774,16 @@ class AnnIndexSpec extends AnyFunSuite {
     // the committed pool fetch reads ids GENERICALLY — an int-id corpus
     // (fine through the type-agnostic join plan) must serve through the
     // literalized path identically, keeping the column's own type
-    val committed = AnnIndex.searchIvfPqCommitted(spark, root, corpusT,
-      "vec_id", "embedding", probeDf, "embedding", k = 10, nProbe = 4,
-      pool = 50)
+    val committed = AnnServe.single(AnnIndex.serve(spark, root,
+        AnnRequest("pq", AnnCorpus.committed(spark, corpusT), "vec_id",
+        "embedding", AnnServe.oneProbe(probeDf, "embedding"), 10,
+        width = Some(4), pool = Some(50))))
     assert(committed.schema("vec_id").dataType ==
       org.apache.spark.sql.types.IntegerType)
-    assert(rows(committed) == rows(AnnIndex.searchIvfPq(spark, root, corpus,
-      "vec_id", "embedding", probeDf, "embedding", m = 0, k = 10,
-      nProbe = 4, pool = 50)),
+    assert(rows(committed) == rows(AnnServe.single(AnnIndex.serve(spark, root,
+        AnnRequest("pq", AnnCorpus.Frame(corpus), "vec_id", "embedding",
+        AnnServe.oneProbe(probeDf, "embedding"), 10, width = Some(4),
+        pool = Some(50))))),
       "an int-id corpus must serve committed exactly like the join plan")
   }
 
@@ -779,15 +801,17 @@ class AnnIndexSpec extends AnyFunSuite {
       .select(col("vec_id").cast("int").as("probe_id"),
         col("embedding").as("pv"))
     // join-plan route first (no lists layout yet): int probe id stays int
-    val viaJoin = AnnIndex.searchIvfBatchCommitted(spark, root, corpusT,
-      "vec_id", "embedding", probes, "probe_id", "pv", k = 5, nProbe = 2)
+    val viaJoin = AnnIndex.serve(spark, root, AnnRequest("ivf",
+        AnnCorpus.committed(spark, corpusT), "vec_id", "embedding", probes, 5,
+        width = Some(2)))
     assert(viaJoin.schema("probe_id").dataType == IntegerType)
     val joinRows = viaJoin.collect().toSeq
     // the fresh-lists route must return the SAME schema (its long widen
     // is internal) and the same rows
     AnnIndex.optimizeIvfServing(spark, root, corpusT, "vec_id", "embedding")
-    val viaLists = AnnIndex.searchIvfBatchCommitted(spark, root, corpusT,
-      "vec_id", "embedding", probes, "probe_id", "pv", k = 5, nProbe = 2)
+    val viaLists = AnnIndex.serve(spark, root, AnnRequest("ivf",
+        AnnCorpus.committed(spark, corpusT), "vec_id", "embedding", probes, 5,
+        width = Some(2)))
     assert(viaLists.schema.map(f => (f.name, f.dataType)) ==
       viaJoin.schema.map(f => (f.name, f.dataType)),
       "fresh-lists and join-plan serving must be schema-identical")
@@ -797,8 +821,9 @@ class AnnIndexSpec extends AnyFunSuite {
     val bad = probes.select(col("probe_id").cast("string").as("probe_id"),
       col("pv"))
     val e = intercept[IllegalArgumentException] {
-      AnnIndex.searchIvfBatchCommitted(spark, root, corpusT,
-        "vec_id", "embedding", bad, "probe_id", "pv", k = 5, nProbe = 2)
+      AnnIndex.serve(spark, root, AnnRequest("ivf",
+          AnnCorpus.committed(spark, corpusT), "vec_id", "embedding", bad, 5,
+          width = Some(2)))
     }
     assert(e.getMessage.contains("must be integral"))
   }
@@ -878,8 +903,8 @@ class AnnIndexSpec extends AnyFunSuite {
     def stats() = AnnIndex.serveStats(spark, root)
     val probes = emb.orderBy("vec_id").limit(2)
       .select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
-    def serve() = AnnIndex.searchNswBatch(spark, root, emb,
-      "vec_id", "embedding", probes, "probe_id", "pv", k = 5).collect()
+    def serve() = AnnIndex.serve(spark, root, AnnRequest("hnsw",
+        AnnCorpus.Frame(emb), "vec_id", "embedding", probes, 5)).collect()
     val s0 = stats()
     serve()
     val s1 = stats()
@@ -935,8 +960,9 @@ class AnnIndexSpec extends AnyFunSuite {
     def probes = probeRows.toDF("probe_id", "pv")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    def serve() = AnnIndex.searchNswBatchCommitted(spark, root, corpusT,
-      "vec_id", "embedding", probes, "probe_id", "pv", k = 5)
+    def serve() = AnnIndex.serve(spark, root, AnnRequest("hnsw",
+        AnnCorpus.committed(spark, corpusT), "vec_id", "embedding", probes,
+        5))
     val cold = rows(serve()) // reconstructs + caches every shard
     // lose ONE shard — the deterministic stand-in for a SoftReference
     // shed under memory pressure or an executor that never built it
@@ -993,20 +1019,21 @@ class AnnIndexSpec extends AnyFunSuite {
     // 2.2M rehearsal measured, exposed instead of pinned at 32
     val fresh = graft.sources.VersionedScan.read(spark, corpusT)
     for (e <- Seq(8, 64)) {
-      val viaCommitted = rows(AnnIndex.searchNswBatchCommitted(spark,
-        root, corpusT, "vec_id", "embedding", probes, "probe_id", "pv",
-        k = 5, ef = e))
-      val viaFrame = rows(AnnIndex.searchNswBatch(spark, root, fresh,
-        "vec_id", "embedding", probes, "probe_id", "pv", k = 5, ef = e))
+      val viaCommitted = rows(AnnIndex.serve(spark, root, AnnRequest("hnsw",
+          AnnCorpus.committed(spark, corpusT), "vec_id", "embedding", probes,
+          5, width = Some(e))))
+      val viaFrame = rows(AnnIndex.serve(spark, root, AnnRequest("hnsw",
+          AnnCorpus.Frame(fresh), "vec_id", "embedding", probes, 5,
+          width = Some(e))))
       assert(viaCommitted == viaFrame,
         s"committed and frame doors must serve identically at ef=$e")
     }
-    val narrow = rows(AnnIndex.searchNswBatchCommitted(spark, root,
-      corpusT, "vec_id", "embedding", probes, "probe_id", "pv", k = 5,
-      ef = 8)).map(_._3).sum
-    val wideSum = rows(AnnIndex.searchNswBatchCommitted(spark, root,
-      corpusT, "vec_id", "embedding", probes, "probe_id", "pv", k = 5,
-      ef = 1024)).map(_._3).sum
+    val narrow = rows(AnnIndex.serve(spark, root, AnnRequest("hnsw",
+        AnnCorpus.committed(spark, corpusT), "vec_id", "embedding", probes, 5,
+        width = Some(8)))).map(_._3).sum
+    val wideSum = rows(AnnIndex.serve(spark, root, AnnRequest("hnsw",
+        AnnCorpus.committed(spark, corpusT), "vec_id", "embedding", probes, 5,
+        width = Some(1024)))).map(_._3).sum
     assert(wideSum >= narrow - 1e-9,
       s"a wider beam must never return a worse top-k: $wideSum vs $narrow")
   }
@@ -1031,11 +1058,12 @@ class AnnIndexSpec extends AnyFunSuite {
     def probes = probeRows.toDF("probe_id", "pv")
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val viaFrame = rows(AnnIndex.searchNswBatch(spark, root, corpus,
-      "vec_id", "embedding", probes, "probe_id", "pv", k = 5))
+    val viaFrame = rows(AnnIndex.serve(spark, root, AnnRequest("hnsw",
+        AnnCorpus.Frame(corpus), "vec_id", "embedding", probes, 5)))
     val b0 = AnnIndex.serveBuilds.get()
-    val cold = rows(AnnIndex.searchNswBatchCommitted(spark, root, corpusT,
-      "vec_id", "embedding", probes, "probe_id", "pv", k = 5))
+    val cold = rows(AnnIndex.serve(spark, root, AnnRequest("hnsw",
+        AnnCorpus.committed(spark, corpusT), "vec_id", "embedding", probes,
+        5)))
     assert(cold == viaFrame,
       "committed-corpus serving must answer exactly like the frame form")
     assert(AnnIndex.serveBuilds.get() > b0,
@@ -1046,8 +1074,9 @@ class AnnIndexSpec extends AnyFunSuite {
     // metadata); the serve must still answer, bit-identically
     org.apache.commons.io.FileUtils.deleteDirectory(
       new java.io.File(corpusT, "data"))
-    val warm = rows(AnnIndex.searchNswBatchCommitted(spark, root, corpusT,
-      "vec_id", "embedding", probes, "probe_id", "pv", k = 5))
+    val warm = rows(AnnIndex.serve(spark, root, AnnRequest("hnsw",
+        AnnCorpus.committed(spark, corpusT), "vec_id", "embedding", probes,
+        5)))
     assert(warm == cold, "warm committed serve must reproduce the answers")
     assert(AnnIndex.serveBuilds.get() == b1,
       "a warm committed serve must not rebuild")
@@ -1071,9 +1100,10 @@ class AnnIndexSpec extends AnyFunSuite {
     // PQ: AS OF between the generations == serving the v1-pinned
     // artifacts explicitly (all four tables resolve at the instant);
     // the corpus view is the same-instant snapshot — base here
-    val asOfPq = rows(AnnIndex.searchIvfPqAsOf(spark, rootP, base,
-      "vec_id", "embedding", probeDf, "embedding", k = 10, nProbe = 4,
-      pool = 64, tsMillis = t1))
+    val asOfPq = rows(AnnServe.single(AnnIndex.serve(spark, rootP,
+        AnnRequest("pq", AnnCorpus.Frame(base), "vec_id", "embedding",
+        AnnServe.oneProbe(probeDf, "embedding"), 10, width = Some(4),
+        pool = Some(64), pin = AnnPin.AsOf(t1)))))
     def at(t: String) = graft.sources.VersionedScan.read(spark, t, 1)
     val v1Pq = rows(Pq.searchIvfPq(base,
       at(AnnIndex.ivfAssignmentsTable(rootP)),
@@ -1087,21 +1117,21 @@ class AnnIndexSpec extends AnyFunSuite {
     // same-instant corpus the reconstruction is exactly generation 1's
     val probes = base.orderBy("vec_id").limit(2)
       .select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
-    val asOfNsw = AnnIndex.searchNswBatchAsOf(spark, rootN, base,
-        "vec_id", "embedding", probes, "probe_id", "pv", k = 5,
-        tsMillis = t1)
+    val asOfNsw = AnnIndex.serve(spark, rootN, AnnRequest("hnsw",
+        AnnCorpus.Frame(base), "vec_id", "embedding", probes, 5,
+        pin = AnnPin.AsOf(t1)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     // the ground truth: a fresh index built over ONLY the base corpus
     val freshN = freshRoot("nswasoffresh")
     AnnIndex.ensureNsw(spark, freshN, base, "vec_id", "embedding")
-    val v1Nsw = AnnIndex.searchNswBatch(spark, freshN, base,
-        "vec_id", "embedding", probes, "probe_id", "pv", k = 5)
+    val v1Nsw = AnnIndex.serve(spark, freshN, AnnRequest("hnsw",
+        AnnCorpus.Frame(base), "vec_id", "embedding", probes, 5))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(asOfNsw == v1Nsw,
       "HNSW AS OF between generations must serve the older graph exactly")
     // and the CURRENT serve covers the grown corpus (coverage moved on)
-    assert(AnnIndex.searchNswBatch(spark, rootN, emb, "vec_id", "embedding",
-        probes, "probe_id", "pv", k = 5).count() == 10L)
+    assert(AnnIndex.serve(spark, rootN, AnnRequest("hnsw",
+        AnnCorpus.Frame(emb), "vec_id", "embedding", probes, 5)).count() == 10L)
   }
 
   test("OPTIMIZE on the index tables composes: serving and staleness survive compaction") {
@@ -1117,8 +1147,10 @@ class AnnIndexSpec extends AnyFunSuite {
       updatedCorpus.filter(col("vec_id") % 4 =!= 0), "vec_id", "embedding", 16)
     AnnIndex.ensureIvf(spark, root, updatedCorpus, "vec_id", "embedding", 16)
     val probeDf = emb.orderBy("vec_id").limit(1).select(col("embedding"))
-    def serve() = AnnIndex.searchIvf(spark, root, updatedCorpus,
-        "vec_id", "embedding", probeDf, "embedding", k = 10, nProbe = 4)
+    def serve() = AnnServe.single(AnnIndex.serve(spark, root,
+        AnnRequest("ivf", AnnCorpus.Frame(updatedCorpus), "vec_id",
+        "embedding", AnnServe.oneProbe(probeDf, "embedding"), 10,
+        width = Some(4))))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val before = serve()
     val aT = AnnIndex.ivfAssignmentsTable(root)
@@ -1198,9 +1230,10 @@ class AnnIndexSpec extends AnyFunSuite {
     val probe = probeRow.getSeq[Float](0).map(_.toDouble)
     val exact = Knn.exactTopK(emb, "embedding", "vec_id", probe, 10)
       .select("vec_id").collect().map(_.getLong(0)).toSet
-    val served = AnnIndex.searchIvfPq(spark, root, emb, "vec_id",
-        "embedding", emb.orderBy("vec_id").limit(1).select(col("embedding")),
-        "embedding", m = 0, k = 10, nProbe = 16, pool = emb.count().toInt)
+    val served = AnnServe.single(AnnIndex.serve(spark, root, AnnRequest("pq",
+        AnnCorpus.Frame(emb), "vec_id", "embedding",
+        AnnServe.oneProbe(emb.orderBy("vec_id").limit(1).select(col("embedding")), "embedding"),
+        10, width = Some(16), pool = Some(emb.count().toInt))))
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(served == exact,
       "all-lists + corpus-sized pool must recover the exact top-k")
@@ -1211,9 +1244,10 @@ class AnnIndexSpec extends AnyFunSuite {
     AnnIndex.ensureIvf(spark, root, emb, "vec_id", "embedding", 16)
     AnnIndex.ensurePq(spark, root, emb, "vec_id", "embedding", m = 8, k = 16)
     val probeDf = emb.orderBy("vec_id").limit(1).select(col("embedding"))
-    def serve() = AnnIndex.searchIvfPq(spark, root, emb, "vec_id",
-      "embedding", probeDf, "embedding", m = 0, k = 5, nProbe = 4,
-      pool = 50).collect()
+    def serve() = AnnServe.single(AnnIndex.serve(spark, root, AnnRequest("pq",
+        AnnCorpus.Frame(emb), "vec_id", "embedding",
+        AnnServe.oneProbe(probeDf, "embedding"), 5, width = Some(4),
+        pool = Some(50)))).collect()
     assert(serve().length == 5)
     // an out-of-band centroids commit (what a crash between retrainIvf
     // and its chained PQ heal leaves): serving and delta-ensure refuse
@@ -1254,8 +1288,10 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(Versioned.latestVersion(spark, AnnIndex.pqCodesTable(root)) == 1L,
       "the chained heal must land the first codes commit")
     val probeDf = emb.orderBy("vec_id").limit(1).select(col("embedding"))
-    assert(AnnIndex.searchIvfPq(spark, root, emb, "vec_id", "embedding",
-      probeDf, "embedding", m = 0, k = 5, nProbe = 4, pool = 50)
+    assert(AnnServe.single(AnnIndex.serve(spark, root, AnnRequest("pq",
+        AnnCorpus.Frame(emb), "vec_id", "embedding",
+        AnnServe.oneProbe(probeDf, "embedding"), 5, width = Some(4),
+        pool = Some(50))))
       .collect().length == 5, "the healed chain must serve")
     // LEG 2 — ann_ensure's own bootstrap repair: same torn state, the
     // generation moved by an out-of-band centroids commit; re-running
@@ -1276,8 +1312,10 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(bv2 == 2L && cv2 == 1L,
       s"bootstrap repair re-trains the stranded books (v2) and lands " +
         s"the first codes commit (v1): ($bv2, $cv2)")
-    assert(AnnIndex.searchIvfPq(spark, root2, emb, "vec_id", "embedding",
-      probeDf, "embedding", m = 0, k = 5, nProbe = 4, pool = 50)
+    assert(AnnServe.single(AnnIndex.serve(spark, root2, AnnRequest("pq",
+        AnnCorpus.Frame(emb), "vec_id", "embedding",
+        AnnServe.oneProbe(probeDf, "embedding"), 5, width = Some(4),
+        pool = Some(50))))
       .collect().length == 5, "the repaired bootstrap must serve")
     // idempotent: a re-ensure on the repaired root mints nothing
     assert(AnnIndex.ensurePq(spark, root2, emb, "vec_id", "embedding",
@@ -1351,8 +1389,10 @@ class AnnIndexSpec extends AnyFunSuite {
       files = 1, expected = Some(1L))
     val probeDf = emb.orderBy("vec_id").limit(1).select(col("embedding"))
     val e = intercept[IllegalArgumentException](
-      AnnIndex.searchIvfPq(spark, root, emb, "vec_id", "embedding",
-        probeDf, "embedding", m = 0, k = 5, nProbe = 4, pool = 50)
+      AnnServe.single(AnnIndex.serve(spark, root, AnnRequest("pq",
+          AnnCorpus.Frame(emb), "vec_id", "embedding",
+          AnnServe.oneProbe(probeDf, "embedding"), 5, width = Some(4),
+          pool = Some(50))))
         .collect())
     assert(e.getMessage.contains("RAGGED") &&
       e.getMessage.contains("retrainPq"), e.getMessage)
@@ -1406,8 +1446,10 @@ class AnnIndexSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     // join-plan fallback (no layout yet): spilled serve, no duplicates
-    val viaJoin = rows(AnnIndex.searchIvfCommitted(spark, root, corpusT,
-      "vec_id", "embedding", probeDf, "embedding", k = 10, nProbe = 2))
+    val viaJoin = rows(AnnServe.single(AnnIndex.serve(spark, root,
+        AnnRequest("ivf", AnnCorpus.committed(spark, corpusT), "vec_id",
+        "embedding", AnnServe.oneProbe(probeDf, "embedding"), 10,
+        width = Some(2)))))
     assert(viaJoin.map(_._1).distinct.size == viaJoin.size,
       s"spilled join-plan serve must dedup: $viaJoin")
     // lists layout: rows fan to BOTH lists (spl marker), pruned serve
@@ -1422,20 +1464,24 @@ class AnnIndexSpec extends AnyFunSuite {
       .filter(col("cid2").isNotNull).count()
     assert(layout.count() == corpus.count() + nSpilled,
       "the layout must hold one row per list MEMBERSHIP")
-    val served = rows(AnnIndex.searchIvfCommitted(spark, root, corpusT,
-      "vec_id", "embedding", probeDf, "embedding", k = 10, nProbe = 2))
+    val served = rows(AnnServe.single(AnnIndex.serve(spark, root,
+        AnnRequest("ivf", AnnCorpus.committed(spark, corpusT), "vec_id",
+        "embedding", AnnServe.oneProbe(probeDf, "embedding"), 10,
+        width = Some(2)))))
     assert(served == viaJoin,
       "spilled lists serving must answer exactly like the join plan")
     // batch committed == batch join plan, per (probe, id) unique
     val probes = corpus.orderBy("vec_id").limit(3)
       .select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
-    val batch = AnnIndex.searchIvfBatchCommitted(spark, root, corpusT,
-        "vec_id", "embedding", probes, "probe_id", "pv", k = 5, nProbe = 2)
+    val batch = AnnIndex.serve(spark, root, AnnRequest("ivf",
+        AnnCorpus.committed(spark, corpusT), "vec_id", "embedding", probes, 5,
+        width = Some(2)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(batch.map(t => (t._1, t._2)).distinct.length == batch.length,
       "spilled batch serve must not emit duplicate (probe, id) rows")
-    assert(batch.toSeq == AnnIndex.searchIvfBatch(spark, root, corpus,
-        "vec_id", "embedding", probes, "probe_id", "pv", k = 5, nProbe = 2)
+    assert(batch.toSeq == AnnIndex.serve(spark, root, AnnRequest("ivf",
+        AnnCorpus.Frame(corpus), "vec_id", "embedding", probes, 5,
+        width = Some(2)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .toSeq, "spilled batch lists serving must equal the batch join plan")
     // DELTA lands under the STORED scheme (caller passes no spill):
@@ -1463,10 +1509,13 @@ class AnnIndexSpec extends AnyFunSuite {
     // and the refreshed rows == a forced from-scratch re-cluster
     assert(AnnIndex.optimizeIvfServing(spark, root, corpusT,
       "vec_id", "embedding") == 2L)
-    val grownServed = rows(AnnIndex.searchIvfCommitted(spark, root, corpusT,
-      "vec_id", "embedding", probeDf, "embedding", k = 10, nProbe = 2))
-    assert(grownServed == rows(AnnIndex.searchIvf(spark, root, corpus,
-      "vec_id", "embedding", probeDf, "embedding", k = 10, nProbe = 2)),
+    val grownServed = rows(AnnServe.single(AnnIndex.serve(spark, root,
+        AnnRequest("ivf", AnnCorpus.committed(spark, corpusT), "vec_id",
+        "embedding", AnnServe.oneProbe(probeDf, "embedding"), 10,
+        width = Some(2)))))
+    assert(grownServed == rows(AnnServe.single(AnnIndex.serve(spark, root,
+        AnnRequest("ivf", AnnCorpus.Frame(corpus), "vec_id", "embedding",
+        AnnServe.oneProbe(probeDf, "embedding"), 10, width = Some(2))))),
       "the refreshed spilled layout must serve the join-plan answer")
     def layoutRows(v: Long) = VersionedScan.read(spark, lT, v)
       .select("cid", "vec_id").orderBy("cid", "vec_id")
@@ -1479,9 +1528,11 @@ class AnnIndexSpec extends AnyFunSuite {
     // AS-OF serving on the spilled root: the era-1 instant resolves
     // the era's layout (fresh-at-that-instant stamp) and must
     // reproduce the era-1 answers — deduped, never duplicated rows
-    val asOf1 = rows(AnnIndex.searchIvfCommittedAsOf(spark, root,
-      corpusT, "vec_id", "embedding", probeDf, "embedding",
-      k = 10, nProbe = 2, tsMillis = t1))
+    val asOf1 = rows(AnnServe.single(AnnIndex.serve(spark, root,
+        AnnRequest("ivf",
+        AnnCorpus.committed(spark, corpusT, AnnPin.AsOf(t1)), "vec_id",
+        "embedding", AnnServe.oneProbe(probeDf, "embedding"), 10,
+        width = Some(2), pin = AnnPin.AsOf(t1)))))
     assert(asOf1 == served,
       s"the spilled AS-OF serve must reproduce era-1: $asOf1 vs $served")
     // RETRAIN keeps the frozen scheme: new centroids, multi-assigned
@@ -1492,9 +1543,10 @@ class AnnIndexSpec extends AnyFunSuite {
       "a retrain must keep the spilled scheme")
     assert(retrained.select("spill_eps").head().getDouble(0) == 0.2,
       "a retrain must keep the stored eps")
-    val afterRetrain = rows(AnnIndex.searchIvfCommitted(spark, root,
-      corpusT, "vec_id", "embedding", probeDf, "embedding",
-      k = 10, nProbe = 16))
+    val afterRetrain = rows(AnnServe.single(AnnIndex.serve(spark, root,
+        AnnRequest("ivf", AnnCorpus.committed(spark, corpusT), "vec_id",
+        "embedding", AnnServe.oneProbe(probeDf, "embedding"), 10,
+        width = Some(16)))))
     // full width stays exact brute force, spill or not (same probe
     // frame as the serves — probeDf pinned the pre-append corpus
     // version, so its first row differs from the grown corpus's)
@@ -1767,8 +1819,9 @@ class AnnIndexSpec extends AnyFunSuite {
       "vec_id", "embedding")
     val probes = emb.orderBy("vec_id").limit(2)
       .select(col("vec_id").as("probe_id"), col("embedding").as("pv"))
-    def serve() = AnnIndex.searchNswBatchCommitted(spark, root, corpusT,
-        "vec_id", "embedding", probes, "probe_id", "pv", k = 5)
+    def serve() = AnnIndex.serve(spark, root, AnnRequest("hnsw",
+        AnnCorpus.committed(spark, corpusT), "vec_id", "embedding", probes,
+        5))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .toSeq
     val warm = serve() // cold: builds + caches
@@ -1839,10 +1892,12 @@ class AnnIndexSpec extends AnyFunSuite {
     val probeDf = corpus.orderBy("vec_id").limit(1).select(col("embedding"))
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(rows(AnnIndex.searchIvfCommitted(spark, root, corpusT,
-      "vec_id", "embedding", probeDf, "embedding", k = 10, nProbe = 2)) ==
-      rows(AnnIndex.searchIvf(spark, root, corpus, "vec_id", "embedding",
-        probeDf, "embedding", k = 10, nProbe = 2)),
+    assert(rows(AnnServe.single(AnnIndex.serve(spark, root, AnnRequest("ivf",
+        AnnCorpus.committed(spark, corpusT), "vec_id", "embedding",
+        AnnServe.oneProbe(probeDf, "embedding"), 10, width = Some(2))))) ==
+      rows(AnnServe.single(AnnIndex.serve(spark, root, AnnRequest("ivf",
+          AnnCorpus.Frame(corpus), "vec_id", "embedding",
+          AnnServe.oneProbe(probeDf, "embedding"), 10, width = Some(2))))),
       "refreshed-layout serving must answer exactly like the join plan")
     // phase 2: a MoR UPDATE (a DV delta, not a file swap) — the old
     // image's list rewrites, the new image lands, clean files carry
@@ -1886,8 +1941,10 @@ class AnnIndexSpec extends AnyFunSuite {
     val probeDf = corpus.orderBy("vec_id").limit(1).select(col("embedding"))
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val before = rows(AnnIndex.searchIvfCommitted(spark, root, corpusT,
-      "vec_id", "embedding", probeDf, "embedding", k = 10, nProbe = 2))
+    val before = rows(AnnServe.single(AnnIndex.serve(spark, root,
+        AnnRequest("ivf", AnnCorpus.committed(spark, corpusT), "vec_id",
+        "embedding", AnnServe.oneProbe(probeDf, "embedding"), 10,
+        width = Some(2)))))
     assert(graft.sources.Versioned.compactCommit(spark, lT,
       targetFiles = 1) == 2L)
     assert(AnnIndex.listsFreshness(spark, root, corpusT)("ivf_lists_fresh")
@@ -1895,8 +1952,9 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(AnnIndex.optimizeIvfServing(spark, root, corpusT,
       "vec_id", "embedding") == 2L,
       "a compacted-but-fresh layout must not recommit")
-    assert(rows(AnnIndex.searchIvfCommitted(spark, root, corpusT,
-      "vec_id", "embedding", probeDf, "embedding", k = 10, nProbe = 2))
+    assert(rows(AnnServe.single(AnnIndex.serve(spark, root, AnnRequest("ivf",
+        AnnCorpus.committed(spark, corpusT), "vec_id", "embedding",
+        AnnServe.oneProbe(probeDf, "embedding"), 10, width = Some(2)))))
       == before, "serving must ride the compacted layout unchanged")
     // the O(delta) refresh must parse the stamp THROUGH the compaction
     // and rewrite the compacted files: append one new corpus row,
@@ -2172,9 +2230,10 @@ class AnnIndexSpec extends AnyFunSuite {
       triples(Pq.encode(emb, "vec_id", "embedding", books, 8)),
       "a raw index's delta must encode raw against the frozen codebooks")
     // and raw serving rides the raw ADC unchanged — no coherence gate
-    assert(AnnIndex.searchIvfPq(spark, root, emb, "vec_id", "embedding",
-      emb.orderBy("vec_id").limit(1).select(col("embedding")), "embedding",
-      m = 0, k = 5, nProbe = 4, pool = 50).collect().length == 5)
+    assert(AnnServe.single(AnnIndex.serve(spark, root, AnnRequest("pq",
+        AnnCorpus.Frame(emb), "vec_id", "embedding",
+        AnnServe.oneProbe(emb.orderBy("vec_id").limit(1).select(col("embedding")), "embedding"),
+        5, width = Some(4), pool = Some(50)))).collect().length == 5)
   }
 
   test("explicit spill drift refuses loudly (r17): spill > 0 on a " +
