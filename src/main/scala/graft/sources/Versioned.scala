@@ -23,11 +23,20 @@ import org.apache.spark.sql.functions.{broadcast, col, element_at, lit, split}
   * }}}
   *
   * Protocol (the Delta log protocol in miniature):
-  *  - A commit first lands its data files under a fresh `data/c_<uuid>/`
-  *    directory nobody references yet, then publishes the manifest by
-  *    CREATE-EXCLUSIVE placement of a fully-written temp file at
-  *    `v{N}.json`. Readers either see the complete manifest or no
-  *    manifest — never a partial multi-file commit.
+  *  - ONE write sequence. Every commit that adds data lands its files
+  *    through [[land]]: a fresh `data/c_<uuid>/` directory nobody
+  *    references yet, the default shaping (range-partitioned and sorted
+  *    on the cluster key, round-robin without one), the write, the
+  *    CHECK gate (a violation deletes the directory), then footer stats
+  *    and bloom bitsets. Every copy-on-write mutation (OPTIMIZE,
+  *    recluster, DELETE, UPDATE, MERGE, replaceWhere, layout refresh)
+  *    then shares [[rewrite]]'s tail: one read of the touched files
+  *    (defaults, deletion vector, physical names), [[land]], dropping
+  *    the touched files' DV entries, and publication of carried ++ new
+  *    files CAS'd on the snapshot it was derived from.
+  *  - Publication places a fully-written temp manifest at `v{N}.json`
+  *    by CREATE-EXCLUSIVE placement. Readers either see the complete
+  *    manifest or no manifest — never a partial multi-file commit.
   *  - Optimistic concurrency: publication is a putIfAbsent behind the
   *    pluggable [[ManifestPublisher]] trait — `link(2)` on local
   *    filesystems (atomic fail-if-exists; local RENAME is
@@ -331,9 +340,9 @@ object Versioned {
     *
     * `constraints`: the table's CHECK constraints as (name, SQL
     * expression) pairs over LOGICAL column names (Delta table
-    * constraints). Carried forward by every commit; enforced on the
-    * write paths ([[commit]]/[[appendCommit]]) against the just-written
-    * batch BEFORE publication, with SQL CHECK semantics (a NULL
+    * constraints). Carried forward by every commit; enforced by
+    * [[land]]'s gate against the just-written batch BEFORE
+    * publication, with SQL CHECK semantics (a NULL
     * evaluation satisfies the constraint — `NOT NULL` is spelled
     * `col IS NOT NULL`, which is FALSE, not NULL, on null input).
     *
@@ -411,6 +420,26 @@ object Versioned {
       mapping match {
         case Some(m) => m.collectFirst { case (l, p) if p == physical => l }
         case None => Some(physical)
+      }
+
+    /** Physical columns of `df` renamed to the logical schema (mapped
+      * columns `df` lacks and dropped columns fall away); `keep` columns
+      * ride along unrenamed. */
+    private[sources] def toLogical(df: DataFrame, keep: String*): DataFrame =
+      mapping match {
+        case Some(m) => df.select(m.collect {
+          case (l, p) if df.columns.contains(p) => col(p).as(l)
+        } ++ keep.map(col): _*)
+        case None => df
+      }
+
+    /** Logical columns of `df` renamed to their physical names; `keep`
+      * columns ride along unrenamed. */
+    private[sources] def toPhysical(df: DataFrame, keep: String*): DataFrame =
+      mapping match {
+        case Some(m) =>
+          df.select(m.map { case (l, p) => col(l).as(p) } ++ keep.map(col): _*)
+        case None => df
       }
   }
 
@@ -674,19 +703,20 @@ object Versioned {
       }.reduce(_ unionByName _)
   }
 
-  /** Full logical read of a file subset: physical scan (defaults
-    * substituted) → deletion vector → column-mapping projection
-    * (rename to logical names, dropped columns pruned). */
-  private[sources] def readFiles(spark: SparkSession, table: String, snap: Snapshot,
-      files: Seq[DataFile]): DataFrame = {
-    val dv = applyDv(spark, table, snap,
-      rawReadWithDefaults(spark, table, snap, files))
+  /** Live rows of a file subset in PHYSICAL names: physical scan
+    * (defaults substituted) → deletion vector. The one read every
+    * [[rewrite]] feeds its row logic. */
+  private def physicalRead(spark: SparkSession, table: String, snap: Snapshot,
+      files: Seq[DataFile]): DataFrame =
+    applyDv(spark, table, snap, rawReadWithDefaults(spark, table, snap, files))
       .drop("__graft_file", "__graft_pos")
-    snap.mapping match {
-      case Some(m) => dv.select(m.map { case (l, p) => col(p).as(l) }: _*)
-      case None => dv
-    }
-  }
+
+  /** Full logical read of a file subset: [[physicalRead]] → column-
+    * mapping projection (rename to logical names, dropped columns
+    * pruned). */
+  private[sources] def readFiles(spark: SparkSession, table: String, snap: Snapshot,
+      files: Seq[DataFile]): DataFrame =
+    snap.toLogical(physicalRead(spark, table, snap, files))
 
   /** Logical snapshot read with STABLE ROW IDS (Delta row tracking /
     * Iceberg row lineage): appends an extra `_row_id` long column =
@@ -741,8 +771,8 @@ object Versioned {
       val n = new Path(df.path).getName
       (n, df.baseRowId.get, addedAt.getOrElse(n, snap.version))
     })).toDF("__rt_name", "__rt_base", "__rt_ver")
-    val extras = col("_row_id") +:
-      (if (withCommitVersion) Seq(col("_row_commit")) else Nil)
+    val extras = "_row_id" +:
+      (if (withCommitVersion) Seq("_row_commit") else Nil)
     val withId0 = live
       .withColumn("__rt_n", element_at(split(col("__graft_file"), "/"), -1))
       .join(broadcast(baseDf), col("__rt_n") === col("__rt_name"))
@@ -752,11 +782,7 @@ object Versioned {
       else withId0)
       .drop("__graft_file", "__graft_pos", "__rt_n", "__rt_name",
         "__rt_base", "__rt_ver")
-    snap.mapping match {
-      case Some(m) =>
-        withId.select(m.map { case (l, p) => col(p).as(l) } ++ extras: _*)
-      case None => withId
-    }
+    snap.toLogical(withId, extras: _*)
   }
 
   /** Merge-on-read: subtract the snapshot's deletion vector, if any —
@@ -825,38 +851,15 @@ object Versioned {
       expected: Option[Long] = None, ts: Option[Long] = None,
       layout: Option[DataFrame => DataFrame] = None,
       publisher: ManifestPublisher = ManifestPublisher.Auto): Long = {
-    val rel = "data/c_" + java.util.UUID.randomUUID().toString.replace("-", "").take(16)
-    val dataPath = new Path(table, rel)
     val baseSnap = {
       val base = expected.getOrElse(latestVersion(spark, table))
       if (base <= 0) None else Some(snapshot(spark, table, base))
     }
     // GENERATED columns the batch does not supply are computed here
     // (before shaping, so the layout sees them); supplied ones are
-    // validated through the CHECK gate below
+    // validated through the CHECK gate
     val gens = baseSnap.map(_.generated).getOrElse(Nil)
     val gdf = applyGenerated(df, gens)
-    // `layout` overrides the default shaping — the hook multi-dim
-    // clustering ([[zorderCommit]]) plugs its Morton sort into
-    val shaped = layout.map(_(gdf)).getOrElse(statsCol match {
-      case Some(k) =>
-        gdf.repartitionByRange(files, col(k)).sortWithinPartitions(k)
-      case None => if (files > 0) gdf.repartition(files) else gdf
-    })
-    shaped.write.mode("errorifexists").parquet(dataPath.toString)
-    // CHECK gate on the just-written (still unreferenced) files — one
-    // column-pruned scan of the batch, never a recompute of the
-    // caller's plan; a full rewrite lands logical column names, so
-    // constraints apply directly. Caller-SUPPLIED generated-column
-    // values ride the same gate as synthetic equality checks.
-    val priorCs = baseSnap.map(_.constraints).getOrElse(Nil) ++
-      generatedChecks(gens, df.columns)
-    if (priorCs.nonEmpty)
-      try checkConstraints(spark, spark.read.parquet(dataPath.toString),
-        priorCs, table)
-      catch { case e: ConstraintViolationException =>
-        fs(spark, table).delete(dataPath, true); throw e }
-    val entries0 = listDataFiles(spark, table, rel, statsCol)
     // a full rewrite resets physical names to LOGICAL ones, so a bloom
     // index follows its column's logical identity: recompute the
     // bitsets under the new name if the column survives the rewrite,
@@ -867,12 +870,16 @@ object Versioned {
         bs.logicalName(bloomPhys(physC)).filter(gdf.columns.contains)
           .map(l => (marker + l, m, k))
       })
-    val entries = rewrittenCfg match {
-      case Some((c, m, k)) => attachBlooms(spark, table,
-        spark.read.schema(gdf.schema).parquet(dataPath.toString),
-        entries0, c, m, k)
-      case None => entries0
-    }
+    // a full rewrite lands logical column names, so the gate sees the
+    // batch as written; caller-SUPPLIED generated-column values ride it
+    // as synthetic equality checks. `layout` overrides the default
+    // shaping — the hook multi-dim clustering ([[zorderCommit]]) plugs
+    // its Morton sort into
+    val entries = land(spark, table, gdf, files, statsCol, statsCol,
+      rewrittenCfg, Some(gdf.schema),
+      checks = baseSnap.map(_.constraints).getOrElse(Nil) ++
+        generatedChecks(gens, df.columns),
+      layout = layout).files
     // a full rewrite materializes every column into fresh files
     // (no noCols stamps), so declared defaults are spent: clear them
     // with the mapping reset
@@ -968,8 +975,7 @@ object Versioned {
     // a batch supplying the column is refused. Allocation is the
     // two-pass partition-offset scheme — no global window, no
     // single-task funnel (see allocateIdentity).
-    var identityHold: Option[DataFrame] = None
-    val gdf = prior.identity match {
+    val (gdf, identityHold) = prior.identity match {
       case Some((idCol, next)) =>
         require(!gdf1.columns.contains(idCol),
           s"$idCol is GENERATED ALWAYS AS IDENTITY on $table — " +
@@ -978,9 +984,8 @@ object Versioned {
           throw new IllegalArgumentException(
             s"identity assignment on $table needs a commit key to order the batch"))
         val (assigned, hold) = allocateIdentity(gdf1, idCol, orderKey, next)
-        identityHold = Some(hold)
-        assigned
-      case None => gdf1
+        (assigned, Some(hold))
+      case None => (gdf1, None)
     }
     // incoming columns are LOGICAL: translate to physical names under
     // the table's column mapping (a NEW logical column gets itself as
@@ -991,11 +996,12 @@ object Versioned {
     // logical "b" would land in physical "b", the data behind logical
     // c). Delta prevents this with synthetic field ids; here the append
     // refuses the collision explicitly.
-    // the refusal paths between allocation and the write (mapping
-    // collisions, schema-merge conflicts) must release the persisted
-    // identity batch too — otherwise each failed append to an
-    // identity table leaks a batch-sized cache entry
-    val (newMapping, resolved, shaped) = try {
+    // the refusal paths between allocation and the landing (mapping
+    // collisions, schema-merge conflicts, an unresolvable shaping key)
+    // must release the persisted identity batch too — otherwise each
+    // failed append to an identity table leaks a batch-sized cache
+    // entry; once the batch has landed it is released as well
+    val (newMapping, resolved, landed) = try {
       prior.mapping.foreach { m =>
         val newCols = gdf.columns.filterNot(c => m.exists(_._1 == c))
         val collisions = newCols.filter(c => m.exists(_._2 == c))
@@ -1029,54 +1035,26 @@ object Versioned {
         }: _*)
         case None => physDf
       }
-      // shaping is built HERE too: Dataset transformations analyze
-      // eagerly, so an unresolvable repartition key would otherwise
-      // throw between the release sites and leak the persisted batch
-      val shaped0 = prior.statsCol match {
-        case Some(k) =>
-          aligned0.repartitionByRange(files, col(k)).sortWithinPartitions(k)
-        case None => if (files > 0) aligned0.repartition(files) else aligned0
-      }
-      (newMapping0, resolved0, shaped0)
-    } catch { case t: Throwable =>
-      identityHold.foreach(GraftShims.releaseCheckpoint); throw t
-    }
-    val rel = "data/c_" + java.util.UUID.randomUUID().toString.replace("-", "").take(16)
-    try shaped.write.mode("errorifexists").parquet(new Path(table, rel).toString)
-    finally identityHold.foreach(GraftShims.releaseCheckpoint)
-    // CHECK gate on the written batch, projected back to LOGICAL names
-    // (constraints are declared logically; the files carry physical
-    // names under column mapping)
-    val effChecks = prior.constraints ++
-      generatedChecks(prior.generated, df.columns)
-    if (effChecks.nonEmpty) {
-      val logicalView = spark.read.parquet(new Path(table, rel).toString)
-        .select(gdf.columns.map(c =>
-          col(prior.physicalName(c)).as(c)): _*)
-      try checkConstraints(spark, logicalView, effChecks, table)
-      catch { case e: ConstraintViolationException =>
-        fs(spark, table).delete(new Path(table, rel), true); throw e }
-    }
-    val newEntries0 = listDataFiles(spark, table, rel, prior.statsCol)
-      .filter(_.rows > 0) // row-less part files carry no data: keep the
-    // manifest free of them, and make an EMPTY batch a no-op version
-    // (a streaming sink's filtered-out micro-batch must not mint
-    // commits) — the landed empty directory is VACUUM-collectable
-    if (newEntries0.isEmpty && prior.version > 0) {
-      fs(spark, table).delete(new Path(table, rel), true)
+      // CHECK gate on the landed batch, projected back to LOGICAL names
+      // (constraints are declared logically; the files carry physical
+      // names under column mapping); a maintained bloom index blooms
+      // ITS OWN batch — O(batch), the carried files keep their bitsets
+      // by reference
+      (newMapping0, resolved0,
+        land(spark, table, aligned0, files, prior.statsCol, prior.statsCol,
+          prior.bloomCfg, resolved0,
+          checks = prior.constraints ++
+            generatedChecks(prior.generated, df.columns),
+          view = _.select(gdf.columns.map(c =>
+            col(prior.physicalName(c)).as(c)): _*)))
+    } finally identityHold.foreach(GraftShims.releaseCheckpoint)
+    // row-less part files carry no data: keep the manifest free of
+    // them, and make an EMPTY batch a no-op version (a streaming sink's
+    // filtered-out micro-batch must not mint commits)
+    val newEntries = landed.files.filter(_.rows > 0)
+    if (newEntries.isEmpty && prior.version > 0) {
+      fs(spark, table).delete(new Path(table, landed.rel), true)
       return prior.version
-    }
-    // a maintained bloom index blooms ITS OWN batch — O(batch), the
-    // carried files keep their bitsets by reference
-    val newEntries = prior.bloomCfg match {
-      case Some((c, m, k)) =>
-        val reader = resolved match {
-          case Some(sch) => spark.read.schema(sch)
-          case None => spark.read
-        }
-        attachBlooms(spark, table,
-          reader.parquet(new Path(table, rel).toString), newEntries0, c, m, k)
-      case None => newEntries0
     }
     // Blind appends REBASE on conflict (Delta's automatic resolution):
     // a concurrent commit changes which prior files exist, never what
@@ -1129,13 +1107,13 @@ object Versioned {
       // a concurrent append's advance surfaces as the rebase conflict
       // above, so overlapping id ranges are structurally impossible
       identity = prior.identity.map { case (c, next) =>
-        Some((c, next + newEntries0.map(_.rows).sum))
+        Some((c, next + newEntries.map(_.rows).sum))
       },
       baseSnapHint = if (prior.version > 0) Some(prior) else None)
     catch { case applied: TxnAlreadyApplied =>
       // the concurrent twin's commit IS this batch — drop our
       // never-referenced duplicate data dir and report its version
-      fs(spark, table).delete(new Path(table, rel), true)
+      fs(spark, table).delete(new Path(table, landed.rel), true)
       applied.version
     }
   }
@@ -1200,10 +1178,11 @@ object Versioned {
     * publishes a METADATA-ONLY commit carrying the new constraint —
     * same file list, CAS'd on the current version so a concurrent
     * write whose batch this validation never saw surfaces as a
-    * conflict instead of landing unchecked. Every subsequent
-    * [[commit]]/[[appendCommit]] (and everything that funnels through
-    * them: MERGE, OPTIMIZE, streaming foreachBatch sinks) enforces it
-    * on the incoming batch only — O(batch), never O(table). */
+    * conflict instead of landing unchecked. Every subsequent write
+    * that lands new rows enforces it through [[land]]'s gate (commits,
+    * appends and their streaming sinks, staged appends, MoR upserts,
+    * UPDATE, MERGE, replaceWhere) on the incoming batch only —
+    * O(batch), never O(table). */
   def addCheckConstraint(spark: SparkSession, table: String, name: String,
       sqlExpr: String): Long = {
     val cur = snapshot(spark, table)
@@ -1439,7 +1418,8 @@ object Versioned {
   private def attachBlooms(spark: SparkSession, table: String,
       scan: DataFrame, entries: Seq[DataFile], physCol: String,
       m: Int, k: Int): Seq[DataFile] = {
-    if (entries.isEmpty) return entries
+    // row-less files (an empty batch) get the EMPTY bitset without a job
+    if (entries.forall(_.rows == 0L)) return entries.map(_.copy(bloom = Some("")))
     import org.apache.spark.sql.functions.{array, collect_list, explode, hash, input_file_name, lit, lower, pmod, split}
     // value index blooms the column's values; token index blooms the
     // DISTINCT lowercase whitespace tokens (the same tokenization the
@@ -1481,7 +1461,7 @@ object Versioned {
     * the manifest) holds FPP < 2% to ~10k distinct values per file;
     * size bits toward 10·n for big files. Every rewrite path
     * (OPTIMIZE, recluster, targeted DELETE/REPLACE, MoR upsert)
-    * re-blooms its own output via [[maintainBlooms]] — O(touched
+    * re-blooms its own output as it lands ([[land]]) — O(touched
     * files) — so the index never decays under steady-state
     * maintenance. */
   def addBloomIndex(spark: SparkSession, table: String, column: String,
@@ -1870,25 +1850,12 @@ object Versioned {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
     val snap = snapshot(spark, table)
     val cutoff = (targetBytes * minFill).toLong
-    val (touched, carried) = snap.files.partition(f =>
-      f.bytes > 0L && f.bytes < cutoff)
+    val touched = snap.files.filter(f => f.bytes > 0L && f.bytes < cutoff)
     if (touched.size < 2) return snap.version
     val bins = math.max(1,
       math.ceil(touched.map(_.bytes).sum.toDouble / targetBytes).toInt)
-    val df = applyDv(spark, table, snap, rawRead(spark, table, snap, touched))
-    val shaped = snap.statsCol match {
-      case Some(k) => df.repartitionByRange(bins, col(k)).sortWithinPartitions(k)
-      case None => df.repartition(bins)
-    }
-    val rel = "data/c_" + java.util.UUID.randomUUID().toString.replace("-", "").take(16)
-    shaped.write.mode("errorifexists").parquet(new Path(table, rel).toString)
-    val (newDv, newDvRows) = dropDvEntries(spark, table, snap, touched)
-    publish(spark, table, snap.statsCol,
-      carried ++ maintainBlooms(spark, table, snap, rel,
-        listDataFiles(spark, table, rel, snap.statsCol)),
-      op = "OPTIMIZE", dv = newDv, dvRows = newDvRows,
-      expected = Some(snap.version),
-      schemaJson = snap.schemaJson, mapping = snap.mapping)
+    rewrite(spark, table, snap, touched, "OPTIMIZE")(files = bins)
+      .fold(snap.version)(_.version)
   }
 
   /** AUTO COMPACTION on the write path (Delta autoCompact /
@@ -1916,43 +1883,133 @@ object Versioned {
     else v
   }
 
-  /** CHECK gate for write paths that land NEW rows without funnelling
-    * through [[commit]]/[[appendCommit]] (replaceWhere, MoR upsert):
-    * evaluate the table constraints over the just-written unreferenced
-    * files, projected to logical names, and abort with cleanup on a
-    * violation — the same batch-only cost model as the main gate. */
-  private def constraintGate(spark: SparkSession, table: String,
-      snap: Snapshot, rel: String,
-      restrict: DataFrame => DataFrame = identity): Unit = {
-    if (snap.constraints.isEmpty) return
-    val written = spark.read.parquet(new Path(table, rel).toString)
-    val logical = snap.mapping match {
-      case Some(m) => written.select(m.collect {
-        case (l, p) if written.columns.contains(p) => col(p).as(l)
-      }: _*)
-      case None => written
-    }
-    try checkConstraints(spark, restrict(logical), snap.constraints, table)
+  /** A fresh directory name under `data/` that no manifest references
+    * yet: `c` for landed data files, `dv` for deletion-vector
+    * sidecars. */
+  private def freshDir(kind: String): String =
+    s"data/${kind}_" + java.util.UUID.randomUUID().toString.replace("-", "").take(16)
+
+  /** The CHECK gate, run by [[land]] on every batch it lands: evaluate
+    * `checks` over the just-written (still unreferenced) files seen
+    * through `view` (logical names, optionally restricted to the rows
+    * that are new), and on a violation delete the directory and throw
+    * before anything publishes — one column-pruned scan of the batch,
+    * never a recompute of the caller's plan. */
+  private def constraintGate(spark: SparkSession, table: String, rel: String,
+      checks: Seq[(String, String)], view: DataFrame => DataFrame): Unit = {
+    if (checks.isEmpty) return
+    val dir = new Path(table, rel)
+    try checkConstraints(spark, view(spark.read.parquet(dir.toString)),
+      checks, table)
     catch { case e: ConstraintViolationException =>
-      fs(spark, table).delete(new Path(table, rel), true); throw e }
+      fs(spark, table).delete(dir, true); throw e }
   }
 
-  /** Bloom a rewrite's new files when the table has a bloom index —
-    * the same O(touched files) maintenance [[appendCommit]] does for
-    * its batch, so steady-state OPTIMIZE/recluster/delete ticks never
-    * decay point-lookup pruning. */
-  private def maintainBlooms(spark: SparkSession, table: String,
-      snap: Snapshot, rel: String, entries: Seq[DataFile]): Seq[DataFile] =
-    snap.bloomCfg match {
-      case Some((c, m, k)) =>
-        val reader = snap.physicalSchema match {
-          case Some(sch) => spark.read.schema(sch)
-          case None => spark.read
-        }
-        attachBlooms(spark, table,
-          reader.parquet(new Path(table, rel).toString), entries, c, m, k)
-      case None => entries
+  /** Files one commit landed: their table-relative directory and their
+    * manifest entries. */
+  private final case class Landed(rel: String, files: Seq[DataFile])
+
+  /** LAND a commit's new data files — the first half of every write
+    * that adds data ([[commit]], [[appendCommit]], [[stageAppend]], the
+    * merge-on-read ops and every [[rewrite]]); publication is the
+    * second. `rows` (physical names) lands under a fresh `data/c_<id>/`
+    * shaped by `layout` when given, else range-partitioned and sorted on
+    * `key` across `files` files (round-robin without a key). `finish`
+    * runs on the shaped frame just before the write: row markers are
+    * observed there, ABOVE the range shuffle (below it, the
+    * RangePartitioner's sampling pass would count them twice), and
+    * dropped. Then the CHECK gate, footer stats keyed on `statsCol`, and
+    * — when the table keeps a `bloom` index — the batch's own bitsets,
+    * read under `schema`: O(batch), never O(table). */
+  private def land(spark: SparkSession, table: String, rows: DataFrame,
+      files: Int, key: Option[String], statsCol: Option[String],
+      bloom: Option[(String, Int, Int)],
+      schema: Option[org.apache.spark.sql.types.StructType],
+      checks: Seq[(String, String)] = Nil,
+      view: DataFrame => DataFrame = identity,
+      layout: Option[DataFrame => DataFrame] = None,
+      finish: DataFrame => DataFrame = identity): Landed = {
+    val rel = freshDir("c")
+    val dir = new Path(table, rel).toString
+    val shaped = layout.map(_(rows)).getOrElse(key match {
+      case Some(k) =>
+        rows.repartitionByRange(files, col(k)).sortWithinPartitions(k)
+      case None => if (files > 0) rows.repartition(files) else rows
+    })
+    finish(shaped).write.mode("errorifexists").parquet(dir)
+    constraintGate(spark, table, rel, checks, view)
+    val listed = listDataFiles(spark, table, rel, statsCol)
+    Landed(rel, bloom match {
+      case Some((c, m, k)) => attachBlooms(spark, table,
+        schema.fold(spark.read)(spark.read.schema).parquet(dir), listed, c, m, k)
+      case None => listed
+    })
+  }
+
+  /** What a [[rewrite]] published: the new version, the files it
+    * landed, and the live tombstone count of its deletion vector. */
+  private final case class Rewritten(version: Long, added: Seq[DataFile],
+      dvRows: Option[Long])
+
+  /** The COPY-ON-WRITE tail every file-rewriting mutation shares. The
+    * caller classifies `snap`'s files (`touched` rewrite, the rest carry
+    * BY REFERENCE — same path, same bytes, never read) and supplies the
+    * row logic; this reads the touched files ONE way — column defaults
+    * substituted, deletion vector applied (a raw read would move masked
+    * rows to positions the positional DV cannot address), physical
+    * names — hands them to `rows`, lands the result through [[land]]
+    * (one file per touched file unless `files` says otherwise,
+    * clustered on `clusterBy` or else `statsCol` when present), drops the
+    * DV entries that addressed the touched files, and publishes carried
+    * ++ landed files CAS'd on `snap`. A changed clustering key re-derives
+    * the carried files' key ranges from their per-column stats. `gate`,
+    * when set, restricts the CHECK gate's logical view to the rows that
+    * are new; ops that only drop or move existing rows leave it None.
+    *
+    * ZERO-MATCH RULE: a rewrite that touches no file, adds no rows of its
+    * own (`adds`), records no `txn` and keeps the clustering key changes
+    * nothing — no commit (None), so a no-op statement neither mints a
+    * version nor competes for the CAS slot against real writers. */
+  private def rewrite(spark: SparkSession, table: String, snap: Snapshot,
+      touched: Seq[DataFile], op: String)(
+      rows: DataFrame => DataFrame = identity,
+      files: Int = math.max(1, touched.size),
+      statsCol: Option[String] = snap.statsCol,
+      clusterBy: Option[String] = None,
+      txn: Option[String] = None, adds: Boolean = false,
+      gate: Option[DataFrame => DataFrame] = None,
+      finish: DataFrame => DataFrame = identity): Option[Rewritten] = {
+    val writes = touched.nonEmpty || adds
+    if (!writes && txn.isEmpty && statsCol == snap.statsCol) return None
+    val tp = touched.map(_.path).toSet
+    val carried = snap.files.filterNot(f => tp(f.path)).map { f =>
+      if (statsCol == snap.statsCol) f
+      else {
+        val r = statsCol.flatMap(f.stats.get).flatMap(_.longRange)
+        f.copy(minKey = r.map(_._1), maxKey = r.map(_._2))
+      }
     }
+    val added = if (!writes) Nil else {
+      val in =
+        if (touched.nonEmpty) physicalRead(spark, table, snap, touched)
+        else spark.createDataFrame(
+          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+          snap.physicalSchema.getOrElse(
+            rawRead(spark, table, snap, snap.files).schema))
+      val out = rows(in)
+      land(spark, table, out, files,
+        clusterBy.orElse(statsCol).filter(out.columns.contains), statsCol,
+        snap.bloomCfg, snap.physicalSchema,
+        checks = if (gate.isDefined) snap.constraints else Nil,
+        view = w => gate.fold(w)(_(snap.toLogical(w))),
+        finish = finish).files
+    }
+    val (dv, dvRows) = dropDvEntries(spark, table, snap, touched)
+    Some(Rewritten(publish(spark, table, statsCol, carried ++ added, txn, op,
+      dv = dv, dvRows = dvRows, expected = Some(snap.version),
+      schemaJson = snap.schemaJson, mapping = snap.mapping,
+      baseSnapHint = Some(snap)), added, dvRows))
+  }
 
   /** INCREMENTAL RE-CLUSTERING (the Liquid-clustering companion to
     * q88's whole-table re-cluster commit): evolve the table's
@@ -1965,7 +2022,8 @@ object Versioned {
     * ingest, earlier recluster output — carry BY REFERENCE with their
     * minKey/maxKey re-derived from the per-column stats map, so a spec
     * change after mostly-conforming ingest costs O(violating files),
-    * not a table rewrite; with nothing violating it is METADATA-ONLY.
+    * not a table rewrite; with nothing violating it is METADATA-ONLY
+    * (and no commit at all when `newKey` already is the spec).
     * Conforming files may still overlap the rewritten ones (range
     * reads stay exact via the residual filter; pruning is best-effort,
     * exactly Delta Liquid's contract), and one tick converges: the
@@ -1977,10 +2035,6 @@ object Versioned {
     val phys = snap.physicalName(newKey)
     def range(f: DataFile): Option[(Long, Long)] =
       f.stats.get(phys).flatMap(_.longRange)
-    def rekey(f: DataFile): DataFile = range(f) match {
-      case Some((lo, hi)) => f.copy(minKey = Some(lo), maxKey = Some(hi))
-      case None => f.copy(minKey = None, maxKey = None)
-    }
     val ranged = snap.files.flatMap(range)
     if (ranged.isEmpty) // no stats anywhere: degrade to the full re-cluster
       return commit(spark, table, read(spark, table, snap.version),
@@ -1988,28 +2042,16 @@ object Versioned {
     val lo = ranged.map(_._1).min
     val hi = ranged.map(_._2).max
     val width = math.max(1L, hi - lo)
-    val (touched, carried) = snap.files.partition { f =>
+    val touched = snap.files.filter { f =>
       range(f) match {
         case Some((mn, mx)) => (mx - mn).toDouble > wideFraction * width
         case None => true // unprovable ⇒ rewrite
       }
     }
-    if (touched.isEmpty) // every file already conforms: re-spec is pure metadata
-      return publish(spark, table, Some(phys), carried.map(rekey),
-        op = "RECLUSTER", dv = snap.dv, dvRows = snap.dvRows,
-        expected = Some(snap.version),
-        schemaJson = snap.schemaJson, mapping = snap.mapping)
-    val df = applyDv(spark, table, snap, rawRead(spark, table, snap, touched))
-    val rel = "data/c_" + java.util.UUID.randomUUID().toString.replace("-", "").take(16)
-    df.repartitionByRange(files, col(phys)).sortWithinPartitions(phys)
-      .write.mode("errorifexists").parquet(new Path(table, rel).toString)
-    val (newDv, newDvRows) = dropDvEntries(spark, table, snap, touched)
-    publish(spark, table, Some(phys),
-      carried.map(rekey) ++ maintainBlooms(spark, table, snap, rel,
-        listDataFiles(spark, table, rel, Some(phys))),
-      op = "RECLUSTER", dv = newDv, dvRows = newDvRows,
-      expected = Some(snap.version),
-      schemaJson = snap.schemaJson, mapping = snap.mapping)
+    // nothing violating: a new key is a pure metadata re-spec, the
+    // current one a no-op
+    rewrite(spark, table, snap, touched, "RECLUSTER")(
+      files = files, statsCol = Some(phys)).fold(snap.version)(_.version)
   }
 
   /** The file matcher behind [[rewriteFilesByKey]] and its cost
@@ -2073,23 +2115,12 @@ object Versioned {
     require(snap.mapping.isEmpty && snap.initialDefaults.isEmpty,
       s"rewriteFilesByKey: $table carries column mapping / initial " +
         "defaults — partial rewrite would mix name generations")
-    val (touched, carried) =
-      snap.files.partition(dirtyFileMatcher(clusterCol, dirtyKeys))
-    val covered =
-      if (touched.isEmpty) read(spark, table, snap.version).limit(0)
-      else readFiles(spark, table, snap, touched)
-    val df = replace(covered)
-    val rel = "data/c_" + java.util.UUID.randomUUID().toString.replace("-", "").take(16)
-    df.repartitionByRange(math.max(1, touched.size), col(clusterCol))
-      .sortWithinPartitions(clusterCol)
-      .write.mode("errorifexists").parquet(new Path(table, rel).toString)
-    val (newDv, newDvRows) = dropDvEntries(spark, table, snap, touched)
-    publish(spark, table, Some(clusterCol),
-      carried ++ maintainBlooms(spark, table, snap, rel,
-        listDataFiles(spark, table, rel, Some(clusterCol))),
-      txn = txn, op = op, dv = newDv, dvRows = newDvRows,
-      expected = Some(expected),
-      schemaJson = snap.schemaJson, mapping = snap.mapping)
+    // the stamped txn IS the refresh's record, so even a delta that
+    // rewrites and adds nothing publishes (`adds`)
+    rewrite(spark, table, snap,
+      snap.files.filter(dirtyFileMatcher(clusterCol, dirtyKeys)), op)(
+      rows = replace, statsCol = Some(clusterCol), txn = txn,
+      adds = true).fold(snap.version)(_.version)
   }
 
   /** Ids of rows in files that DIFFER between two versions of a table —
@@ -2242,30 +2273,10 @@ object Versioned {
           .collect().map(_.getString(0)).toSet
         withStats.filter(f => touchedPaths.contains(f.path))
       }
-    val touched = statless ++ touchedStatful
-    val tp = touched.map(_.path).toSet
-    val carried = snap.files.filterNot(f => tp(f.path))
-    if (touched.isEmpty)
-      return publish(spark, table, snap.statsCol, carried, op = "DELETE",
-        dv = snap.dv, dvRows = snap.dvRows, expected = Some(snap.version),
-        schemaJson = snap.schemaJson, mapping = snap.mapping)
-    // read touched files THROUGH the live DV (a raw read would copy
-    // DV-masked rows to new positions the positional DV can't address —
-    // resurrection), then anti-join the tombstones
-    val survivors = applyDv(spark, table, snap,
-      rawRead(spark, table, snap, touched))
-      .join(broadcast(physTombstones), Seq(physKey), "left_anti")
-    val rel = "data/c_" + java.util.UUID.randomUUID().toString.replace("-", "").take(16)
-    survivors.repartitionByRange(math.max(1, touched.size), col(physKey))
-      .sortWithinPartitions(physKey)
-      .write.mode("errorifexists").parquet(new Path(table, rel).toString)
-    val (newDv, newDvRows) = dropDvEntries(spark, table, snap, touched)
-    publish(spark, table, snap.statsCol,
-      carried ++ maintainBlooms(spark, table, snap, rel,
-        listDataFiles(spark, table, rel, snap.statsCol)),
-      op = "DELETE", dv = newDv, dvRows = newDvRows,
-      expected = Some(snap.version),
-      schemaJson = snap.schemaJson, mapping = snap.mapping)
+    // survivors land clustered on the tombstone key
+    rewrite(spark, table, snap, statless ++ touchedStatful, "DELETE")(
+      rows = _.join(broadcast(physTombstones), Seq(physKey), "left_anti"),
+      clusterBy = Some(physKey)).fold(snap.version)(_.version)
   }
 
   /** DV entries addressing rewritten (now unreferenced) files are dead;
@@ -2372,41 +2383,16 @@ object Versioned {
       parsed: org.apache.spark.sql.catalyst.expressions.Expression): Long = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
     val snap = snapshot(spark, table)
-    // the predicate arrives over LOGICAL names; stats keys, the file
-    // split and the rewrite all live in physical space
-    val touched = filesPossiblyMatching(spark, table, snap, Some(parsed))
-    val touchedPaths = touched.map(_.path).toSet
-    val carried = snap.files.filterNot(f => touchedPaths(f.path))
-    // nothing can match: NO commit (Delta's no-op skip) — a zero-match
-    // DELETE must not mint versions or compete for the CAS slot
-    // against real writers
-    if (touched.isEmpty) return snap.version
-    // DELETE keeps rows where the predicate is FALSE **or NULL**: a
-    // bare !pred would silently drop the NULL rows (three-valued logic)
+    // the predicate arrives over LOGICAL names; stats keys and the file
+    // split live in physical space. DELETE keeps rows where the
+    // predicate is FALSE **or NULL**: a bare !pred would silently drop
+    // the NULL rows (three-valued logic)
     val keep = not(coalesce(
       org.apache.spark.sql.GraftShims.column(parsed), lit(false)))
-    val survivors = readFiles(spark, table, snap, touched).filter(keep)
-    val physSurvivors = snap.mapping match {
-      case Some(m) => survivors.select(m.map { case (l, p) =>
-        col(l).as(p) }: _*)
-      case None => survivors
-    }
-    val rel = "data/c_" + java.util.UUID.randomUUID().toString.replace("-", "").take(16)
-    val shaped = snap.statsCol.filter(physSurvivors.columns.contains) match {
-      case Some(k) => physSurvivors
-        .repartitionByRange(math.max(1, touched.size), col(k))
-        .sortWithinPartitions(k)
-      case None => physSurvivors.repartition(math.max(1, touched.size))
-    }
-    shaped.write.mode("errorifexists").parquet(new Path(table, rel).toString)
-    val (newDv, newDvRows) = dropDvEntries(spark, table, snap, touched)
-    publish(spark, table, snap.statsCol,
-      carried ++ maintainBlooms(spark, table, snap, rel,
-        listDataFiles(spark, table, rel, snap.statsCol)),
-      op = "DELETE", dv = newDv, dvRows = newDvRows,
-      expected = Some(snap.version),
-      schemaJson = snap.schemaJson, mapping = snap.mapping,
-      baseSnapHint = Some(snap))
+    rewrite(spark, table, snap,
+      filesPossiblyMatching(spark, table, snap, Some(parsed)), "DELETE")(
+      rows = phys => snap.toPhysical(snap.toLogical(phys).filter(keep)))
+      .fold(snap.version)(_.version)
   }
 
   /** [[readFiles]] keeping the positional identity columns
@@ -2420,12 +2406,8 @@ object Versioned {
       if (raw0.columns.contains("__graft_file")) raw0
       else raw0.withColumn("__graft_file", col("_metadata.file_path"))
         .withColumn("__graft_pos", col("_metadata.row_index"))
-    val dv = applyDv(spark, table, snap, staged)
-    snap.mapping match {
-      case Some(m) => dv.select(m.map { case (l, p) => col(p).as(l) } ++
-        Seq(col("__graft_file"), col("__graft_pos")): _*)
-      case None => dv
-    }
+    snap.toLogical(applyDv(spark, table, snap, staged),
+      "__graft_file", "__graft_pos")
   }
 
   /** Copy-on-write UPDATE (Delta's `UPDATE t SET ... WHERE ...`):
@@ -2450,9 +2432,8 @@ object Versioned {
     import org.apache.spark.sql.functions.{coalesce, expr, lit, when}
     import org.apache.spark.sql.GraftShims
     val snap = snapshot(spark, table)
-    // EVERY validation precedes the first commit: an invalid statement
-    // must never mint a version — not even the no-op one the
-    // nothing-matched fast path publishes
+    // EVERY validation precedes the commit: an invalid statement must
+    // never mint a version
     require(sets.nonEmpty, "UPDATE needs at least one assignment")
     val logicalCols = logicalColumns(spark, table, snap).map(_._1)
     sets.foreach { case (n, _) =>
@@ -2466,85 +2447,63 @@ object Versioned {
         s"cannot UPDATE generated column $n of $table — it is recomputed")
     }
     val touched = filesPossiblyMatching(spark, table, snap, cond)
-    val touchedPaths = touched.map(_.path).toSet
-    val carried = snap.files.filterNot(f => touchedPaths(f.path))
-    // nothing can match: NO commit — see deleteWhereExpr's no-op rule
-    if (touched.isEmpty) return 0L
-    val logical = readFiles(spark, table, snap, touched)
     val condCol = cond.map(e => coalesce(GraftShims.column(e), lit(false)))
       .getOrElse(lit(true))
     // the marker is staged BEFORE the projection: the condition reads
     // OLD values, the projection replaces them
-    val staged0 = logical.withColumn("__graft_upd", condCol)
-    // the marker is evaluated by TWO jobs (the count below and the
-    // rewrite's write): a non-deterministic condition (rand() < 0.1)
-    // re-evaluated per job would report a count that diverges from the
-    // rows actually rewritten — pin ONE evaluation by materializing
-    // the marked rows, the same guard [[mergeInto]] applies to its
-    // source. Deterministic conditions (the normal case) keep the
-    // checkpoint-free path; cost when it fires is bounded by the
-    // touched-file set, never the table.
-    val staged =
-      if (staged0.queryExecution.analyzed.expressions.exists(e => !e.deterministic))
-        staged0.localCheckpoint(true)
-      else staged0
-    val stagedCheckpointed = staged ne staged0
-    try {
+    def marked(logical: DataFrame) = logical.withColumn("__graft_upd", condCol)
     val setMap = sets.toMap
-    val projected = staged.select(logical.columns.map { c =>
-      setMap.get(c) match {
-        case Some(v) => when(col("__graft_upd"),
-          GraftShims.column(v).cast(logical.schema(c).dataType))
-          .otherwise(col(c)).as(c)
-        case None => col(c)
-      }
-    } :+ col("__graft_upd"): _*)
-    // recompute generated columns from the UPDATED row; untouched rows
-    // keep their stored value (pre-DDL rows keep their nulls)
-    val withGens = snap.generated.foldLeft(projected) { case (df, (n, e)) =>
-      if (df.columns.contains(n))
-        df.withColumn(n, when(col("__graft_upd"), expr(e)).otherwise(col(n)))
-      else df
-    }
-    // the marker RIDES THROUGH the shuffle so num_affected_rows can be
-    // observed ABOVE it (CollectMetrics in the write stage — one
-    // evaluation of the touched-file scan instead of a separate count
-    // job). Observing BELOW a repartitionByRange double-counts: the
-    // RangePartitioner's boundary-sampling pass re-evaluates the child.
-    val physRows = snap.mapping match {
-      case Some(m) => withGens.select(m.map { case (l, p) =>
-        col(l).as(p) } :+ col("__graft_upd"): _*)
-      case None => withGens
-    }
-    val rel = "data/c_" + java.util.UUID.randomUUID().toString.replace("-", "").take(16)
-    val shaped = snap.statsCol.filter(physRows.columns.contains) match {
-      case Some(k) => physRows
-        .repartitionByRange(math.max(1, touched.size), col(k))
-        .sortWithinPartitions(k)
-      case None => physRows.repartition(math.max(1, touched.size))
-    }
+    // the marker RIDES THROUGH the shuffle so num_affected_rows is
+    // observed ABOVE it, in the write stage — one evaluation of the
+    // touched-file scan instead of a separate count job
     val obs = new org.apache.spark.sql.Observation(
       "graft_upd_" + java.util.UUID.randomUUID().toString.take(8))
-    shaped.observe(obs, org.apache.spark.sql.functions.sum(
-        when(col("__graft_upd"), 1L).otherwise(0L)).cast("long").as("u"))
-      .drop("__graft_upd")
-      .write.mode("errorifexists").parquet(new Path(table, rel).toString)
-    val updatedCount = observedLong(obs,
-      staged.filter(col("__graft_upd")).count())
-    constraintGate(spark, table, snap, rel)
-    val (newDv, newDvRows) = dropDvEntries(spark, table, snap, touched)
-    publish(spark, table, snap.statsCol,
-      carried ++ maintainBlooms(spark, table, snap, rel,
-        listDataFiles(spark, table, rel, snap.statsCol)),
-      op = "UPDATE", dv = newDv, dvRows = newDvRows,
-      expected = Some(snap.version),
-      schemaJson = snap.schemaJson, mapping = snap.mapping,
-      baseSnapHint = Some(snap))
-    updatedCount
-    // the conditional checkpoint (non-deterministic-condition guard)
-    // frees its blocks deterministically — unpersist on a checkpointed
-    // plan is a silent no-op, hence the shim
-    } finally if (stagedCheckpointed) GraftShims.releaseCheckpoint(staged)
+    // the marker may be evaluated by TWO jobs (the rewrite's write and,
+    // if the listener never delivers, the recount): a non-deterministic
+    // condition (rand() < 0.1) re-evaluated per job would report a count
+    // that diverges from the rows actually rewritten — pin ONE
+    // evaluation by materializing the marked rows, the same guard
+    // [[mergeInto]] applies to its source. Deterministic conditions (the
+    // normal case) keep the checkpoint-free path; cost when it fires is
+    // bounded by the touched-file set, never the table.
+    var pinned: Option[DataFrame] = None
+    try {
+      rewrite(spark, table, snap, touched, "UPDATE")(
+        rows = { phys =>
+          val logical = snap.toLogical(phys)
+          val staged0 = marked(logical)
+          val staged =
+            if (staged0.queryExecution.analyzed.expressions
+                .exists(e => !e.deterministic)) {
+              pinned = Some(staged0.localCheckpoint(true)); pinned.get
+            } else staged0
+          val projected = staged.select(logical.columns.map { c =>
+            setMap.get(c) match {
+              case Some(v) => when(col("__graft_upd"),
+                GraftShims.column(v).cast(logical.schema(c).dataType))
+                .otherwise(col(c)).as(c)
+              case None => col(c)
+            }
+          } :+ col("__graft_upd"): _*)
+          // recompute generated columns from the UPDATED row; untouched
+          // rows keep their stored value (pre-DDL rows keep their nulls)
+          snap.toPhysical(snap.generated.foldLeft(projected) {
+            case (df, (n, e)) =>
+              if (df.columns.contains(n))
+                df.withColumn(n, when(col("__graft_upd"), expr(e)).otherwise(col(n)))
+              else df
+          }, "__graft_upd")
+        },
+        gate = Some(identity),
+        finish = _.observe(obs, org.apache.spark.sql.functions.sum(
+            when(col("__graft_upd"), 1L).otherwise(0L)).cast("long").as("u"))
+          .drop("__graft_upd"))
+        .fold(0L)(_ => observedLong(obs, pinned.getOrElse(
+          marked(readFiles(spark, table, snap, touched)))
+          .filter(col("__graft_upd")).count()))
+    // the conditional checkpoint frees its blocks deterministically —
+    // unpersist on a checkpointed plan is a silent no-op, hence the shim
+    } finally pinned.foreach(GraftShims.releaseCheckpoint)
   }
 
   /** Read the observed metrics after their action ran. The
@@ -2681,7 +2640,7 @@ object Versioned {
     }
     def prefixT(df: DataFrame) = df.select(tCols.map(c =>
       col(c).as("__t_" + c)) ++
-      Seq(col("__graft_file"), col("__graft_pos")): _*)
+      df.columns.filter(_.startsWith("__graft_")).map(col): _*)
     // the source is MATERIALIZED once with TRUNCATED lineage
     // (localCheckpoint, Delta's merge-source materialization): pass 1,
     // the cardinality check, the rewrite join and the insert anti-join
@@ -2785,8 +2744,6 @@ object Versioned {
           val names = m.map(_._1).toSet
           snap.files.filter(f => names.contains(new Path(f.path).getName))
       }
-    val touchedPaths0 = touched.map(_.path).toSet
-    val carried = snap.files.filterNot(f => touchedPaths0(f.path))
     // ---- pass 2: rewrite touched files through the action cascade
     def branchConds(acts: Seq[MergeActSpec], base: org.apache.spark.sql.Column)
         : Seq[(MergeActSpec, org.apache.spark.sql.Column)] = {
@@ -2799,44 +2756,26 @@ object Versioned {
         (a, b)
       }
     }
-    // num_updated/num_deleted no longer cost a separate pre-write
-    // aggregation over the rewrite join (which made the touched-file
-    // join evaluate THREE times): updated rides the WRITE job as an
-    // observed metric on the __graft_mod marker ABOVE the shuffle
-    // (below it, the RangePartitioner sampling pass would double
-    // count), and deleted is pure MANIFEST ARITHMETIC — live rows of
-    // touched files minus survivors written. The fallback thunk
-    // re-aggregates only if the listener never delivers — consistent
-    // because the source is checkpointed.
-    val (survivors, fallbackUpd): (Option[DataFrame], () => Long) =
-      if (touched.isEmpty) (None, () => 0L)
-      else {
-        val joined = prefixT(readFilesWithPos(spark, table, snap, touched))
-          .join(src, condCol, "left_outer")
-        val present = coalesce(col("__graft_matched"), lit(false))
-        // cardinality already refused above, fused into pass 1
-        val mBranches = branchConds(matchedC, present)
-        val nbsBranches = branchConds(notMatchedBySourceC, !present)
-        val all = mBranches ++ nbsBranches
-        val delCond = all.collect { case (_: DeleteAct, b) => b }
-          .reduceOption(_ || _).getOrElse(lit(false))
-        val updCond = all.collect { case (_: UpdateAct, b) => b }
-          .reduceOption(_ || _).getOrElse(lit(false))
-        val out = joined.filter(!delCond).select(tCols.map { c =>
-          val chain = all.collect { case (ua: UpdateAct, b) =>
-            ua.sets.find(_._1 == c).map(s => (b,
-              GraftShims.column(s._2).cast(tTypes(c))))
-          }.flatten
-          chain.foldRight(col("__t_" + c)) { case ((b, v), acc) =>
-            when(b, v).otherwise(acc)
-          }.as(c)
-        } :+ updCond.as("__graft_mod") :+ lit(false).as("__graft_ins"): _*)
-        (Some(out), () => {
-          val stats = joined.agg(
-            sum(when(updCond, 1L).otherwise(0L)).as("u")).collect()(0)
-          Option(stats.getAs[Any]("u")).fold(0L)(_.asInstanceOf[Long])
-        })
-      }
+    val present = coalesce(col("__graft_matched"), lit(false))
+    // cardinality already refused above, fused into pass 1
+    val all = branchConds(matchedC, present) ++
+      branchConds(notMatchedBySourceC, !present)
+    val delCond = all.collect { case (_: DeleteAct, b) => b }
+      .reduceOption(_ || _).getOrElse(lit(false))
+    val updCond = all.collect { case (_: UpdateAct, b) => b }
+      .reduceOption(_ || _).getOrElse(lit(false))
+    def joined(target: DataFrame) =
+      prefixT(target).join(src, condCol, "left_outer")
+    def survivors(target: DataFrame) =
+      joined(target).filter(!delCond).select(tCols.map { c =>
+        val chain = all.collect { case (ua: UpdateAct, b) =>
+          ua.sets.find(_._1 == c).map(s => (b,
+            GraftShims.column(s._2).cast(tTypes(c))))
+        }.flatten
+        chain.foldRight(col("__t_" + c)) { case ((b, v), acc) =>
+          when(b, v).otherwise(acc)
+        }.as(c)
+      } :+ updCond.as("__graft_mod") :+ lit(false).as("__graft_ins"): _*)
     // ---- inserts: source rows no target row matches. The anti-join's
     // target side is the PRUNED candidate set: a target row outside
     // every equi-conjunct's source range matches no source row, so it
@@ -2863,78 +2802,56 @@ object Versioned {
       }
     // the anti-join is NOT pre-counted: num_inserted rides the write
     // job's observation (the __graft_ins marker), so the anti-join
-    // evaluates ONCE. File sizing below uses the checkpointed source's
-    // row count as the insert upper bound — a cached-count, no join —
-    // over-partitioning when few source rows insert just yields fewer
-    // non-empty output files (empty partitions write nothing).
+    // evaluates ONCE. File count follows DATA VOLUME, not just
+    // touched-file count: an insert-only (or insert-heavy) MERGE must
+    // not funnel its whole insert set through one task. The insert
+    // upper bound is the checkpointed source's row count — a cached
+    // count, no join — and rows per file the table's own manifest
+    // average (fallback 1M rows); over-partitioning when few source
+    // rows insert just yields fewer non-empty output files.
     val srcCountForSizing = if (inserts.isDefined) src.count() else 0L
-    val newRows = (survivors, inserts) match {
-      case (Some(s), Some(i)) => Some(s.unionByName(i))
-      case (Some(s), None) => Some(s)
-      case (None, Some(i)) => Some(i)
-      case (None, None) => None
+    val avgRows = {
+      val withRows = snap.files.filter(_.rows > 0)
+      if (withRows.isEmpty) 1000000L
+      else math.max(1L, withRows.map(_.rows).sum / withRows.size)
     }
-    newRows match {
-      case None =>
-        // no touched files and no insert actions: NO commit — same
-        // no-op rule as DELETE/UPDATE (don't mint versions or compete
-        // for the CAS slot for a statement that changed nothing)
-        MergeStats(0L, 0L, 0L)
-      case Some(rows0) =>
+    val insertFiles =
+      if (srcCountForSizing == 0L) 0L
+      else math.max(1L, (srcCountForSizing + avgRows - 1) / avgRows)
+    // num_updated/num_deleted cost no separate pre-write aggregation
+    // over the rewrite join: updated rides the WRITE job as an observed
+    // metric on the __graft_mod marker ABOVE the shuffle, and deleted is
+    // pure MANIFEST ARITHMETIC — live rows of touched files minus
+    // survivors written
+    val obsM = new org.apache.spark.sql.Observation(
+      "graft_merge_" + java.util.UUID.randomUUID().toString.take(8))
+    rewrite(spark, table, snap, touched, "MERGE")(
+      rows = { phys =>
+        val rows0 = ((if (touched.isEmpty) None
+          else Some(survivors(snap.toLogical(phys)))) ++ inserts)
+          .reduce(_ unionByName _)
         // MERGE-modified rows (updated or inserted) get their GENERATED
         // columns recomputed from the post-merge values — exactly
         // updateWhere's semantics; untouched survivor rows keep their
         // stored values (pre-DDL nulls included)
-        val rows = snap.generated.foldLeft(rows0) { case (df, (n, e)) =>
+        snap.toPhysical(snap.generated.foldLeft(rows0) { case (df, (n, e)) =>
           if (df.columns.contains(n))
             df.withColumn(n, when(col("__graft_mod"),
               org.apache.spark.sql.functions.expr(e)).otherwise(col(n)))
           else df
-        }
-        // the __graft_mod marker rides through the shuffle so the
-        // modified-row count can be observed in the WRITE stage (above
-        // the RangePartitioner's sampling pass) and dropped just
-        // before the files land
-        val physRows = snap.mapping match {
-          case Some(m) => rows.select(m.map { case (l, p) =>
-            col(l).as(p) } :+ col("__graft_mod") :+ col("__graft_ins"): _*)
-          case None => rows
-        }
-        val rel = "data/c_" +
-          java.util.UUID.randomUUID().toString.replace("-", "").take(16)
-        // file count follows DATA VOLUME, not just touched-file count:
-        // an insert-only (or insert-heavy) MERGE must not funnel its
-        // whole insert set through one task. Rows-per-file comes from
-        // the table's own manifest average (fallback 1M rows).
-        val avgRows = {
-          val withRows = snap.files.filter(_.rows > 0)
-          if (withRows.isEmpty) 1000000L
-          else math.max(1L, withRows.map(_.rows).sum / withRows.size)
-        }
-        val insertFiles =
-          if (srcCountForSizing == 0L) 0L
-          else math.max(1L, (srcCountForSizing + avgRows - 1) / avgRows)
-        val nFiles = math.max(1, touched.size + insertFiles.toInt)
-        val shaped = snap.statsCol.filter(physRows.columns.contains) match {
-          case Some(k) => physRows.repartitionByRange(nFiles, col(k))
-            .sortWithinPartitions(k)
-          case None => physRows.repartition(nFiles)
-        }
-        val obsM = new org.apache.spark.sql.Observation(
-          "graft_merge_" + java.util.UUID.randomUUID().toString.take(8))
-        shaped.observe(obsM,
-            sum(when(col("__graft_mod"), 1L).otherwise(0L))
-              .cast("long").as("m"),
-            sum(when(col("__graft_ins"), 1L).otherwise(0L))
-              .cast("long").as("i"))
-          .drop("__graft_mod", "__graft_ins")
-          .write.mode("errorifexists")
-          .parquet(new Path(table, rel).toString)
-        // updated = modified-rows metric minus the observed inserts;
-        // deleted = manifest arithmetic — live rows of touched files
-        // minus the survivors written. Fallbacks (listener never
-        // delivered) re-evaluate the anti-join / rewrite-join once —
-        // consistent because the source is checkpointed.
+        }, "__graft_mod", "__graft_ins")
+      },
+      files = math.max(1, touched.size + insertFiles.toInt),
+      adds = inserts.isDefined, gate = Some(identity),
+      finish = _.observe(obsM,
+          sum(when(col("__graft_mod"), 1L).otherwise(0L)).cast("long").as("m"),
+          sum(when(col("__graft_ins"), 1L).otherwise(0L)).cast("long").as("i"))
+        .drop("__graft_mod", "__graft_ins")) match {
+      case None => MergeStats(0L, 0L, 0L)
+      case Some(done) =>
+        // fallbacks (listener never delivered) re-evaluate the
+        // anti-join / rewrite-join once — consistent because the source
+        // is checkpointed
         val metrics = observedMetrics(obsM)
         def metric(k: String): Option[Long] =
           if (metrics.isEmpty) None
@@ -2942,21 +2859,17 @@ object Versioned {
             .fold(0L)(_.asInstanceOf[Long]))
         val insertedCount = metric("i").getOrElse(
           inserts.map(_.count()).getOrElse(0L))
-        val updated = metric("m").map(_ - insertedCount)
-          .getOrElse(fallbackUpd())
-        constraintGate(spark, table, snap, rel)
-        val (newDv, newDvRows) = dropDvEntries(spark, table, snap, touched)
-        val newFiles = listDataFiles(spark, table, rel, snap.statsCol)
-        val dvOnTouched = snap.dvRows.getOrElse(0L) - newDvRows.getOrElse(0L)
+        val updated = metric("m").map(_ - insertedCount).getOrElse {
+          if (touched.isEmpty) 0L
+          else Option(joined(readFiles(spark, table, snap, touched))
+            .agg(sum(when(updCond, 1L).otherwise(0L))).collect()(0).get(0))
+            .fold(0L)(_.asInstanceOf[Long])
+        }
+        val dvOnTouched = snap.dvRows.getOrElse(0L) - done.dvRows.getOrElse(0L)
         val liveTouched = touched.map(_.rows).sum - dvOnTouched
-        val deleted = liveTouched - (newFiles.map(_.rows).sum - insertedCount)
-        publish(spark, table, snap.statsCol,
-          carried ++ maintainBlooms(spark, table, snap, rel, newFiles),
-          op = "MERGE", dv = newDv, dvRows = newDvRows,
-          expected = Some(snap.version),
-          schemaJson = snap.schemaJson, mapping = snap.mapping,
-          baseSnapHint = Some(snap))
-        MergeStats(updated, deleted, insertedCount)
+        MergeStats(updated,
+          liveTouched - (done.added.map(_.rows).sum - insertedCount),
+          insertedCount)
     }
     } finally GraftShims.releaseCheckpoint(src)
   }
@@ -2983,50 +2896,34 @@ object Versioned {
     val inRange = col(key) >= lo && col(key) <= hi
     // the replacement arrives in LOGICAL names; the rewrite operates in
     // physical space alongside the surviving physical rows
-    val physReplacement = snap.mapping match {
-      case Some(m) => replacement.select(m.map { case (l, p) => col(l).as(p) }: _*)
-      case None => replacement
-    }
-    val (touched, carried) = snap.files.partition { f =>
+    val physReplacement = snap.toPhysical(replacement)
+    val touched = snap.files.filter { f =>
       (f.minKey, f.maxKey) match {
         case (Some(mn), Some(mx)) => mx >= lo && mn <= hi
         case _ => true // stat-less: conservatively rewrite
       }
     }
-    val survivors =
-      if (touched.isEmpty) physReplacement.filter(lit(false))
-      else applyDv(spark, table, snap, rawRead(spark, table, snap, touched))
-        // NULL-key rows are outside every range: a bare !inRange is
-        // NULL for them (three-valued logic) and would silently drop
-        // them from rewritten files — deleteWhereKeyIn's anti-join
-        // keeps them, and the two rewrite paths must agree
-        .filter(!inRange || col(key).isNull)
-    val rel = "data/c_" + java.util.UUID.randomUUID().toString.replace("-", "").take(16)
-    survivors.unionByName(physReplacement.filter(inRange))
-      .repartitionByRange(math.max(1, touched.size), col(key))
-      .sortWithinPartitions(key)
-      .write.mode("errorifexists").parquet(new Path(table, rel).toString)
-    // the replacement rows are NEW data: they must pass the CHECK gate
-    // like any append. The rewritten files also carry survivors (the
-    // out-of-range rows), which are provably valid — restrict the
-    // check to the in-range rows so its cost is O(new rows), not
-    // O(touched files). Null-key survivors fall out too (inRange is
-    // NULL→false for them). If the key left the logical schema the
-    // restriction is skipped — a conservative full check, never a
-    // missed one.
-    constraintGate(spark, table, snap, rel,
-      restrict = df => snap.logicalName(key) match {
+    rewrite(spark, table, snap, touched, "REPLACE_WHERE")(
+      // NULL-key rows are outside every range: a bare !inRange is NULL
+      // for them (three-valued logic) and would silently drop them from
+      // rewritten files — deleteWhereKeyIn's anti-join keeps them, and
+      // the two rewrite paths must agree
+      rows = _.filter(!inRange || col(key).isNull)
+        .unionByName(physReplacement.filter(inRange)),
+      txn = txn, adds = true,
+      // the replacement rows are NEW data: they must pass the CHECK gate
+      // like any append. The rewritten files also carry survivors (the
+      // out-of-range rows), which are provably valid — restrict the
+      // check to the in-range rows so its cost is O(new rows), not
+      // O(touched files). Null-key survivors fall out too (inRange is
+      // NULL→false for them). If the key left the logical schema the
+      // restriction is skipped — a conservative full check, never a
+      // missed one.
+      gate = Some(df => snap.logicalName(key) match {
         case Some(lk) if df.columns.contains(lk) =>
           df.filter(col(lk) >= lo && col(lk) <= hi)
         case _ => df
-      })
-    val (newDv, newDvRows) = dropDvEntries(spark, table, snap, touched)
-    publish(spark, table, snap.statsCol,
-      carried ++ maintainBlooms(spark, table, snap, rel,
-        listDataFiles(spark, table, rel, snap.statsCol)),
-      txn, op = "REPLACE_WHERE", dv = newDv, dvRows = newDvRows,
-      expected = Some(snap.version),
-      schemaJson = snap.schemaJson, mapping = snap.mapping)
+      })).fold(snap.version)(_.version)
   }
 
   /** MERGE-ON-READ DELETE via a deletion vector (Delta DVs / Iceberg
@@ -3063,12 +2960,7 @@ object Versioned {
       s"merge-on-read ops key on the table's commit key; " +
         s"got $key vs ${snap.statsCol}")
     // source arrives in logical names; new files land physical
-    val physSource = source.map { src =>
-      snap.mapping match {
-        case Some(m) => src.select(m.map { case (l, p) => col(l).as(p) }: _*)
-        case None => src
-      }
-    }
+    val physSource = source.map(snap.toPhysical(_))
     // one position scan over the union of masked keys: live old
     // occurrences of upserted keys AND the removed keys together
     val deadKeys = (physSource.map(_.select(col(physKey))).toSeq ++
@@ -3080,16 +2972,11 @@ object Versioned {
         .unionByName(hits).distinct()
       case None => hits
     }
-    val newFiles = physSource.map { ps =>
-      val rel = "data/c_" +
-        java.util.UUID.randomUUID().toString.replace("-", "").take(16)
-      ps.repartitionByRange(files, col(physKey)).sortWithinPartitions(physKey)
-        .write.mode("errorifexists").parquet(new Path(table, rel).toString)
-      // upserted rows are NEW data: CHECK-gated like any append
-      constraintGate(spark, table, snap, rel)
-      maintainBlooms(spark, table, snap, rel,
-        listDataFiles(spark, table, rel, snap.statsCol))
-    }.getOrElse(Seq.empty)
+    // upserted rows are NEW data: CHECK-gated like any append
+    val newFiles = physSource.map(ps =>
+      land(spark, table, ps, files, Some(physKey), snap.statsCol,
+        snap.bloomCfg, snap.physicalSchema, checks = snap.constraints,
+        view = snap.toLogical(_)).files).getOrElse(Seq.empty)
     val (dvRel, n) = writeDv(spark, table, combined)
     publish(spark, table, snap.statsCol, snap.files ++ newFiles,
       op = op, dv = Some(dvRel), dvRows = Some(n),
@@ -3133,7 +3020,7 @@ object Versioned {
     * a dataset); returns (relative path, entry count). */
   private def writeDv(spark: SparkSession, table: String,
       dv: DataFrame): (String, Long) = {
-    val rel = "data/dv_" + java.util.UUID.randomUUID().toString.replace("-", "").take(16)
+    val rel = freshDir("dv")
     dv.coalesce(1).write.mode("errorifexists")
       .parquet(new Path(table, rel).toString)
     (rel, spark.read.parquet(resolve(table, rel).toString).count())
@@ -3840,6 +3727,34 @@ object Versioned {
       schemaJson = Some(schema.json))
   }
 
+  /** The ONE DataFile JSON writer — manifest segments and staged
+    * records alike; [[parseFileNode]] reads it back. */
+  private def putFile(arr: com.fasterxml.jackson.databind.node.ArrayNode,
+      df: DataFile): Unit = {
+    val n = arr.addObject()
+    n.put("path", df.path)
+    n.put("rows", df.rows)
+    df.minKey.foreach(n.put("minKey", _))
+    df.maxKey.foreach(n.put("maxKey", _))
+    df.baseRowId.foreach(n.put("bri", _))
+    if (df.bytes > 0L) n.put("bytes", df.bytes)
+    df.bloom.foreach(n.put("bf", _))
+    if (df.noCols.nonEmpty) {
+      val nc = n.putArray("noc")
+      df.noCols.foreach(nc.add)
+    }
+    if (df.stats.nonEmpty) {
+      val s = n.putObject("stats")
+      df.stats.toSeq.sortBy(_._1).foreach { case (k, cs) =>
+        val o = s.putObject(k)
+        o.put("t", cs.typ)
+        o.put("mn", cs.mn)
+        o.put("mx", cs.mx)
+        cs.nulls.foreach(o.put("nc", _))
+      }
+    }
+  }
+
   /** Serialize + atomically publish a manifest as the next free version
     * number; the version IS the filename (content never goes stale on a
     * rename retry).
@@ -3914,31 +3829,6 @@ object Versioned {
     // reused on rebase retries: the recorded timestamp is the commit's
     // logical time, not the last retry's.
     val tsVal = ts.getOrElse(System.currentTimeMillis())
-    def putFile(arr: com.fasterxml.jackson.databind.node.ArrayNode,
-        df: DataFile): Unit = {
-      val n = arr.addObject()
-      n.put("path", df.path)
-      n.put("rows", df.rows)
-      df.minKey.foreach(n.put("minKey", _))
-      df.maxKey.foreach(n.put("maxKey", _))
-      df.baseRowId.foreach(n.put("bri", _))
-      if (df.bytes > 0L) n.put("bytes", df.bytes)
-      df.bloom.foreach(n.put("bf", _))
-      if (df.noCols.nonEmpty) {
-        val nc = n.putArray("noc")
-        df.noCols.foreach(nc.add)
-      }
-      if (df.stats.nonEmpty) {
-        val s = n.putObject("stats")
-        df.stats.toSeq.sortBy(_._1).foreach { case (k, cs) =>
-          val o = s.putObject(k)
-          o.put("t", cs.typ)
-          o.put("mn", cs.mn)
-          o.put("mx", cs.mx)
-          cs.nulls.foreach(o.put("nc", _))
-        }
-      }
-    }
     // Segments this publish wrote that no live manifest references yet:
     // cleaned up on conflict/abort, kept once the manifest lands.
     var pendingSegs: List[Path] = Nil
@@ -4257,56 +4147,18 @@ object Versioned {
       }: _*)
       case None => physDf
     }
-    val rel = "data/w_" + java.util.UUID.randomUUID().toString.replace("-", "").take(16)
-    val shaped = prior.statsCol match {
-      case Some(k) => aligned.repartitionByRange(files, col(k)).sortWithinPartitions(k)
-      case None => if (files > 0) aligned.repartition(files) else aligned
-    }
-    shaped.write.mode("errorifexists").parquet(new Path(table, rel).toString)
-    val effChecks = prior.constraints ++
-      generatedChecks(prior.generated, df.columns)
-    if (effChecks.nonEmpty) {
-      val logicalView = spark.read.parquet(new Path(table, rel).toString)
-        .select(gdf.columns.map(c => col(prior.physicalName(c)).as(c)): _*)
-      try checkConstraints(spark, logicalView, effChecks, table)
-      catch { case e: ConstraintViolationException =>
-        fs(spark, table).delete(new Path(table, rel), true); throw e }
-    }
-    val entries0 = listDataFiles(spark, table, rel, prior.statsCol)
-    val entries = prior.bloomCfg match {
-      case Some((c, m, k)) =>
-        val reader = prior.physicalSchema match {
-          case Some(sch) => spark.read.schema(sch)
-          case None => spark.read
-        }
-        attachBlooms(spark, table,
-          reader.parquet(new Path(table, rel).toString), entries0, c, m, k)
-      case None => entries0
-    }
+    val landed = land(spark, table, aligned, files, prior.statsCol,
+      prior.statsCol, prior.bloomCfg, prior.physicalSchema,
+      checks = prior.constraints ++ generatedChecks(prior.generated, df.columns),
+      view = _.select(gdf.columns.map(c => col(prior.physicalName(c)).as(c)): _*))
     val id = java.util.UUID.randomUUID().toString.replace("-", "").take(16)
     val mapper = new ObjectMapper()
     val root = mapper.createObjectNode()
     root.put("base", prior.version)
-    root.put("rel", rel)
+    root.put("rel", landed.rel)
     root.put("rules", rulesJson(prior))
     val arr = root.putArray("files")
-    entries.foreach { e =>
-      val n = arr.addObject()
-      n.put("path", e.path)
-      n.put("rows", e.rows)
-      e.minKey.foreach(n.put("minKey", _))
-      e.maxKey.foreach(n.put("maxKey", _))
-      if (e.bytes > 0L) n.put("bytes", e.bytes)
-      e.bloom.foreach(n.put("bf", _))
-      if (e.stats.nonEmpty) {
-        val s = n.putObject("stats")
-        e.stats.toSeq.sortBy(_._1).foreach { case (k, cs) =>
-          val o = s.putObject(k)
-          o.put("t", cs.typ); o.put("mn", cs.mn); o.put("mx", cs.mx)
-          cs.nulls.foreach(o.put("nc", _))
-        }
-      }
-    }
+    landed.files.foreach(putFile(arr, _))
     val f = fs(spark, table)
     f.mkdirs(stagedDir(table))
     val out = f.create(stagedPath(table, id), false)

@@ -178,6 +178,42 @@ class ColumnDefaultsSpec extends AnyFunSuite {
       == "silver", "post-rewrite re-add takes its own fresh default")
   }
 
+  test("copy-on-write rewrites keep the ADD-time default of the rows they move") {
+    import spark.implicits._
+    // (op, commit key, run → keys the op removed or restated). The
+    // round-robin commits spread every key range over all 4 files, so
+    // each op rewrites pre-add files
+    val ops: Seq[(String, Option[String], String => Set[Long])] = Seq(
+      ("compactSmallFiles", None, t => {
+        Versioned.compactSmallFiles(spark, t, 1L << 30); Set.empty[Long] }),
+      ("reclusterIncremental", None, t => {
+        Versioned.reclusterIncremental(spark, t, "k"); Set.empty[Long] }),
+      ("deleteWhereKeyIn", None, t => {
+        Versioned.deleteWhereKeyIn(spark, t, Seq(7L).toDF("k"), "k"); Set(7L) }),
+      ("replaceWhereRange", Some("k"), t => {
+        Versioned.replaceWhereRange(spark, t, 5L, 6L,
+          Seq((5L, "r5", "gold")).toDF("k", "v", "tier"))
+        Set(5L, 6L) }),
+      ("deleteWhere", None, t => {
+        Versioned.deleteWhere(spark, t, "k = 7"); Set(7L) }))
+    val lost = ops.map { case (name, key, run) =>
+      val t = freshTable(name)
+      Versioned.commit(spark, t,
+        (1L to 40L).map(k => (k, s"v$k")).toDF("k", "v"), key, 4)
+      Versioned.addColumn(spark, t, "tier", "string", Some("'bronze'"))
+      val v = Versioned.latestVersion(spark, t)
+      val moved = run(t)
+      assert(Versioned.latestVersion(spark, t) == v + 1, s"$name: one commit")
+      assert(Versioned.snapshot(spark, t).files.exists(_.noCols.isEmpty),
+        s"$name rewrote no pre-add file")
+      val tiers = Versioned.read(spark, t).select("k", "tier").collect()
+        .map(r => r.getLong(0) -> Option(r.getString(1))).toMap
+      name -> ((1L to 40L).toSet -- moved)
+        .filterNot(k => tiers.get(k).flatten.contains("bronze")).size
+    }.filter(_._2 > 0)
+    assert(lost.isEmpty, s"pre-add rows that lost the default, per op: $lost")
+  }
+
   test("no default: pre-add rows read NULL (plain add-column)") {
     import spark.implicits._
     val t = freshTable("plain")
