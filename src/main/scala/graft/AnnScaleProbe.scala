@@ -318,7 +318,7 @@ object AnnScaleProbe {
     // (271(1 − e^(−d/271)) for this fixture's k). Run 18's measurement
     // (full re-cluster 2.3–3.4 s vs incremental 4.0–4.4 s at d=50–150,
     // 35–61 of 67 files rewritten) drove the r15 COST-AWARE guard:
-    // tryIncremental* now previews the dirty FILE fraction
+    // the layout refresh now previews the dirty FILE fraction
     // (Versioned.filesTouchedByKey) and falls back past 1/2 — this leg
     // re-measures where that crossover sits.
     if (legs("crossover")) {

@@ -455,9 +455,11 @@ private[sources] object GraftProcedures {
         "ann_stats(index_root[, table]): committed artifact versions " +
           "and serve-cache counters (reconstructions vs cache hits) " +
           "for a persisted ANN index — the warm-session observability " +
-          "view; with the corpus table named, also reports " +
-          "ivf_lists_fresh (0 = the derived lists layout went stale " +
-          "and ivf serving fell back to the join plan — re-CALL " +
+          "view; pq_lists_fresh always, and with the corpus table " +
+          "named also ivf_lists_fresh, " +
+          "ivf_lists_stamped_assignments_version and nsw_layout_fresh " +
+          "(0 = that derived layout went stale and serving fell back " +
+          "to the join plan or the full cogroup — re-CALL " +
           "ann_optimize_serving to restore file-pruned serving)",
         Seq(in("index_root", StringType),
           in("table", StringType, Some("''"))),

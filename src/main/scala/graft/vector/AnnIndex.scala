@@ -95,41 +95,6 @@ object AnnIndex {
   def pqCodesTable(root: String): String = s"$root/pq_codes"
   def pqListsTable(root: String): String = s"$root/pq_lists"
 
-  /** Freshness stamp for the derived cid-clustered CODES layout: binds
-    * the commit to the exact assignments and codes generations (version
-    * AND manifest fingerprint — drop-root rebuilds reuse version
-    * numbers) it was derived from. */
-  private def pqListsTxn(av: Long, afp: Long, qv: Long, qfp: Long): String =
-    s"pq-lists-a$av-f$afp-q$qv-g$qfp"
-
-  /** A layout table's EFFECTIVE stamp: the latest commit's txn — or,
-    * when the trailing commits are row-preserving OPTIMIZE compactions,
-    * the stamp of the most recent stamped commit beneath them. Binpack
-    * on a serving layout is routine maintenance (the O(delta) refresh
-    * accretes small delta files by design) and must not cost a full
-    * re-cluster on the next refresh nor silently un-prune serving. The
-    * walk stops at the FIRST unstamped non-OPTIMIZE commit — DML,
-    * RESTORE, foreign writes: their rows may differ from the stamped
-    * derivation, so they must read as stale — and is bounded by
-    * compaction cadence (8), never history length. Testing the
-    * EXPECTED stamp against this (instead of the recent-txn ring)
-    * keeps a corpus RESTORE honest: an old identity resurfacing never
-    * matches a NEWER restamp's layout rows. */
-  private def effectiveLayoutStamp(spark: SparkSession, lT: String,
-      lv: Long): Option[String] = {
-    var v = lv
-    var steps = 0
-    while (v > 0 && steps <= 8) {
-      val sn = scala.util.Try(Versioned.snapshot(spark, lT, v))
-        .getOrElse(return None)
-      if (sn.txn.isDefined) return sn.txn
-      if (!sn.op.contains("OPTIMIZE")) return None
-      v -= 1
-      steps += 1
-    }
-    None
-  }
-
   /** Build (or refresh) the DERIVED cid-clustered PQ codes layout:
     * `(cid, id, sub, code)` committed CLUSTERED BY list id with
     * per-file cid stats — the layout real IVF-PQ index files ship, and
@@ -138,128 +103,29 @@ object AnnIndex {
     * probed lists' files instead of reading the whole codes table and
     * joining assignments per serve. Derived, not truth (`pq_codes` +
     * `ivf_assignments` stay authoritative, O(delta) MoR-maintained);
-    * the stamp names both source generations, so any ensure/retrain on
-    * either invalidates it and serving falls back to the join form —
-    * never stale codes. An up-to-date layout returns without
-    * committing; a stale one refreshes O(delta) since r14
-    * ([[tryIncrementalPqLists]]). */
+    * the stamp names both source generations ([[pqLists]]), so any
+    * ensure/retrain on either invalidates it and serving falls back to
+    * the join form — never stale codes. An up-to-date layout returns
+    * without committing; a stale one refreshes O(delta)
+    * ([[refreshLayout]]). */
   def optimizePqServing(spark: SparkSession, root: String,
       idCol: String, force: Boolean = false): Long = {
-    val (cT, aT, qT, lT) = (ivfCentroidsTable(root),
-      ivfAssignmentsTable(root), pqCodesTable(root), pqListsTable(root))
-    val av = Versioned.latestVersion(spark, aT)
-    require(av > 0, s"no committed IVF routing at $root — the pq tier " +
-      "routes through the IVF lists; ensure kind 'ivf' first")
-    val qv = Versioned.latestVersion(spark, qT)
-    require(qv > 0, s"no committed PQ codes at $root — ensure first")
-    val txn = pqListsTxn(av, Versioned.manifestFingerprint(spark, aT, av),
-      qv, Versioned.manifestFingerprint(spark, qT, qv))
-    val lv = Versioned.latestVersion(spark, lT)
-    val oldStamp =
-      if (lv > 0) effectiveLayoutStamp(spark, lT, lv) else None
-    if (!force && oldStamp.contains(txn)) return lv
-    // O(delta) path first (r14): rewrite only the lists whose code or
-    // assignment membership changed; full re-cluster is the fallback —
-    // and the explicit door (`force`) for restoring pruning
-    // granularity after a whole-layout compaction
-    if (!force && lv > 0)
-      tryIncrementalPqLists(spark, root, idCol, lv, oldStamp, av, qv, txn)
-        .foreach(return _)
-    val asg = VersionedScan.read(spark, aT, av)
-    val codes = VersionedScan.read(spark, qT, qv)
-    val k = VersionedScan.read(spark, cT).count()
-    val lists = codes.select(col(idCol), col("sub"), col("code"))
-      .join(asg.select(col(idCol), col("cid")), Seq(idCol))
-      .select(col("cid"), col(idCol), col("sub"), col("code"))
-    // same granularity rule as the ivf lists (pruning + O(delta) rewrite)
-    Versioned.commit(spark, lT, lists, Some("cid"),
-      files = math.max(4, math.min(4096, (k / 4).toInt)),
-      txn = Some(txn), op = "OPTIMIZE_SERVING",
-      expected = if (lv > 0) Some(lv) else None)
+    require(Versioned.latestVersion(spark, ivfAssignmentsTable(root)) > 0,
+      s"no committed IVF routing at $root — the pq tier routes through " +
+        "the IVF lists; ensure kind 'ivf' first")
+    require(Versioned.latestVersion(spark, pqCodesTable(root)) > 0,
+      s"no committed PQ codes at $root — ensure first")
+    // the codes layout carries no embedding column
+    refreshLayout(spark, pqLists(spark, root, AnnPin.Latest), idCol,
+      embCol = "", force)
   }
-
-  /** [[tryIncrementalIvfLists]]'s codes-layout twin: the pq_lists delta
-    * is the union of the ASSIGNMENTS diff (routing moves) and the
-    * CODES diff (re-encodes) between the stamped and current
-    * generations — both stamped-generation file diffs
-    * ([[stampedDeltaSides]]: fingerprints verified, DV deltas folded
-    * in), never a table scan. Only the lists holding changed OLD
-    * images rewrite. */
-  private def tryIncrementalPqLists(spark: SparkSession, root: String,
-      idCol: String, lv: Long, oldStamp: Option[String], av: Long, qv: Long,
-      newTxn: String): Option[Long] = {
-    val (cT, aT, qT, lT) = (ivfCentroidsTable(root),
-      ivfAssignmentsTable(root), pqCodesTable(root), pqListsTable(root))
-    val parsed = oldStamp
-      .flatMap("""pq-lists-a(\d+)-f(-?\d+)-q(\d+)-g(-?\d+)""".r
-        .findFirstMatchIn(_))
-      .getOrElse(return None)
-    val (av0, afp0) = (parsed.group(1).toLong, parsed.group(2).toLong)
-    val (qv0, qfp0) = (parsed.group(3).toLong, parsed.group(4).toLong)
-    scala.util.Try {
-      val asg0 = VersionedScan.read(spark, aT, av0)
-      val asg1 = VersionedScan.read(spark, aT, av)
-      val codes1 = VersionedScan.read(spark, qT, qv)
-      val (asgOld, asgNew) = stampedDeltaSides(spark, aT, idCol,
-        av0, afp0, av).getOrElse(return None)
-      val (codesOld, codesNew) = stampedDeltaSides(spark, qT, idCol,
-        qv0, qfp0, qv).getOrElse(return None)
-      val oldIds: Seq[Any] = (asgOld ++ codesOld).distinct
-      val deltaIds: Seq[Any] =
-        (asgOld ++ asgNew ++ codesOld ++ codesNew).distinct
-      if (deltaIds.size > maxLayoutDelta) return None
-      // rewrite keys = the OLD images' lists only (append-mostly deltas
-      // rewrite nothing — the new codes land in fresh cid-sorted files)
-      val dirtyCids =
-        if (oldIds.isEmpty) Seq.empty[Long]
-        else restrictToIds(spark, asg0, idCol, oldIds)
-          .select("cid").distinct().collect()
-          .map(_.getAs[Number](0).longValue).toSeq
-      // COST-AWARE fallback (r15 crossover rehearsal): when the dirty
-      // lists span over half the layout's FILES, the refresh costs
-      // more than the full re-cluster it avoids — preview with the
-      // rewrite's own matcher, O(files) driver arithmetic
-      val (touchedF, totalF) =
-        Versioned.filesTouchedByKey(spark, lT, lv, "cid", dirtyCids)
-      if (touchedF * 2 > totalF) return None
-      val deltaNew =
-        if (deltaIds.isEmpty)
-          VersionedScan.read(spark, lT, lv).limit(0)
-        else restrictToIds(spark, codes1, idCol, deltaIds)
-          .select(col(idCol), col("sub"), col("code"))
-          .join(restrictToIds(spark, asg1, idCol, deltaIds)
-            .select(col(idCol), col("cid")), idCol)
-          .select(col("cid"), col(idCol), col("sub"), col("code"))
-      Some(Versioned.rewriteFilesByKey(spark, lT, "cid", dirtyCids,
-        Some(newTxn), "OPTIMIZE_SERVING", lv)(
-        layoutReplace(spark, idCol, asg1.schema(idCol).dataType,
-          deltaIds, deltaNew)))
-    }.toOption.flatten
-  }
-
-  /** The cid-clustered codes layout that was fresh at `pin` — its stamp
-    * names exactly the pin-resolved assignments and codes generations —
-    * or None when absent, stale, or not yet committed at the instant:
-    * the same metadata-reads routing decision as [[freshLists]]. */
-  private def freshPqLists(spark: SparkSession, root: String,
-      pin: AnnPin): Option[DataFrame] = scala.util.Try {
-    val (aT, qT, lT) =
-      (ivfAssignmentsTable(root), pqCodesTable(root), pqListsTable(root))
-    val lv = versionAt(spark, lT, pin)
-    val av = if (lv == 0L) 0L else versionAt(spark, aT, pin)
-    val qv = if (av == 0L) 0L else versionAt(spark, qT, pin)
-    if (qv > 0L && effectiveLayoutStamp(spark, lT, lv).contains(
-        pqListsTxn(av, Versioned.manifestFingerprint(spark, aT, av),
-          qv, Versioned.manifestFingerprint(spark, qT, qv))))
-      Some(VersionedScan.read(spark, lT, lv))
-    else None
-  }.toOption.flatten
 
   /** `pq_lists` freshness for `ann_stats` — artifact-internal (no
     * corpus identity involved), so it always reports. */
   def pqListsFreshness(spark: SparkSession, root: String): Map[String, Long] =
-    Map("pq_lists_fresh" ->
-      (if (freshPqLists(spark, root, AnnPin.Latest).isDefined) 1L else 0L))
+    Map("pq_lists_fresh" -> (if (freshLayout(spark,
+      pqLists(spark, root, AnnPin.Latest), AnnPin.Latest).isDefined) 1L
+      else 0L))
 
   /** The version of `table` a pin names: the latest commit, or the one
     * current AT the instant (the commit-ts walk every graft table
@@ -362,10 +228,10 @@ object AnnIndex {
     val served = kind match {
       case "ivf" =>
         committed.flatMap { case (t, cv) =>
-          freshLists(spark, root, t, cv, pin) } match {
-          case Some((cents, lists)) =>
-            ivfListsServe(cents, lists, idCol, embCol, p, single, k, nProbe,
-              allowed)
+          freshLayout(spark, ivfLists(spark, root, t, cv, pin), pin) } match {
+          case Some(lists) =>
+            ivfListsServe(readAt(spark, ivfCentroidsTable(root), pin), lists,
+              idCol, embCol, p, single, k, nProbe, allowed)
           case None =>
             Ivf.searchBatch(restrict(emb, idCol, allowed),
               readAt(spark, ivfAssignmentsTable(root), pin),
@@ -379,8 +245,8 @@ object AnnIndex {
         val poolN = pool.getOrElse(pqRerankPool(k, nProbe))
         if (committed.isDefined)
           ivfPqCommittedServe(emb, idCol, embCol, p, single, cents, asg,
-            books, codes, m, k, nProbe, poolN, freshPqLists(spark, root, pin),
-            allowed)
+            books, codes, m, k, nProbe, poolN,
+            freshLayout(spark, pqLists(spark, root, pin), pin), allowed)
         else
           // the filter restricts the codes BEFORE the pool cut, as the
           // committed form does — post-pool filtering would under-fill k
@@ -391,7 +257,7 @@ object AnnIndex {
         val ev = versionAt(spark, nswEdgesTable(root), pin)
         committed match {
           case Some((table, cv)) => nswCommittedServe(spark, root, table,
-            cv, emb, idCol, embCol, p, k, width, ev)
+            cv, emb, idCol, embCol, p, k, width, ev, pin)
           case None => nswServe(spark, root, emb, idCol, embCol, p, k,
             width, ev)
         }
@@ -960,6 +826,36 @@ object AnnIndex {
   private[vector] def clearEnsureCurrentMemoForTest(): Unit =
     ensureCurrentMemo.removeIf(_ => true)
 
+  /** The one body of the ensure*Current family: pin the corpus
+    * generation, key it with the kind, `root`, the caller's structural
+    * `args` and every artifact table's generation ([[generationKey]]),
+    * and answer `current` on a memo or durable-stamp hit. A miss runs
+    * `ensure` over the pinned corpus, then records the key in both.
+    * The corpus generation PINS in the key; the artifact generations
+    * re-read per use (a def) so the post-ensure put records the
+    * generations the ensure just landed — a racing corpus commit after
+    * the pin simply misses on its own next lookup. */
+  private def ensureCurrent[R](spark: SparkSession, root: String,
+      kind: String, corpusTable: String, args: Seq[Any], arts: Seq[String])(
+      current: => R)(ensure: DataFrame => R): R = {
+    val cv = Versioned.latestVersion(spark, corpusTable)
+    require(cv > 0,
+      s"ensure${kind.capitalize}Current: $corpusTable has no commits")
+    val cfp = Versioned.manifestFingerprint(spark, corpusTable, cv)
+    def key = Seq(kind, root) ++ args ++ Seq(corpusTable, cv, cfp) ++
+      generationKey(spark, arts)
+    if (ensureCurrentMemo.get(key).isDefined ||
+        stampMatches(spark, root, kind, key)) {
+      ensureCurrentMemo.put(key, ())
+      current
+    } else {
+      val r = ensure(VersionedScan.read(spark, corpusTable, cv))
+      ensureCurrentMemo.put(key, ())
+      writeStamp(spark, root, kind, key)
+      r
+    }
+  }
+
   /** [[ensureIvf]] for a corpus that IS a versioned table — the form
     * the SQL door and every serving-shaped caller should use: the
     * corpus identity is true by construction (this reads the table
@@ -971,29 +867,11 @@ object AnnIndex {
   def ensureIvfCurrent(spark: SparkSession, root: String,
       corpusTable: String, idCol: String, embCol: String, k: Int = -1,
       spill: Double = 0.0): (Long, Long) = {
-    val arts = Seq(ivfCentroidsTable(root), ivfAssignmentsTable(root))
-    val cv = Versioned.latestVersion(spark, corpusTable)
-    require(cv > 0, s"ensureIvfCurrent: $corpusTable has no commits")
-    val cfp = Versioned.manifestFingerprint(spark, corpusTable, cv)
-    // the corpus generation PINS in the key; the artifact generations
-    // re-read per use (a def) so the post-ensure put records the
-    // generations the ensure just landed — a racing corpus commit
-    // after the pin simply misses on its own next lookup
-    def key = Seq("ivf", root, idCol, embCol, k, spill,
-      corpusTable, cv, cfp) ++ generationKey(spark, arts)
-    if (ensureCurrentMemo.get(key).isDefined ||
-        stampMatches(spark, root, "ivf", key)) {
-      ensureCurrentMemo.put(key, ())
-      (Versioned.latestVersion(spark, arts.head),
-        Versioned.latestVersion(spark, arts(1)))
-    } else {
-      val r = ensureIvf(spark, root,
-        VersionedScan.read(spark, corpusTable, cv), idCol, embCol, k,
-        spill)
-      ensureCurrentMemo.put(key, ())
-      writeStamp(spark, root, "ivf", key)
-      r
-    }
+    val (cT, aT) = (ivfCentroidsTable(root), ivfAssignmentsTable(root))
+    ensureCurrent(spark, root, "ivf", corpusTable,
+      Seq(idCol, embCol, k, spill), Seq(cT, aT))(
+      (Versioned.latestVersion(spark, cT), Versioned.latestVersion(spark, aT)))(
+      ensureIvf(spark, root, _, idCol, embCol, k, spill))
   }
 
   /** [[ensurePq]]'s versioned-table twin — zero-job steady state; the
@@ -1003,25 +881,11 @@ object AnnIndex {
   def ensurePqCurrent(spark: SparkSession, root: String,
       corpusTable: String, idCol: String, embCol: String, m: Int,
       k: Int): (Long, Long) = {
-    val arts = Seq(pqCodebooksTable(root), pqCodesTable(root),
-      ivfCentroidsTable(root))
-    val cv = Versioned.latestVersion(spark, corpusTable)
-    require(cv > 0, s"ensurePqCurrent: $corpusTable has no commits")
-    val cfp = Versioned.manifestFingerprint(spark, corpusTable, cv)
-    def key = Seq("pq", root, idCol, embCol, m, k,
-      corpusTable, cv, cfp) ++ generationKey(spark, arts)
-    if (ensureCurrentMemo.get(key).isDefined ||
-        stampMatches(spark, root, "pq", key)) {
-      ensureCurrentMemo.put(key, ())
-      (Versioned.latestVersion(spark, arts.head),
-        Versioned.latestVersion(spark, arts(1)))
-    } else {
-      val r = ensurePq(spark, root,
-        VersionedScan.read(spark, corpusTable, cv), idCol, embCol, m, k)
-      ensureCurrentMemo.put(key, ())
-      writeStamp(spark, root, "pq", key)
-      r
-    }
+    val (bT, qT) = (pqCodebooksTable(root), pqCodesTable(root))
+    ensureCurrent(spark, root, "pq", corpusTable, Seq(idCol, embCol, m, k),
+      Seq(bT, qT, ivfCentroidsTable(root)))(
+      (Versioned.latestVersion(spark, bT), Versioned.latestVersion(spark, qT)))(
+      ensurePq(spark, root, _, idCol, embCol, m, k))
   }
 
   /** [[ensureNsw]]'s versioned-table twin — zero-job steady state;
@@ -1031,23 +895,10 @@ object AnnIndex {
       corpusTable: String, idCol: String, embCol: String, m: Int = 8,
       ef: Int = 32, shards: Int = -1): Long = {
     val eT = nswEdgesTable(root)
-    val cv = Versioned.latestVersion(spark, corpusTable)
-    require(cv > 0, s"ensureNswCurrent: $corpusTable has no commits")
-    val cfp = Versioned.manifestFingerprint(spark, corpusTable, cv)
-    def key = Seq("nsw", root, idCol, embCol, m, ef, shards,
-      corpusTable, cv, cfp) ++ generationKey(spark, Seq(eT))
-    if (ensureCurrentMemo.get(key).isDefined ||
-        stampMatches(spark, root, "nsw", key)) {
-      ensureCurrentMemo.put(key, ())
-      Versioned.latestVersion(spark, eT)
-    } else {
-      val r = ensureNsw(spark, root,
-        VersionedScan.read(spark, corpusTable, cv), idCol, embCol, m,
-        ef, shards)
-      ensureCurrentMemo.put(key, ())
-      writeStamp(spark, root, "nsw", key)
-      r
-    }
+    ensureCurrent(spark, root, "nsw", corpusTable,
+      Seq(idCol, embCol, m, ef, shards), Seq(eT))(
+      Versioned.latestVersion(spark, eT))(
+      ensureNsw(spark, root, _, idCol, embCol, m, ef, shards))
   }
 
   /** Load the committed IVF index: (centroids, assignments). */
@@ -1268,21 +1119,6 @@ object AnnIndex {
 
   def ivfListsTable(root: String): String = s"$root/ivf_lists"
 
-  /** Freshness stamp for the derived inverted-list layout: binds the
-    * lists commit to the EXACT assignments generation (version AND
-    * manifest fingerprint — drop-root rebuilds reuse version numbers)
-    * and corpus identity it was derived from — any ensure that mints,
-    * or any corpus commit, invalidates it (serving falls back to the
-    * join plan, never to stale files). The fingerprints also gate the
-    * O(delta) refresh: the incremental path only trusts a version-pair
-    * diff after proving the stamped generations are the SAME
-    * generations those version numbers name today. (Format changed in
-    * r14 to carry the assignments fingerprint; pre-r14 stamps read as
-    * stale and pay one full re-cluster to migrate.) */
-  private def listsTxn(av: Long, afp: Long, corpusTable: String, cv: Long,
-      cfp: Long): String =
-    s"ivf-lists-a$av-g$afp-t${corpusTable.hashCode}-c$cv-f$cfp"
-
   /** Build (or refresh) the DERIVED inverted-list serving layout: the
     * corpus vectors CLUSTERED BY their IVF list id, committed with
     * per-file `cid` stats — which makes "search nProbe of k lists"
@@ -1291,65 +1127,325 @@ object AnnIndex {
     * id-clustered corpus (the layout real IVF index files ship). The
     * table is derived, not truth: `ivf_assignments` (id-keyed, O(delta)
     * MoR maintenance) stays authoritative, and the lists commit stamps
-    * the (assignments version, corpus version, corpus manifest
-    * fingerprint) it derives from — [[serve]] reads
-    * it ONLY while that stamp matches, else falls back to the join
-    * plan, so staleness can never serve wrong rows. Refreshing is
-    * O(delta) since r14 ([[tryIncrementalIvfLists]]): only the files
-    * whose lists changed rewrite, the rest carry by reference — the
-    * full re-cluster is the bootstrap and the fallback, not the steady
-    * state. An up-to-date layout returns its current version without
-    * committing. */
+    * the (assignments, corpus) generations it derives from
+    * ([[ivfLists]]) — [[serve]] reads it ONLY while that stamp
+    * matches, else falls back to the join plan, so staleness can never
+    * serve wrong rows. Refreshing is O(delta) ([[refreshLayout]]):
+    * only the files whose lists changed rewrite, the rest carry by
+    * reference — the full re-cluster is the bootstrap and the
+    * fallback, not the steady state. An up-to-date layout returns its
+    * current version without committing. */
   def optimizeIvfServing(spark: SparkSession, root: String,
       corpusTable: String, idCol: String, embCol: String,
-      corpusVersion: Long = -1L, force: Boolean = false): Long = {
-    val (cT, aT, lT) =
-      (ivfCentroidsTable(root), ivfAssignmentsTable(root), ivfListsTable(root))
-    val av = Versioned.latestVersion(spark, aT)
-    require(av > 0, s"no committed IVF index at $root — ensure first")
-    val cv = if (corpusVersion > 0) corpusVersion
-      else Versioned.latestVersion(spark, corpusTable)
+      force: Boolean = false): Long = {
+    require(Versioned.latestVersion(spark, ivfAssignmentsTable(root)) > 0,
+      s"no committed IVF index at $root — ensure first")
+    val cv = Versioned.latestVersion(spark, corpusTable)
     require(cv > 0, s"optimizeIvfServing: $corpusTable has no commits")
-    val cfp = Versioned.manifestFingerprint(spark, corpusTable, cv)
-    val txn = listsTxn(av, Versioned.manifestFingerprint(spark, aT, av),
-      corpusTable, cv, cfp)
+    refreshLayout(spark, ivfLists(spark, root, corpusTable, cv,
+      AnnPin.Latest), idCol, embCol, force)
+  }
+
+  /** Freshness report for the derived lists layout vs a corpus table —
+    * the `ann_stats` surface behind "is my serving still file-pruned?".
+    * [[serve]] silently (and correctly) falls back to the join plan
+    * the moment the stamp goes stale; without this an
+    * operator could lose the nProbe/k I/O promise for days and only
+    * discover it by reading executed plans. SEMANTICS (r14): fresh
+    * means the layout's ROWS still match the stamped derivation — a
+    * row-preserving OPTIMIZE keeps it fresh even though an aggressive
+    * whole-layout binpack coarsens per-file cid ranges (pruning
+    * PRECISION, never correctness); `ann_optimize_serving(force =>
+    * true)` re-clusters to restore granularity. Keys:
+    * `ivf_lists_fresh` (1 = the current (assignments, corpus)
+    * identity matches the stamp; 0 = stale or no layout — re-CALL
+    * ann_optimize_serving),
+    * `ivf_lists_stamped_assignments_version` (what the layout was
+    * derived from; -1 when absent). Costs the same metadata reads the
+    * serving-route decision pays. */
+  def listsFreshness(spark: SparkSession, root: String,
+      corpusTable: String): Map[String, Long] = {
+    val lT = ivfListsTable(root)
+    val lv = Versioned.latestVersion(spark, lT)
+    val cv = Versioned.latestVersion(spark, corpusTable)
+    val lay = ivfLists(spark, root, corpusTable, cv, AnnPin.Latest)
+    val stamped =
+      if (lv == 0L) -1L
+      else effectiveLayoutStamp(spark, lT, lv).flatMap(lay.parse)
+        .map(_("a")).getOrElse(-1L)
+    val fresh = lv > 0L && cv > 0L &&
+      freshLayout(spark, lay, AnnPin.Latest).isDefined
+    Map(
+      "ivf_lists_fresh" -> (if (fresh) 1L else 0L),
+      "ivf_lists_stamped_assignments_version" -> stamped)
+  }
+
+  /** One derived serving layout — `ivf_lists` ([[ivfLists]]),
+    * `pq_lists` ([[pqLists]]) or `nsw_layout` ([[nswLayout]]) — as the
+    * one refresh ([[refreshLayout]]) and the one reader
+    * ([[freshLayout]]) see it: `table`, clustered by the integral
+    * `key` column, and its freshness stamp — `prefix`, then
+    * `-<tag><value>` for each of `tags`. `gens` names the stamped
+    * source generations as (source table, version tag, manifest
+    * fingerprint tag): the fingerprints bind the commit to the EXACT
+    * generations it derives from (drop-root rebuilds reuse version
+    * numbers), so any ensure that mints, or any corpus commit,
+    * invalidates it. Every other tag is an exact-match field — the
+    * corpus table hash, the shard count. `values` resolve on first
+    * use, so a reader pays the sources' metadata reads only once a
+    * layout commit exists. The stamp strings are the persisted format
+    * (a layout committed under them stays fresh across upgrades). */
+  private abstract class Layout(val table: String, val key: String,
+      prefix: String, tags: Seq[String],
+      val gens: Seq[(String, String, String)]) {
+    protected def values: Seq[Long]
+    lazy val fields: Seq[(String, Long)] = tags.zip(values)
+    lazy val stamp: String =
+      prefix + fields.map { case (t, v) => s"-$t$v" }.mkString
+    /** Tag → value of a stamp in this layout's format. */
+    def parse(s: String): Option[Map[String, Long]] =
+      (prefix + tags.map(t => s"-$t(-?\\d+)").mkString).r
+        .findFirstMatchIn(s).map(m =>
+          tags.indices.map(i => tags(i) -> m.group(i + 1).toLong).toMap)
+    /** The layout's rows with every source read through `only`: the
+      * identity for the full re-cluster, an id restriction for the
+      * fresh rows of a delta. */
+    def rows(idCol: String, embCol: String)(
+        only: DataFrame => DataFrame): DataFrame
+    /** The keys whose files hold the OLD images of `oldIds` under the
+      * `stamped` generations; None = fall back to the full re-cluster. */
+    def dirty(idCol: String, stamped: Map[String, Long],
+        oldIds: Seq[Any]): Option[Seq[Long]]
+    /** The full re-cluster's file count, before the [4, 4096] clamp. */
+    def files: Int
+  }
+
+  /** A layout table's EFFECTIVE stamp: the latest commit's txn — or,
+    * when the trailing commits are row-preserving OPTIMIZE compactions,
+    * the stamp of the most recent stamped commit beneath them. Binpack
+    * on a serving layout is routine maintenance (the O(delta) refresh
+    * accretes small delta files by design) and must not cost a full
+    * re-cluster on the next refresh nor silently un-prune serving. The
+    * walk stops at the FIRST unstamped non-OPTIMIZE commit — DML,
+    * RESTORE, foreign writes: their rows may differ from the stamped
+    * derivation, so they must read as stale — and is bounded by
+    * compaction cadence (8), never history length. Testing the
+    * EXPECTED stamp against this (instead of the recent-txn ring)
+    * keeps a corpus RESTORE honest: an old identity resurfacing never
+    * matches a NEWER restamp's layout rows. */
+  private def effectiveLayoutStamp(spark: SparkSession, lT: String,
+      lv: Long): Option[String] = {
+    var v = lv
+    var steps = 0
+    while (v > 0 && steps <= 8) {
+      val sn = scala.util.Try(Versioned.snapshot(spark, lT, v))
+        .getOrElse(return None)
+      if (sn.txn.isDefined) return sn.txn
+      if (!sn.op.contains("OPTIMIZE")) return None
+      v -= 1
+      steps += 1
+    }
+    None
+  }
+
+  /** Build or refresh the layout `lay` — the one refresh protocol of
+    * every serving layout. A layout whose effective stamp already
+    * equals `lay.stamp` returns its version without committing. A
+    * stale one refreshes O(delta) first: parse the stale stamp's
+    * source generations, diff each against the current one
+    * ([[stampedDeltaSides]]: fingerprints verified, DV deltas of MoR
+    * DML folded in — O(changed files), never a table scan), then
+    * rewrite ONLY the files holding the delta's old images, carrying
+    * the rest by reference ([[Versioned.rewriteFilesByKey]]). The
+    * refreshed layout is row-identical to a from-scratch rebuild
+    * (pinned in LayoutRefreshSpec). The full re-cluster is the
+    * bootstrap, the fallback — an unparseable/foreign/pre-r14 stamp,
+    * an exact field that moved (another corpus table, a reshard), a
+    * stamped generation whose version number a drop-root rebuild
+    * reused, a delta past [[maxLayoutDelta]], dirty keys past half the
+    * layout's files — and the explicit door (`force`) for restoring
+    * pruning granularity after a whole-layout compaction. */
+  private def refreshLayout(spark: SparkSession, lay: Layout, idCol: String,
+      embCol: String, force: Boolean): Long = {
+    val lT = lay.table
     val lv = Versioned.latestVersion(spark, lT)
     val oldStamp =
       if (lv > 0) effectiveLayoutStamp(spark, lT, lv) else None
-    if (!force && oldStamp.contains(txn)) return lv
-    // O(delta) path first (r14): a STALE layout refreshes by diffing
-    // the stamped source generations against the current ones and
-    // rewriting only the files whose lists changed — the full
-    // re-cluster below is the bootstrap/fallback, and the explicit
-    // door (`force`) for restoring pruning granularity after a
-    // whole-layout compaction
-    if (!force && lv > 0)
-      tryIncrementalIvfLists(spark, root, corpusTable, idCol, embCol,
-        lv, oldStamp, av, cv, txn).foreach(return _)
-    val emb = VersionedScan.read(spark, corpusTable, cv)
-    val asg = VersionedScan.read(spark, aT, av)
-    val k = VersionedScan.read(spark, cT).count()
-    // a SPILLED root's layout carries each boundary vector in BOTH its
-    // lists' files (the derived layout is not keyed, so the duplicate
-    // is legal) — that is what keeps the serve's manifest pruning
-    // complete under multi-assignment; the `spl` marker column tells
-    // the serve to dedup candidates by id
-    val spilled = asg.columns.contains("cid2")
-    val pairs = Ivf.memberPairs(asg, idCol)
-    val base = pairs
-      .join(emb.select(col(idCol), col(embCol)), Seq(idCol))
-      .select(col("cid"), col(idCol), col(embCol))
-    val lists = if (spilled) base.withColumn("spl", lit(true)) else base
-    // file count tracks the list count so per-file cid ranges stay
-    // tight — for PRUNING precision and for the O(delta) refresh's
-    // REWRITE granularity (a file spanning many lists makes every
-    // update-heavy delta rewrite most files); cap high enough that a
-    // 100 TB-scale list count still gets few-lists-per-file
-    Versioned.commit(spark, lT, lists, Some("cid"),
-      files = math.max(4, math.min(4096, (k / 4).toInt)),
-      txn = Some(txn), op = "OPTIMIZE_SERVING",
+    if (!force && oldStamp.contains(lay.stamp)) return lv
+    def incremental(): Option[Long] = scala.util.Try {
+      val old = oldStamp.flatMap(lay.parse).getOrElse(return None)
+      val genTags = lay.gens.flatMap { case (_, vt, ft) => Seq(vt, ft) }.toSet
+      if (lay.fields.exists { case (t, v) => !genTags(t) && old(t) != v })
+        return None
+      val cur = lay.fields.toMap
+      val sides = lay.gens.map { case (t, vt, ft) =>
+        stampedDeltaSides(spark, t, idCol, old(vt), old(ft), cur(vt))
+          .getOrElse(return None)
+      }
+      val oldIds: Seq[Any] = sides.flatMap(_._1).distinct
+      val deltaIds: Seq[Any] = sides.flatMap { case (o, n) => o ++ n }.distinct
+      if (deltaIds.size > maxLayoutDelta) return None
+      // REWRITE keys are the OLD images' keys only: a changed/removed
+      // row's old image must leave its file, but a NEW row simply lands
+      // in the refresh's own key-sorted delta files next to the carried
+      // ones (the scan prunes by key stats across all files) — so an
+      // append-mostly delta rewrites NOTHING, however many keys it
+      // spreads over
+      val dirty = lay.dirty(idCol, old, oldIds).getOrElse(return None)
+      // COST-AWARE fallback (r15 crossover rehearsal at 2.2M: a 50-row
+      // random-spread update already rewrote 35/67 files and the
+      // refresh read 4.4 s vs the full re-cluster's 2.3–3.4 s — the
+      // binding unit is dirty FILES, not dirty keys): preview with the
+      // rewrite's own matcher, O(files) driver arithmetic
+      val (touchedF, totalF) =
+        Versioned.filesTouchedByKey(spark, lT, lv, lay.key, dirty)
+      if (touchedF * 2 > totalF) return None
+      val deltaNew =
+        if (deltaIds.isEmpty) VersionedScan.read(spark, lT, lv).limit(0)
+        else lay.rows(idCol, embCol)(restrictToIds(spark, _, idCol, deltaIds))
+      Some(Versioned.rewriteFilesByKey(spark, lT, lay.key, dirty,
+        Some(lay.stamp), "OPTIMIZE_SERVING", lv)(
+        layoutReplace(spark, idCol, deltaNew.schema(idCol).dataType,
+          deltaIds, deltaNew)))
+    }.toOption.flatten
+    if (!force && lv > 0) incremental().foreach(return _)
+    Versioned.commit(spark, lT, lay.rows(idCol, embCol)(identity),
+      Some(lay.key), files = math.max(4, math.min(4096, lay.files)),
+      txn = Some(lay.stamp), op = "OPTIMIZE_SERVING",
       expected = if (lv > 0) Some(lv) else None)
   }
+
+  /** The layout `lay` that was fresh at `pin` — Some only when a layout
+    * commit existed at the pin AND its effective stamp names exactly
+    * `lay.stamp`, i.e. the pin-resolved source generations; anything
+    * else (no layout yet, one already stale then, an instant before
+    * any commit) sends the serve to the join plan or the full cogroup,
+    * never to stale or wrong-era files. Metadata reads only: the
+    * layout version, its effective stamp, then the sources'. */
+  private def freshLayout(spark: SparkSession, lay: Layout,
+      pin: AnnPin): Option[DataFrame] = scala.util.Try {
+    val lv = versionAt(spark, lay.table, pin)
+    if (lv > 0L &&
+        effectiveLayoutStamp(spark, lay.table, lv).contains(lay.stamp))
+      Some(VersionedScan.read(spark, lay.table, lv))
+    else None
+  }.toOption.flatten
+
+  /** `ivf_lists`: the corpus vectors keyed by IVF list, derived from the
+    * assignments at `pin` (resolved on first use) and the corpus
+    * identity (`corpusTable`, `cv`); stamped
+    * `ivf-lists-a<av>-g<afp>-t<table hash>-c<cv>-f<cfp>` (the stamp
+    * names the corpus TABLE too: a layout derived from a different
+    * table must never diff against this one). A SPILLED root's layout
+    * carries each boundary vector in BOTH its lists' files (the derived
+    * layout is not keyed, so the duplicate is legal) — that keeps the
+    * serve's manifest pruning complete under multi-assignment; the
+    * `spl` marker column tells the serve to dedup candidates by id.
+    * Old images resolve their lists by an id lookup of the STAMPED
+    * assignments generation (id-clustered, so it file-prunes); an id
+    * with no old assignment had no layout row. The file count tracks
+    * the list count so per-file cid ranges stay tight — for PRUNING
+    * precision and for the O(delta) refresh's REWRITE granularity. */
+  private def ivfLists(spark: SparkSession, root: String,
+      corpusTable: String, cv: Long, pin: AnnPin): Layout = {
+    val aT = ivfAssignmentsTable(root)
+    new Layout(ivfListsTable(root), "cid", "ivf-lists",
+        Seq("a", "g", "t", "c", "f"),
+        Seq((aT, "a", "g"), (corpusTable, "c", "f"))) {
+      private lazy val a = versionAt(spark, aT, pin)
+      protected lazy val values: Seq[Long] = Seq(a,
+        Versioned.manifestFingerprint(spark, aT, a),
+        corpusTable.hashCode.toLong, cv,
+        Versioned.manifestFingerprint(spark, corpusTable, cv))
+      private def spilled(asg: DataFrame) = asg.columns.contains("cid2")
+      def rows(idCol: String, embCol: String)(
+          only: DataFrame => DataFrame): DataFrame = {
+        val asg = VersionedScan.read(spark, aT, a)
+        val base = Ivf.memberPairs(only(asg), idCol)
+          .join(only(VersionedScan.read(spark, corpusTable, cv))
+            .select(col(idCol), col(embCol)), idCol)
+          .select(col("cid"), col(idCol), col(embCol))
+        if (spilled(asg)) base.withColumn("spl", lit(true)) else base
+      }
+      // spill freezes at bootstrap, so the stamped and current schemes
+      // cannot differ — but guard anyway: the full re-cluster is always
+      // correct
+      def dirty(idCol: String, stamped: Map[String, Long],
+          oldIds: Seq[Any]): Option[Seq[Long]] = {
+        val asg0 = VersionedScan.read(spark, aT, stamped("a"))
+        if (spilled(asg0) != spilled(VersionedScan.read(spark, aT, a))) None
+        else Some(listsOf(Ivf.memberPairs(
+          restrictToIds(spark, asg0, idCol, oldIds), idCol), oldIds))
+      }
+      def files: Int = (VersionedScan.read(spark,
+        ivfCentroidsTable(root)).count() / 4).toInt
+    }
+  }
+
+  /** `pq_lists`: the codes keyed by their list in the assignments, both
+    * at `pin` (resolved on first use); stamped
+    * `pq-lists-a<av>-f<afp>-q<qv>-g<qfp>`. Its delta is the union of
+    * the ASSIGNMENTS diff (routing moves) and the CODES diff
+    * (re-encodes); only the lists holding changed OLD images rewrite.
+    * Same file-count rule as [[ivfLists]]. */
+  private def pqLists(spark: SparkSession, root: String,
+      pin: AnnPin): Layout = {
+    val (aT, qT) = (ivfAssignmentsTable(root), pqCodesTable(root))
+    new Layout(pqListsTable(root), "cid", "pq-lists", Seq("a", "f", "q", "g"),
+        Seq((aT, "a", "f"), (qT, "q", "g"))) {
+      private lazy val a = versionAt(spark, aT, pin)
+      private lazy val q = versionAt(spark, qT, pin)
+      protected lazy val values: Seq[Long] = Seq(a,
+        Versioned.manifestFingerprint(spark, aT, a), q,
+        Versioned.manifestFingerprint(spark, qT, q))
+      def rows(idCol: String, embCol: String)(
+          only: DataFrame => DataFrame): DataFrame =
+        only(VersionedScan.read(spark, qT, q))
+          .select(col(idCol), col("sub"), col("code"))
+          .join(only(VersionedScan.read(spark, aT, a))
+            .select(col(idCol), col("cid")), idCol)
+          .select(col("cid"), col(idCol), col("sub"), col("code"))
+      def dirty(idCol: String, stamped: Map[String, Long],
+          oldIds: Seq[Any]): Option[Seq[Long]] =
+        Some(listsOf(restrictToIds(spark,
+          VersionedScan.read(spark, aT, stamped("a")), idCol, oldIds), oldIds))
+      def files: Int = (VersionedScan.read(spark,
+        ivfCentroidsTable(root)).count() / 4).toInt
+    }
+  }
+
+  /** `nsw_layout`: the corpus identity (`corpusTable`, `cv`, `cfp`)
+    * keyed by `pmod(id, gshards)`; stamped
+    * `nsw-layout-t<table hash>-c<cv>-f<cfp>-s<gshards>`, so a corpus
+    * commit or a reshard (new shard count) invalidates it, and a
+    * changed shard count or a foreign corpus table always rebuilds. The
+    * delta is exactly the corpus delta; only the shards holding changed
+    * OLD images rewrite. One file ≈ one shard, so the partial-miss scan
+    * prunes to exactly the missing shards' files. */
+  private def nswLayout(spark: SparkSession, root: String,
+      corpusTable: String, cv: Long, cfp: Long, gshards: Int): Layout =
+    new Layout(nswLayoutTable(root), "shard", "nsw-layout",
+        Seq("t", "c", "f", "s"), Seq((corpusTable, "c", "f"))) {
+      protected lazy val values: Seq[Long] =
+        Seq(corpusTable.hashCode.toLong, cv, cfp, gshards.toLong)
+      def rows(idCol: String, embCol: String)(
+          only: DataFrame => DataFrame): DataFrame =
+        only(VersionedScan.read(spark, corpusTable, cv)).select(
+          pmod(col(idCol).cast("long"), lit(gshards.toLong)).as("shard"),
+          col(idCol), col(embCol))
+      def dirty(idCol: String, stamped: Map[String, Long],
+          oldIds: Seq[Any]): Option[Seq[Long]] =
+        Some(oldIds.map(id => math.floorMod(
+          id.asInstanceOf[Number].longValue, gshards.toLong)).distinct)
+      def files: Int = gshards
+    }
+
+  /** The distinct `cid`s of `pairs` — and no job at all when the delta
+    * has no old images. */
+  private def listsOf(pairs: => DataFrame, oldIds: Seq[Any]): Seq[Long] =
+    if (oldIds.isEmpty) Seq.empty
+    else pairs.select("cid").distinct().collect()
+      .map(_.getAs[Number](0).longValue).toSeq
 
   /** Bound on the collected delta of an incremental layout refresh:
     * past ~100k changed rows the full re-cluster is competitive (and
@@ -1425,162 +1521,6 @@ object AnnIndex {
       deltaNew: DataFrame)(covered: DataFrame): DataFrame =
     covered.join(broadcast(idFrame(spark, idCol, idType, deltaIds)),
       Seq(idCol), "left_anti").unionByName(deltaNew)
-
-  /** O(delta) refresh of the ivf_lists layout — the r14 close of "every
-    * stamp change recommits the ENTIRE clustered layout": parse the
-    * stale stamp's source generations, diff them against the current
-    * ones (assignments: one slim full-outer join on (id, cid, vh);
-    * corpus value-drift invisible to assignments: the manifest-level
-    * file diff), then rewrite ONLY the files whose lists are touched,
-    * carrying the rest by reference ([[Versioned.rewriteFilesByKey]]).
-    * The refreshed layout is row-identical to a from-scratch rebuild
-    * (pinned in AnnIndexSpec). None = fall back to the full re-cluster:
-    * unparseable/foreign/pre-r14 stamp, a stamped table-hash that is
-    * not this corpus table, a stamped generation whose version number
-    * was reused by a drop-root rebuild (fingerprint verification in
-    * [[stampedDeltaSides]]), a delta past [[maxLayoutDelta]], or dirty
-    * lists past half the codebook. DV deltas (MoR corpus DML) are
-    * folded in by [[Versioned.fileDiffIds]] itself. */
-  private def tryIncrementalIvfLists(spark: SparkSession, root: String,
-      corpusTable: String, idCol: String, embCol: String,
-      lv: Long, oldStamp: Option[String], av: Long, cv: Long,
-      newTxn: String): Option[Long] = {
-    val (cT, aT, lT) =
-      (ivfCentroidsTable(root), ivfAssignmentsTable(root), ivfListsTable(root))
-    val parsed = oldStamp
-      .flatMap("""ivf-lists-a(\d+)-g(-?\d+)-t(-?\d+)-c(\d+)-f(-?\d+)""".r
-        .findFirstMatchIn(_))
-      .getOrElse(return None)
-    val (av0, afp0) = (parsed.group(1).toLong, parsed.group(2).toLong)
-    val (cv0, cfp0) = (parsed.group(4).toLong, parsed.group(5).toLong)
-    // the stamp names the corpus TABLE too: a layout derived from a
-    // different table must never diff against this one
-    if (parsed.group(3).toInt != corpusTable.hashCode) return None
-    scala.util.Try {
-      val asg0 = VersionedScan.read(spark, aT, av0)
-      val asg1 = VersionedScan.read(spark, aT, av)
-      // BOTH deltas ride the stamped-generation file diff (DV deltas
-      // folded in; fingerprints verified against the stamp, so a
-      // version-number reuse can never masquerade as a small delta):
-      // assignments moves/re-ensures AND corpus drift nobody
-      // re-ensured — O(changed files), never a table scan
-      val (asgOld, asgNew) = stampedDeltaSides(spark, aT, idCol,
-        av0, afp0, av).getOrElse(return None)
-      val (corpusOld, corpusNew) = stampedDeltaSides(spark, corpusTable,
-        idCol, cv0, cfp0, cv).getOrElse(return None)
-      val oldIds: Seq[Any] = (asgOld ++ corpusOld).distinct
-      val deltaIds: Seq[Any] =
-        (asgOld ++ asgNew ++ corpusOld ++ corpusNew).distinct
-      if (deltaIds.size > maxLayoutDelta) return None
-      // REWRITE keys are the OLD images' lists only: a changed/removed
-      // row's old image must leave its file, but a NEW row simply
-      // lands in the refresh's own cid-sorted delta files next to the
-      // carried ones (the scan prunes by cid stats across all files) —
-      // so an append-mostly delta rewrites NOTHING, however many lists
-      // it spreads over. Old cids resolve by an id lookup of the OLD
-      // assignments generation (id-clustered; [[restrictToIds]]:
-      // file-pruned literal IN while small, broadcast semi-join near
-      // the cap); an id with no old assignment had no layout row.
-      // a SPILLED root's old image lives in BOTH its lists' files —
-      // memberPairs folds cid2 in so both copies rewrite; a scheme
-      // mismatch between the stamped and current generations cannot
-      // happen (spill freezes at bootstrap), but guard anyway: the
-      // full re-cluster is always correct
-      val spilled = asg1.columns.contains("cid2")
-      if (spilled != asg0.columns.contains("cid2")) return None
-      val dirtyCids =
-        if (oldIds.isEmpty) Seq.empty[Long]
-        else Ivf.memberPairs(
-            restrictToIds(spark, asg0, idCol, oldIds), idCol)
-          .select("cid").distinct().collect()
-          .map(_.getAs[Number](0).longValue).toSeq
-      // COST-AWARE fallback (r15 crossover rehearsal at 2.2M: a
-      // 50-row random-spread update already rewrites 35/67 files and
-      // the refresh reads 4.4 s vs the full re-cluster's 2.3–3.4 s —
-      // the binding unit is dirty FILES, not dirty lists): fall back
-      // when the rewrite would touch over half the layout's files.
-      // Appends stay the incremental win (dirty set empty — nothing
-      // rewrites, r14: 1k append carries 67/67).
-      val (touchedF, totalF) =
-        Versioned.filesTouchedByKey(spark, lT, lv, "cid", dirtyCids)
-      if (touchedF * 2 > totalF) return None
-      // the fresh rows for the touched lists: same hybrid id lookup —
-      // the corpus and assignments are id-clustered, so both prune on
-      // the literal form; spilled roots fan the fresh rows to both
-      // lists and carry the spl marker the committed layout rows have
-      val deltaNew =
-        if (deltaIds.isEmpty)
-          VersionedScan.read(spark, lT, lv).limit(0)
-        else {
-          val fresh = Ivf.memberPairs(
-              restrictToIds(spark, asg1, idCol, deltaIds), idCol)
-            .join(restrictToIds(spark,
-                VersionedScan.read(spark, corpusTable, cv), idCol, deltaIds)
-              .select(col(idCol), col(embCol)), idCol)
-            .select(col("cid"), col(idCol), col(embCol))
-          if (spilled) fresh.withColumn("spl", lit(true)) else fresh
-        }
-      Some(Versioned.rewriteFilesByKey(spark, lT, "cid", dirtyCids,
-        Some(newTxn), "OPTIMIZE_SERVING", lv)(
-        layoutReplace(spark, idCol, asg1.schema(idCol).dataType,
-          deltaIds, deltaNew)))
-    }.toOption.flatten
-  }
-
-  /** Freshness report for the derived lists layout vs a corpus table —
-    * the `ann_stats` surface behind "is my serving still file-pruned?".
-    * [[serve]] silently (and correctly) falls back to the join plan
-    * the moment the stamp goes stale; without this an
-    * operator could lose the nProbe/k I/O promise for days and only
-    * discover it by reading executed plans. SEMANTICS (r14): fresh
-    * means the layout's ROWS still match the stamped derivation — a
-    * row-preserving OPTIMIZE keeps it fresh even though an aggressive
-    * whole-layout binpack coarsens per-file cid ranges (pruning
-    * PRECISION, never correctness); `ann_optimize_serving(force =>
-    * true)` re-clusters to restore granularity. Keys:
-    * `ivf_lists_fresh` (1 = the current (assignments, corpus)
-    * identity matches the stamp; 0 = stale or no layout — re-CALL
-    * ann_optimize_serving),
-    * `ivf_lists_stamped_assignments_version` (what the layout was
-    * derived from; -1 when absent). Costs the same three metadata
-    * reads the serving-route decision pays. */
-  def listsFreshness(spark: SparkSession, root: String,
-      corpusTable: String): Map[String, Long] = {
-    val lT = ivfListsTable(root)
-    val lv = Versioned.latestVersion(spark, lT)
-    val stamped =
-      if (lv == 0L) -1L
-      else effectiveLayoutStamp(spark, lT, lv)
-        .flatMap("""ivf-lists-a(\d+)-""".r.findFirstMatchIn(_))
-        .map(_.group(1).toLong).getOrElse(-1L)
-    val cv = Versioned.latestVersion(spark, corpusTable)
-    val fresh = lv > 0L && cv > 0L &&
-      freshLists(spark, root, corpusTable, cv, AnnPin.Latest).isDefined
-    Map(
-      "ivf_lists_fresh" -> (if (fresh) 1L else 0L),
-      "ivf_lists_stamped_assignments_version" -> stamped)
-  }
-
-  /** The lists layout that was fresh at `pin` for the corpus identity
-    * (table, `cv`), paired with the pin-resolved centroids — Some only
-    * when a layout commit existed at the pin AND its stamp names exactly
-    * the pin-resolved assignments generation and that corpus identity;
-    * anything else (no layout yet, or one already stale then) sends the
-    * serve to the join plan, never to stale or wrong-era files. Three
-    * metadata reads. */
-  private def freshLists(spark: SparkSession, root: String,
-      corpusTable: String, cv: Long,
-      pin: AnnPin): Option[(DataFrame, DataFrame)] = scala.util.Try {
-    val (cT, aT, lT) =
-      (ivfCentroidsTable(root), ivfAssignmentsTable(root), ivfListsTable(root))
-    val lv = versionAt(spark, lT, pin)
-    val av = if (lv == 0L) 0L else versionAt(spark, aT, pin)
-    if (av > 0L && effectiveLayoutStamp(spark, lT, lv).contains(listsTxn(av,
-        Versioned.manifestFingerprint(spark, aT, av), corpusTable, cv,
-        Versioned.manifestFingerprint(spark, corpusTable, cv))))
-      Some((readAt(spark, cT, pin), VersionedScan.read(spark, lT, lv)))
-    else None
-  }.toOption.flatten
 
   /** The corpus view a FILTERED search ranks within: the s13
     * prefiltered composition — membership is exact (only matching rows
@@ -1985,31 +1925,22 @@ object AnnIndex {
   def nswEdgesTable(root: String): String = s"$root/nsw_edges"
   def nswLayoutTable(root: String): String = s"$root/nsw_layout"
 
-  /** Freshness stamp for the derived HNSW shard layout: binds the
-    * commit to the corpus identity AND the shard count it was
-    * clustered under — any corpus commit, or a reshard (new shard
-    * count), invalidates it; serving then simply ignores it (the
-    * corpus table stays authoritative), never serves stale rows. */
-  private def nswLayoutTxn(corpusTable: String, cv: Long, cfp: Long,
-      gshards: Int): String =
-    s"nsw-layout-t${corpusTable.hashCode}-c$cv-f$cfp-s$gshards"
-
   /** Build (or refresh) the DERIVED shard-clustered serving layout for
     * the committed HNSW index — [[optimizeIvfServing]]'s graph twin:
     * corpus rows keyed by `pmod(id, shards)`, committed CLUSTERED BY
-    * shard with per-file shard stats. What it buys is the
-    * PARTIAL-MISS serve: a warm session that lost one shard (a
+    * shard with per-file shard stats ([[nswLayout]]). What it buys is
+    * the PARTIAL-MISS serve: a warm session that lost one shard (a
     * SoftReference shed under memory pressure, an executor that never
     * built it) re-reads ONLY that shard's files instead of paying the
     * full corpus+edges cogroup — at 100 TB the difference between a
     * shard-sized read and a corpus-sized one. An up-to-date layout
     * returns its version without committing; a stale one refreshes
-    * O(delta) since r14 ([[tryIncrementalNswLayout]]) — only the
-    * shards whose membership changed rewrite. */
+    * O(delta) ([[refreshLayout]]) — only the shards whose membership
+    * changed rewrite. */
   def optimizeNswServing(spark: SparkSession, root: String,
       corpusTable: String, idCol: String, embCol: String,
-      corpusVersion: Long = -1L, force: Boolean = false): Long = {
-    val (eT, lT) = (nswEdgesTable(root), nswLayoutTable(root))
+      force: Boolean = false): Long = {
+    val eT = nswEdgesTable(root)
     val ev = Versioned.latestVersion(spark, eT)
     require(ev > 0, s"no committed HNSW index at $root — ensure first")
     val gshards = storedNswParams(spark, eT, ev,
@@ -2017,97 +1948,11 @@ object AnnIndex {
       throw new IllegalStateException(
         s"index at $root predates build-parameter rows; re-ensure it " +
           "once before optimizing serving"))
-    val cv = if (corpusVersion > 0) corpusVersion
-      else Versioned.latestVersion(spark, corpusTable)
+    val cv = Versioned.latestVersion(spark, corpusTable)
     require(cv > 0, s"optimizeNswServing: $corpusTable has no commits")
-    val cfp = Versioned.manifestFingerprint(spark, corpusTable, cv)
-    val txn = nswLayoutTxn(corpusTable, cv, cfp, gshards)
-    val lv = Versioned.latestVersion(spark, lT)
-    val oldStamp =
-      if (lv > 0) effectiveLayoutStamp(spark, lT, lv) else None
-    if (!force && oldStamp.contains(txn)) return lv
-    // O(delta) path first (r14): rewrite only the shards whose corpus
-    // membership changed; the full re-cluster is bootstrap/fallback —
-    // and the explicit door (`force`) for restoring pruning
-    // granularity after a whole-layout compaction
-    if (!force && lv > 0)
-      tryIncrementalNswLayout(spark, root, corpusTable, idCol, embCol,
-        lv, oldStamp, cv, gshards, txn).foreach(return _)
-    val emb = VersionedScan.read(spark, corpusTable, cv)
-    val layout = emb.select(
-      pmod(col(idCol).cast("long"), lit(gshards.toLong)).as("shard"),
-      col(idCol), col(embCol))
-    // file count tracks the shard count (one file ≈ one shard), so the
-    // partial-miss scan prunes to exactly the missing shards' files
-    Versioned.commit(spark, lT, layout, Some("shard"),
-      files = math.max(4, math.min(4096, gshards)),
-      txn = Some(txn), op = "OPTIMIZE_SERVING",
-      expected = if (lv > 0) Some(lv) else None)
-  }
-
-  /** [[tryIncrementalIvfLists]]'s HNSW twin: the shard layout is the
-    * corpus projected under `pmod(id, shards)`, so the delta is exactly
-    * the corpus delta — a stamped-generation file diff
-    * ([[stampedDeltaSides]]: fingerprint verified, DV deltas folded
-    * in). Only the shards holding changed OLD images rewrite; a
-    * changed SHARD COUNT (reshard) or a foreign corpus table always
-    * rebuilds. */
-  private def tryIncrementalNswLayout(spark: SparkSession, root: String,
-      corpusTable: String, idCol: String, embCol: String,
-      lv: Long, oldStamp: Option[String], cv: Long, gshards: Int,
-      newTxn: String): Option[Long] = {
-    val lT = nswLayoutTable(root)
-    val parsed = oldStamp
-      .flatMap("""nsw-layout-t(-?\d+)-c(\d+)-f(-?\d+)-s(\d+)""".r
-        .findFirstMatchIn(_))
-      .getOrElse(return None)
-    val (cv0, cfp0) = (parsed.group(2).toLong, parsed.group(3).toLong)
-    // foreign corpus table or a changed shard count: rebuild; equal or
-    // reused versions are settled by the fingerprint check inside
-    // stampedDeltaSides
-    if (parsed.group(1).toInt != corpusTable.hashCode ||
-      parsed.group(4).toInt != gshards) return None
-    scala.util.Try {
-      // rewrite keys come from the OLD side only: a new id appends into
-      // the refresh's own shard-sorted delta files — an append-mostly
-      // delta rewrites nothing however many shards it spreads over
-      val (oldIds, newIds) = stampedDeltaSides(spark, corpusTable, idCol,
-        cv0, cfp0, cv).getOrElse(return None)
-      val deltaIds: Seq[Any] = (oldIds ++ newIds).distinct
-      if (deltaIds.size > maxLayoutDelta) return None
-      val dirtyShards = oldIds
-        .map(id => math.floorMod(id.asInstanceOf[Number].longValue,
-          gshards.toLong)).distinct
-      // same cost-aware file-fraction fallback as the ivf/pq layouts
-      val (touchedF, totalF) =
-        Versioned.filesTouchedByKey(spark, lT, lv, "shard", dirtyShards)
-      if (touchedF * 2 > totalF) return None
-      val emb = VersionedScan.read(spark, corpusTable, cv)
-      val deltaNew =
-        if (deltaIds.isEmpty)
-          VersionedScan.read(spark, lT, lv).limit(0)
-        else restrictToIds(spark, emb, idCol, deltaIds).select(
-          pmod(col(idCol).cast("long"), lit(gshards.toLong)).as("shard"),
-          col(idCol), col(embCol))
-      Some(Versioned.rewriteFilesByKey(spark, lT, "shard", dirtyShards,
-        Some(newTxn), "OPTIMIZE_SERVING", lv)(
-        layoutReplace(spark, idCol, emb.schema(idCol).dataType,
-          deltaIds, deltaNew)))
-    }.toOption.flatten
-  }
-
-  /** The fresh shard layout for (root, corpus identity, shard count),
-    * or None — the same three metadata reads as [[freshLists]]. */
-  private def freshNswLayout(spark: SparkSession, root: String,
-      corpusTable: String, cv: Long, gshards: Int,
-      cfp: Long): Option[DataFrame] = {
-    val lT = nswLayoutTable(root)
-    val lv = Versioned.latestVersion(spark, lT)
-    if (lv == 0L) return None
-    if (effectiveLayoutStamp(spark, lT, lv)
-        .contains(nswLayoutTxn(corpusTable, cv, cfp, gshards)))
-      Some(VersionedScan.read(spark, lT, lv))
-    else None
+    refreshLayout(spark, nswLayout(spark, root, corpusTable, cv,
+      Versioned.manifestFingerprint(spark, corpusTable, cv), gshards),
+      idCol, embCol, force)
   }
 
   /** nsw_layout freshness for `ann_stats` — [[listsFreshness]]'s HNSW
@@ -2121,8 +1966,9 @@ object AnnIndex {
     val fresh = ev > 0L && cv > 0L &&
       Versioned.latestVersion(spark, nswLayoutTable(root)) > 0L &&
       storedNswParams(spark, eT, ev, VersionedScan.read(spark, eT, ev))
-        .exists(p => freshNswLayout(spark, root, corpusTable, cv, p._3,
-          Versioned.manifestFingerprint(spark, corpusTable, cv)).isDefined)
+        .exists(p => freshLayout(spark, nswLayout(spark, root, corpusTable,
+          cv, Versioned.manifestFingerprint(spark, corpusTable, cv), p._3),
+          AnnPin.Latest).isDefined)
     Map("nsw_layout_fresh" -> (if (fresh) 1L else 0L))
   }
 
@@ -2579,11 +2425,12 @@ object AnnIndex {
     * (the 2.2M rehearsal's 16 B/row light pass drops to nothing; at
     * 100 TB the warm serve cost is independent of corpus size). A cold
     * serve pays one id-column scan (the memoized shard list) + the
-    * reconstruction cogroup, exactly like the frame form. */
+    * reconstruction cogroup, exactly like the frame form. A partial
+    * miss repairs from the `nsw_layout` that was fresh at `pin`. */
   private def nswCommittedServe(spark: SparkSession, root: String,
       corpusTable: String, cv: Long, emb: DataFrame, idCol: String,
       embCol: String, p: DataFrame, k: Int, ef: Option[Int],
-      ev: Long): DataFrame = {
+      ev: Long, pin: AnnPin): DataFrame = {
     val eT = nswEdgesTable(root)
     val params =
       if (ev > 0) storedNswParams(spark, eT, ev,
@@ -2604,8 +2451,8 @@ object AnnIndex {
         nswServe(spark, root, emb, idCol, embCol, p, k, ef, ev,
           identity = Some(corpusIdentityKey(corpusTable, cv, cfp, gshards)),
           knownShards = Some(shardsOf),
-          layout = freshNswLayout(spark, root, corpusTable, cv, gshards,
-            cfp))
+          layout = freshLayout(spark,
+            nswLayout(spark, root, corpusTable, cv, cfp, gshards), pin))
       case None =>
         // legacy table (or no index yet — let the frame path produce
         // its usual diagnostics): never cached, identity buys nothing

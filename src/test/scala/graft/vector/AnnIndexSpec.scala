@@ -953,6 +953,9 @@ class AnnIndexSpec extends AnyFunSuite {
       "an up-to-date layout must return without committing")
     assert(AnnIndex.nswLayoutFreshness(spark, root, corpusT)
       .apply("nsw_layout_fresh") == 1L)
+    Thread.sleep(5)
+    val t1 = System.currentTimeMillis() // layout v1 is fresh
+    Thread.sleep(5)
     import spark.implicits._
     val probeRows = corpus.orderBy("vec_id").limit(3)
       .select(col("vec_id"), col("embedding").cast("array<float>"))
@@ -1036,6 +1039,28 @@ class AnnIndexSpec extends AnyFunSuite {
         width = Some(1024)))).map(_._3).sum
     assert(wideSum >= narrow - 1e-9,
       s"a wider beam must never return a worse top-k: $wideSum vs $narrow")
+    // AS OF: a partial miss repairs from the layout that was fresh AT
+    // the pin — the latest layout's stamp names the grown corpus
+    AnnIndex.ensureNsw(spark, root,
+      graft.sources.VersionedScan.read(spark, corpusT), "vec_id", "embedding")
+    assert(AnnIndex.optimizeNswServing(spark, root, corpusT,
+      "vec_id", "embedding") == 2L)
+    def serveAsOf() = AnnIndex.serve(spark, root, AnnRequest("hnsw",
+        AnnCorpus.committed(spark, corpusT, AnnPin.AsOf(t1)), "vec_id",
+        "embedding", probes, 5, pin = AnnPin.AsOf(t1)))
+    assert(rows(serveAsOf()) == cold)
+    AnnIndex.evictShard(AnnIndex.nswEdgesTable(root), 1L)
+    val partialAsOf = serveAsOf()
+    assert(rows(partialAsOf) == cold,
+      "an AS OF partial-miss serve must answer exactly like the era's serve")
+    val asOfScans = walk(partialAsOf.queryExecution.executedPlan).filter(
+      sc => sc.relation.location.isInstanceOf[graft.sources.VersionedFileIndex] &&
+        sc.relation.location.rootPaths.head.toString == layoutT)
+    assert(asOfScans.nonEmpty,
+      "the AS OF partial serve must scan the layout fresh at the pin")
+    val scannedAsOf = asOfScans.map(_.metrics("numFiles").value).max
+    assert(scannedAsOf < totalFiles, "the AS OF missing-shard fetch must " +
+      s"file-prune: read $scannedAsOf of $totalFiles")
   }
 
   test("committed-corpus serving: identical answers, ZERO corpus I/O when warm") {
@@ -2059,99 +2084,6 @@ class AnnIndexSpec extends AnyFunSuite {
           .select("vec_id", "embedding"), "vec_id")
         .select(col("cid"), col("vec_id"), col("embedding"))),
       "the rebuilt layout must hold exactly table B's derivation")
-  }
-
-  test("nsw_layout O(delta) refresh: dirty shards rewrite, clean files carry, rows == from-scratch") {
-    import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("nswlayoutinc")
-    val corpusT = dir.toString + "/emb"
-    graft.sources.Versioned.commit(spark, corpusT,
-      emb.filter(col("vec_id") % 4 =!= 0).select("vec_id", "embedding"),
-      Some("vec_id"), 4)
-    def corpus = graft.sources.VersionedScan.read(spark, corpusT)
-    val root = freshRoot("nswlayoutinc")
-    val lT = AnnIndex.nswLayoutTable(root)
-    AnnIndex.ensureNsw(spark, root, corpus, "vec_id", "embedding")
-    assert(AnnIndex.optimizeNswServing(spark, root, corpusT,
-      "vec_id", "embedding") == 1L)
-    val files1 = graft.sources.Versioned.snapshot(spark, lT)
-      .files.map(_.path).toSet
-    graft.sources.Versioned.appendCommit(spark, corpusT,
-      emb.filter(col("vec_id") === 0L).select("vec_id", "embedding"),
-      Some("vec_id"), 1)
-    AnnIndex.ensureNsw(spark, root, corpus, "vec_id", "embedding")
-    val lv2 = AnnIndex.optimizeNswServing(spark, root, corpusT,
-      "vec_id", "embedding")
-    assert(lv2 == 2L)
-    val files2 = graft.sources.Versioned.snapshot(spark, lT, lv2)
-      .files.map(_.path).toSet
-    assert((files1 intersect files2).nonEmpty,
-      s"untouched shard files must carry by reference: $files1 vs $files2")
-    assert(files2 != files1)
-    def rowsOf(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("shard"), col("vec_id"),
-        org.apache.spark.sql.functions.xxhash64(col("embedding")).as("h"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(rowsOf(graft.sources.VersionedScan.read(spark, lT, lv2)) ==
-      rowsOf(corpus.select(
-        org.apache.spark.sql.functions.pmod(col("vec_id").cast("long"),
-          org.apache.spark.sql.functions.lit(4L)).as("shard"),
-        col("vec_id"), col("embedding"))),
-      "the refreshed shard layout must be row-identical to from-scratch")
-    assert(AnnIndex.nswLayoutFreshness(spark, root, corpusT)
-      .apply("nsw_layout_fresh") == 1L)
-    // row-preserving OPTIMIZE keeps the nsw stamp too
-    graft.sources.Versioned.compactCommit(spark, lT, targetFiles = 1)
-    assert(AnnIndex.nswLayoutFreshness(spark, root, corpusT)
-      .apply("nsw_layout_fresh") == 1L,
-      "compaction must not stale the shard layout")
-  }
-
-  test("pq_lists O(delta) refresh: dirty lists rewrite, clean files carry, rows == from-scratch") {
-    import org.apache.spark.sql.functions.col
-    val dir = Files.createTempDirectory("pqlistsinc")
-    val corpusT = dir.toString + "/emb"
-    graft.sources.Versioned.commit(spark, corpusT,
-      emb.filter(col("vec_id") % 4 =!= 0).select("vec_id", "embedding"),
-      Some("vec_id"), 4)
-    def corpus = graft.sources.VersionedScan.read(spark, corpusT)
-    val root = freshRoot("pqlistsinc")
-    val lT = AnnIndex.pqListsTable(root)
-    AnnIndex.ensureIvf(spark, root, corpus, "vec_id", "embedding", 16)
-    AnnIndex.ensurePq(spark, root, corpus, "vec_id", "embedding",
-      m = 8, k = 16)
-    assert(AnnIndex.optimizePqServing(spark, root, "vec_id") == 1L)
-    val files1 = graft.sources.Versioned.snapshot(spark, lT)
-      .files.map(_.path).toSet
-    graft.sources.Versioned.appendCommit(spark, corpusT,
-      emb.filter(col("vec_id") === 0L).select("vec_id", "embedding"),
-      Some("vec_id"), 1)
-    AnnIndex.ensureIvf(spark, root, corpus, "vec_id", "embedding", 16)
-    AnnIndex.ensurePq(spark, root, corpus, "vec_id", "embedding",
-      m = 8, k = 16)
-    val lv2 = AnnIndex.optimizePqServing(spark, root, "vec_id")
-    assert(lv2 == 2L)
-    val files2 = graft.sources.Versioned.snapshot(spark, lT, lv2)
-      .files.map(_.path).toSet
-    assert((files1 intersect files2).nonEmpty,
-      s"untouched codes files must carry by reference: $files1 vs $files2")
-    assert(files2 != files1)
-    val (_, asg) = AnnIndex.loadIvf(spark, root)
-    val codes = AnnIndex.loadPq(spark, root)._2
-    def rowsOf(df: org.apache.spark.sql.DataFrame) = df
-      .select("cid", "vec_id", "sub", "code").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getLong(3)))
-      .toSet
-    assert(rowsOf(graft.sources.VersionedScan.read(spark, lT, lv2)) ==
-      rowsOf(codes.select(col("vec_id"), col("sub"), col("code"))
-        .join(asg.select("vec_id", "cid"), "vec_id")
-        .select(col("cid"), col("vec_id"), col("sub"), col("code"))),
-      "the refreshed codes layout must be row-identical to from-scratch")
-    assert(AnnIndex.pqListsFreshness(spark, root)("pq_lists_fresh") == 1L)
-    // row-preserving OPTIMIZE keeps the pq stamp too
-    graft.sources.Versioned.compactCommit(spark, lT, targetFiles = 1)
-    assert(AnnIndex.pqListsFreshness(spark, root)("pq_lists_fresh") == 1L,
-      "compaction must not stale the codes layout")
   }
 
   test("layout refresh above the literal-IN cap rides the semi-join, rows == from-scratch (r15)") {
